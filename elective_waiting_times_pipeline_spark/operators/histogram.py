@@ -19,6 +19,10 @@ conditional aggregates. No UDAF, no Python in the hot path; the whole
 kernel is whole-stage-codegen'd expressions, so it survives a 100 TB
 fact table as long as the group count does (band axis is ≤ ~110 rows
 per group after the first agg).
+
+Wide inputs (one column per band, like the RTT extract) need no melt:
+`plans/rtt.py` sums the band columns and folds running totals over an
+array. `wide_to_band_long` serves callers that want the long form.
 """
 
 from __future__ import annotations

@@ -4,16 +4,25 @@
 Reference shape (2.R:127-301 provider, 2.R:314-478 ccg, 2.R:492-645
 region, 2.R:659-812 imd): a scalar function per (month, geo, specialty,
 pathway, IS-bucket) combination, swept over an expand.grid — O(grid)
-full-table rescans. Here the whole grid is computed at once:
+full-table rescans. Here the whole grid is computed at once, and the
+histogram is aggregated while still wide, before any reshaping:
 
-    fact rows ──melt──▶ (group cols, band, cnt)
+    wide fact rows (keys, unknown_start, total_all, _gt_1.._gt_n)
         GROUP BY GROUPING SETS ((geo,is),(geo),(is),()) × fixed keys
-        ──window cumsum over band──▶ quantile/threshold extraction
+        SUM(_gt_b) per band b, SUM(unknown_start), SUM(total_all)
+    ──▶ one row per grid cell: counts = [coalesce(SUM(_gt_b), 0)]
+        cum = aggregate(counts, fold running total)   (no window)
+        weeks.q = array_position(cum ≥ q·nonmiss, true) − 1
 
 The ENGLAND pseudo-group (2.R:148-150: overwrite geo with a constant)
 and the independent∈{0,1,2=All} branch (2.R:344-353) are exactly the
-four grouping sets. Spark's Expand operator replicates each row 4× into
-one shuffle — versus the reference's |grid| rescans.
+four grouping sets. Spark's Expand operator replicates each wide row 4×
+into one shuffle — versus the reference's |grid| rescans.
+
+A band that is NULL in every row of a group sums to NULL and is counted
+as 0 here, where R drops it (na.rm). That never moves a quantile: with
+nonmiss > 0 the first band whose running total reaches q·nonmiss has a
+positive count, so it is a populated band either way.
 
 Semantics replicated exactly:
   * pathway mapping 2.R:69-76 (5 RTT.Part.Description values);
@@ -79,14 +88,17 @@ def clean_specialty(col: str = "Treatment.Function.Name") -> F.Column:
 
 
 def prepare_fact(fact: DataFrame, gt_cols: Sequence[str] | None = None) -> tuple[DataFrame, DataFrame]:
-    """From the wide RTT extract (FIXTURES.md §1 schema) derive:
-      rows — one row per fact row with group keys + scalar measures;
-      long — melted (group keys, band, cnt) with NULL counts dropped.
-    Both filtered to NONC-excluded (2.R:318) and pathway != 'NA'.
+    """From the wide RTT extract (FIXTURES.md §1 schema) derive one row
+    per fact row with the group keys, the scalar measures and the band
+    counts `_gt_1.._gt_n` (band b = b-th Gt column, NULL cells kept),
+    NONC-excluded (2.R:318) and pathway != 'NA'.
+
+    Returns the frame twice: the dashboard reads the wide rows only, and
+    the pair keeps the `rows, long = prepare_fact(...)` call shape.
     """
     if gt_cols is None:
         gt_cols = [c for c in fact.columns if c.startswith("Gt")]
-    base = (
+    rows = (
         fact.filter(F.col("`Commissioner.Org.Code`") != "NONC")
         .select(
             F.col("monthyr").alias("monthyear"),
@@ -104,105 +116,65 @@ def prepare_fact(fact: DataFrame, gt_cols: Sequence[str] | None = None) -> tuple
         )
         .filter(F.col("pathway") != "NA")
     )
-    keys = [
-        "monthyear",
-        "provider",
-        "ccg",
-        "ccg_name",
-        "pathway",
-        "specialty",
-        "is_provider",
-    ]
-    rows = base.select(*keys, "unknown_start", "total_all")
-    from elective_waiting_times_pipeline_spark.operators.histogram import wide_to_band_long
-
-    long = wide_to_band_long(base, [f"_gt_{i + 1}" for i in range(len(gt_cols))], keys)
-    return rows, long
+    return rows, rows
 
 
 def dashboard_stats(
     rows: DataFrame,
-    long: DataFrame,
+    long: DataFrame | None = None,
     geo_col: str = "ccg",
     quantiles: Sequence[float] = (0.50, 0.92, 0.95),
     all_label: str = "ENGLAND",
 ) -> DataFrame:
     """All (month × geo ∪ ENGLAND × specialty × pathway × IS ∪ All)
-    dashboard statistics in one grouping-sets pass.
+    dashboard statistics in one grouping-sets pass over the wide rows.
 
     geo_col selects the variant: 'provider' (2.R:127), 'ccg' (2.R:314),
     or any dimension joined onto the fact (region 2.R:492, IMD quintile
-    2.R:659). Output: FIXTURES.md §4 summary schema.
+    2.R:659). `long` (the second frame of `prepare_fact`) is accepted
+    for call compatibility and not read. Output: FIXTURES.md §4 summary
+    schema.
     """
-    spark = rows.sparkSession
+    return _grid(rows, geo_col, quantiles, all_label, by_is=True)
+
+
+def _grid(
+    rows: DataFrame, geo_col: str, quantiles: Sequence[float], all_label: str, by_is: bool
+) -> DataFrame:
+    """The dashboard grid; by_is=False keeps only the (…, geo) and ()
+    grouping sets, i.e. the 'All' IS bucket."""
     fixed = ["monthyear", "specialty", "pathway"]
-    tag = f"_rtt_{geo_col}"
-    rows.createOrReplaceTempView(f"{tag}_rows")
-    long.createOrReplaceTempView(f"{tag}_long")
-
-    fixed_sql = ", ".join(fixed)
-
-    def _sets(extra: str = "") -> str:
-        e = f", {extra}" if extra else ""
-        return (
-            f"GROUPING SETS (({fixed_sql}{e}, {geo_col}, is_provider), "
-            f"({fixed_sql}{e}, {geo_col}), ({fixed_sql}{e}, is_provider), ({fixed_sql}{e}))"
-        )
-
-    # Group spine + scalar measures (unknown clock start, Total.All).
-    spine = spark.sql(
-        f"""
-        SELECT {fixed_sql},
-               CASE WHEN grouping({geo_col}) = 1 THEN '{all_label}' ELSE {geo_col} END AS geo,
-               CASE WHEN grouping(is_provider) = 1 THEN 'All'
-                    WHEN is_provider = 1 THEN 'IS' ELSE 'Non-IS' END AS independent,
-               SUM(unknown_start) AS unknown_start,
-               SUM(total_all) AS total_all
-        FROM {tag}_rows
-        GROUP BY {_sets()}
-        """
+    bands = sorted((c for c in rows.columns if c.startswith("_gt_")), key=lambda c: int(c[4:]))
+    split = [geo_col, "is_provider"] if by_is else [geo_col]
+    extra = [split, [geo_col], ["is_provider"], []] if by_is else [split, []]
+    independent = (
+        F.when(F.grouping("is_provider") == 1, "All")
+        .when(F.col("is_provider") == 1, "IS")
+        .otherwise("Non-IS")
+        if by_is
+        else F.lit("All")
     )
+    cells = rows.groupingSets([fixed + e for e in extra], *fixed, *split).agg(
+        F.when(F.grouping(geo_col) == 1, all_label).otherwise(F.col(geo_col)).alias("geo"),
+        independent.alias("independent"),
+        F.sum("unknown_start").alias("unknown_start"),
+        F.sum("total_all").alias("total_all"),
+        F.array(*[F.coalesce(F.sum(b), F.lit(0)) for b in bands]).alias("counts"),
+    )
+    # Running total over the band axis as a fold: cum[b] = cum[b-1] + counts[b].
+    cum = F.aggregate(
+        "counts",
+        F.array().cast("array<bigint>"),
+        lambda acc, n: F.concat(acc, F.array(F.coalesce(F.get(acc, F.size(acc) - 1), F.lit(0)) + n)),
+    )
+    cells = cells.select(*fixed, "geo", "independent", "unknown_start", "total_all", cum.alias("cum"))
 
-    # Band histogram per group (same grouping sets, band appended),
-    # then cumulative-sum quantile machinery per group.
-    hist = spark.sql(
-        f"""
-        SELECT {fixed_sql},
-               CASE WHEN grouping({geo_col}) = 1 THEN '{all_label}' ELSE {geo_col} END AS geo,
-               CASE WHEN grouping(is_provider) = 1 THEN 'All'
-                    WHEN is_provider = 1 THEN 'IS' ELSE 'Non-IS' END AS independent,
-               band, SUM(cnt) AS cnt
-        FROM {tag}_long
-        GROUP BY {_sets("band")}
-        """
-    )
-    grp = fixed + ["geo", "independent"]
-    hist.createOrReplaceTempView(f"{tag}_hist")
-    grp_sql = ", ".join(grp)
-    q_exprs = ",\n".join(
-        f"MIN(CASE WHEN cum >= {q} * nonmiss THEN band END) - 1 AS `weeks.{int(round(q * 100))}`"
-        for q in quantiles
-    )
-    bandstats = spark.sql(
-        f"""
-        WITH cum AS (
-          SELECT {grp_sql}, band, cnt,
-                 SUM(cnt) OVER (PARTITION BY {grp_sql} ORDER BY band) AS cum,
-                 SUM(cnt) OVER (PARTITION BY {grp_sql}) AS nonmiss
-          FROM {tag}_hist
-        )
-        SELECT {grp_sql},
-               MAX(nonmiss) AS nonmiss,
-               {q_exprs},
-               COALESCE(SUM(CASE WHEN band <= 18 THEN cnt END), 0) AS `number.18.or.less`,
-               MAX(nonmiss) - COALESCE(SUM(CASE WHEN band <= 52 THEN cnt END), 0) AS `number.52.or.more`
-        FROM cum
-        GROUP BY {grp_sql}
-        """
-    )
+    def upto(week: int) -> F.Column:
+        return F.element_at("cum", min(week, len(bands)))
 
-    out = spine.join(bandstats, on=grp, how="left")
-    nonmiss = F.coalesce(F.col("nonmiss"), F.lit(0))
+    nonmiss = upto(len(bands))
+    n18 = upto(18)
+    n52 = nonmiss - upto(52)
     total = (
         F.when(F.col("pathway").isin("completeadmitted", "completenonadmitted"), nonmiss + F.col("unknown_start"))
         .when(F.col("pathway") == "newRTT", F.col("total_all"))
@@ -213,40 +185,43 @@ def dashboard_stats(
     def _supp(c: F.Column) -> F.Column:
         return F.when(keep, c)
 
-    week_cols = [f"weeks.{int(round(q * 100))}" for q in quantiles]
-    return out.select(
+    def weeks(q: float) -> F.Column:
+        crossed = F.transform("cum", lambda c: c >= q * nonmiss)
+        return (F.array_position(crossed, True) - 1).cast("int")
+
+    return cells.select(
         "monthyear",
         F.col("geo").alias(geo_col),
         "specialty",
         F.col("pathway").alias("type"),
         "independent",
         total.cast("long").alias("total.patients"),
-        _supp(F.col("`number.18.or.less`")).cast("long").alias("number.18.or.less"),
+        _supp(n18).cast("long").alias("number.18.or.less"),
         # bround: R round() is half-to-even (26.25 → 26.2, not 26.3)
-        _supp(F.bround(100.0 * F.col("`number.18.or.less`") / nonmiss, 1)).alias("rate.18wks.or.less"),
-        _supp(F.col("`number.52.or.more`")).cast("long").alias("number.52.or.more"),
-        _supp(F.bround(100.0 * F.col("`number.52.or.more`") / nonmiss, 1)).alias("rate.52wks.or.more"),
-        *[_supp(F.col(f"`{w}`")).cast("int").alias(w) for w in week_cols],
+        _supp(F.bround(100.0 * n18 / nonmiss, 1)).alias("rate.18wks.or.less"),
+        _supp(n52).cast("long").alias("number.52.or.more"),
+        _supp(F.bround(100.0 * n52 / nonmiss, 1)).alias("rate.52wks.or.more"),
+        *[_supp(weeks(q)).alias(f"weeks.{int(round(q * 100))}") for q in quantiles],
     )
 
 
 def provider_stats_exact(
     rows: DataFrame,
-    long: DataFrame,
+    long: DataFrame | None = None,
     quantiles: Sequence[float] = (0.50, 0.92, 0.95),
 ) -> DataFrame:
     """Exact output parity with `dashboard_stats_provider` (2.R:127-301):
     the provider variant does NOT take an IS bucket — it emits a
     single `IS` column = max(IS_provider) over the subset (0 for the
-    ENGLAND pseudo-provider, 2.R:183-185). Implemented as the 'All'
-    grouping-set slice of the generalized kernel plus a broadcast-
-    joined per-(month, provider) max-flag."""
-    stats = dashboard_stats(rows, long, geo_col="provider", quantiles=quantiles)
-    all_rows = stats.filter(F.col("independent") == "All").drop("independent")
+    ENGLAND pseudo-provider, 2.R:183-185). Implemented as the kernel's
+    (…, provider) and () grouping sets plus a broadcast-joined
+    per-(month, provider) max-flag. `long` is accepted for call
+    compatibility and not read."""
+    stats = _grid(rows, "provider", quantiles, "ENGLAND", by_is=False).drop("independent")
     flags = rows.groupBy("monthyear", "provider").agg(
         F.max("is_provider").cast("string").alias("IS")
     )
-    out = all_rows.join(F.broadcast(flags), on=["monthyear", "provider"], how="left")
+    out = stats.join(F.broadcast(flags), on=["monthyear", "provider"], how="left")
     return out.withColumn(
         "IS", F.when(F.col("provider") == "ENGLAND", F.lit("0")).otherwise(F.col("IS"))
     )

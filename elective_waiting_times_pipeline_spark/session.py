@@ -13,6 +13,16 @@ import os
 from pyspark.sql import SparkSession
 
 
+def default_driver_memory(phys_bytes: int | None = None, jvms: int = 1) -> str:
+    """Driver heap for one of `jvms` concurrent local-mode JVMs: half of
+    physical RAM (`phys_bytes`, read from the OS when None) split evenly,
+    in whole GiB, between 1g and 48g. The other half is left to the
+    JVM's off-heap memory, the Python workers and the OS page cache."""
+    if phys_bytes is None:
+        phys_bytes = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    return f"{min(48, max(1, phys_bytes // (2 * jvms * 2**30)))}g"
+
+
 def get_spark(
     app_name: str = "elective_waiting_times_pipeline_spark",
     master: str | None = None,
@@ -22,7 +32,9 @@ def get_spark(
     """Build (or fetch) a SparkSession tuned for this engine.
 
     Defaults are driven by env vars so the driver/bench harness can
-    steer them: ``SPARK_GRAFT_CPUS`` sets local parallelism.
+    steer them: ``SPARK_GRAFT_CPUS`` sets local parallelism and
+    ``SPARK_GRAFT_DRIVER_MEM`` the driver heap (default:
+    `default_driver_memory()`).
     """
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 4))
     if master is None:
@@ -34,9 +46,10 @@ def get_spark(
         SparkSession.builder.appName(app_name)
         .master(master)
         # local mode = driver-only JVM; the default 1g heap OOMs on
-        # wide plans and big shuffles long before the box (128 GiB) is
-        # near full. Effective only at JVM launch.
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
+        # wide plans and big shuffles long before the box is near full,
+        # and a heap above physical RAM gets the process OOM-killed.
+        # Effective only at JVM launch.
+        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM") or default_driver_memory())
         # Shuffle sizing: ~cores locally; AQE coalesces at runtime so a
         # too-high static number is cheap, a too-low one is not.
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))

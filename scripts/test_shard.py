@@ -39,6 +39,10 @@ import time
 
 HERE = os.path.dirname(os.path.abspath(__file__))
 ROOT = os.path.dirname(HERE)
+sys.path.insert(0, ROOT)
+
+from elective_waiting_times_pipeline_spark.session import default_driver_memory  # noqa: E402
+
 DURATIONS = os.path.join(HERE, "test_durations.json")
 DEFAULT_WEIGHT = 30.0  # unseen file: assume mid-weight, not free
 
@@ -169,11 +173,10 @@ def main() -> None:
         # conftest reads SPARK_GRAFT_CPUS with setdefault so an outer
         # override still wins
         env["SPARK_GRAFT_CPUS"] = env.get("SPARK_GRAFT_CPUS", str(per_worker))
-        # N concurrent JVMs must not each claim the single-session 48g
-        # max heap (4 x 48g over-commits a 128 GiB box); tests at
-        # sf0.001 run comfortably in a fraction of this
+        # N concurrent JVMs must not each claim the single-session
+        # heap; they split it, so together they stay within RAM
         env["SPARK_GRAFT_DRIVER_MEM"] = env.get(
-            "SPARK_GRAFT_DRIVER_MEM", f"{max(8, 96 // max(1, n))}g"
+            "SPARK_GRAFT_DRIVER_MEM", default_driver_memory(jvms=max(1, n))
         )
         # isolate Spark's local dirs so shuffle/checkpoint files of
         # concurrent JVMs never collide

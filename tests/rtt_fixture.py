@@ -6,6 +6,7 @@ reference for plans/rtt.py.
 
 from __future__ import annotations
 
+import math
 import random
 
 import pandas as pd
@@ -76,6 +77,27 @@ def make_fixture() -> pd.DataFrame:
 
 
 # --- pure-Python oracle (mirrors R semantics exactly) -----------------------
+
+STAT_COLS = [
+    "total.patients",
+    "number.18.or.less",
+    "rate.18wks.or.less",
+    "number.52.or.more",
+    "rate.52wks.or.more",
+    "weeks.50",
+    "weeks.92",
+    "weeks.95",
+]
+
+
+def same_stat(a, b) -> bool:
+    """Engine value vs oracle value: equal numbers, or both missing."""
+    a_nan = a is None or (isinstance(a, float) and math.isnan(a))
+    b_nan = b is None or (isinstance(b, float) and math.isnan(b))
+    if a_nan or b_nan:
+        return a_nan and b_nan
+    return float(a) == float(b)
+
 
 PATHWAY_MAP = {
     "Incomplete Pathways": "incomplete",

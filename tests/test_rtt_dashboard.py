@@ -3,12 +3,12 @@ the pure-Python replica of the R kernel on every grid cell."""
 
 from __future__ import annotations
 
-import math
+import re
 
 import pytest
 
 from elective_waiting_times_pipeline_spark.plans import rtt
-from tests.rtt_fixture import make_fixture, oracle_stats
+from tests.rtt_fixture import STAT_COLS, make_fixture, oracle_stats, same_stat
 
 
 @pytest.fixture(scope="module")
@@ -24,26 +24,6 @@ def engine_out(spark, fact):
     pdf = out.toPandas()
     key = ["monthyear", "ccg", "specialty", "type", "independent"]
     return {tuple(r[k] for k in key): r for _, r in pdf.iterrows()}
-
-
-STAT_COLS = [
-    "total.patients",
-    "number.18.or.less",
-    "rate.18wks.or.less",
-    "number.52.or.more",
-    "rate.52wks.or.more",
-    "weeks.50",
-    "weeks.92",
-    "weeks.95",
-]
-
-
-def _same(a, b) -> bool:
-    a_nan = a is None or (isinstance(a, float) and math.isnan(a))
-    b_nan = b is None or (isinstance(b, float) and math.isnan(b))
-    if a_nan or b_nan:
-        return a_nan and b_nan
-    return float(a) == float(b)
 
 
 @pytest.mark.parametrize("independent", ["All", "IS", "Non-IS"])
@@ -68,7 +48,7 @@ def test_ccg_variant_matches_r_kernel(engine_out, geo, independent):
                     continue
                 got = engine_out[key]
                 for c in STAT_COLS:
-                    assert _same(got[c], want[c]), f"{key} {c}: {got[c]!r} != {want[c]!r}"
+                    assert same_stat(got[c], want[c]), f"{key} {c}: {got[c]!r} != {want[c]!r}"
                 checked += 1
     assert checked > 10
 
@@ -105,8 +85,8 @@ def test_region_variant_via_dim_join(spark, fact):
     want = oracle_stats(pdf, "Apr20", "North", "Total", "incomplete", "All", geo_field="region")
     r = got[("Apr20", "North", "Total", "incomplete", "All")]
     assert r["total.patients"] == want["total.patients"]
-    assert _same(r["weeks.50"], want["weeks.50"])
-    assert _same(r["rate.18wks.or.less"], want["rate.18wks.or.less"])
+    assert same_stat(r["weeks.50"], want["weeks.50"])
+    assert same_stat(r["rate.18wks.or.less"], want["rate.18wks.or.less"])
 
 
 def test_provider_variant_runs(spark, fact):
@@ -116,3 +96,17 @@ def test_provider_variant_runs(spark, fact):
     assert "provider" in pdf.columns
     assert (pdf["provider"] == "ENGLAND").any()
     assert len(pdf) > 50
+
+
+def test_dashboard_plan_is_one_shuffle_without_melt_or_window(fact):
+    """The kernel aggregates the wide rows directly: no explode of the
+    band columns (Generate), no running-total Window, and the grouping-
+    sets aggregate's exchange is the plan's only shuffle."""
+    rows, long = rtt.prepare_fact(fact)
+    df = rtt.dashboard_stats(rows, long, geo_col="ccg")
+    df.collect()
+    final = df._jdf.queryExecution().executedPlan().toString().split("== Initial Plan ==")[0]
+    nodes = re.findall(r"^[\s+\-:]*(?:\*\(\d+\) )?(\w+)", final, flags=re.M)
+    assert "Expand" in nodes, final
+    assert not [n for n in nodes if n == "Generate" or n.startswith("Window")], final
+    assert nodes.count("Exchange") == 1, final
