@@ -85,153 +85,14 @@ def _previously_green() -> set[str]:
     return set(_green_rounds())
 
 
-# Queries registered AFTER round 3's correctness file was recorded:
-# they queue behind the older never-checked backlog so the 50-query
-# window drains oldest-first (every query carries an equal-strength
-# local oracle test regardless of window slot). Append here when
-# adding queries mid-round; prune once they go driver-green.
-_REGISTERED_AFTER_R3 = {
-    "char_entropy",
-    "embedding_norm_stats",
-    "embedding_dim_variance",
-    "order_priority_count",
-    "promo_revenue_share",
-    "returned_item_revenue",
-    "daily_autocorrelation",
-    "knn_pagerank_coreset",
-    "k_anonymity_report",
-    "leakage_safe_split",
-    "split_leakage_audit",
-    # TPC-H optimizer-shape completion (this session)
-    "nation_trade_volume",
-    "market_share",
-    "product_type_profit",
-    "customer_order_distribution",
-    "small_qty_avg_revenue",
-    "disjunctive_revenue",
-    "idle_customers",
-    "revenue_concentration",
-    "boilerplate_gram_score",
-    "kmeans_clusters",
-    "cluster_balanced_sample",
-    "stratified_exact_split",
-    # second session of round 4
-    "late_shipment_priority",
-    "top_revenue_supplier",
-    "chunk_dedup_exact",
-    "flagged_word_profile",
-    "theil_sen_trend",
-    "graph_triangle_stats",
-    # third session of round 4
-    "spearman_corr",
-    "mann_whitney_value",
-    "benford_first_digit",
-    "min_cost_supplier",
-    "supplier_cnt_by_part",
-    "excess_share_suppliers",
-    "cusum_changepoint",
-    "l_diversity_report",
-    "mutual_information",
-    "heavy_hitters_cms",
-    "psi_drift",
-    "ks_test_sources",
-    "feature_scale_profile",
-    "skew_adaptive_agg",
-    "join_null_safe",
-    "quantization_error_profile",
-    "pareto_revenue_share",
-    "rfm_segments",
-    "dedup_size_histogram",
-    "table_diff_summary",
-    "table_checksum",
-    "audience_overlap",
-    "attribution_last_touch",
-    "attribution_linear",
-    "fk_integrity_audit",
-    "decayed_engagement_topk",
-    "log2_value_histogram",
-    "source_language_purity",
-    "weekend_effect_mwu",
-    "supplier_hhi",
-    "price_anova_brand",
-    "cohort_ltv_matrix",
-    # round 5
-    "entity_clusters",
-    "seasonal_anomaly_how",
-    "silhouette_approx",
-    "ann_filtered_topk",
-    "collocation_pmi",
-    "mmr_diversified_topk",
-    "pit_feature_join",
-    "golden_record_merge",
-    "multimodal_image_profile",
-    "hier_share_of_parent",
-    "bpe_learn_merges",
-    "stl_decompose_daily",
-    "corr_matrix",
-    "bpe_token_stats",
-    "cdc_extract",
-    "cume_dist_daily_revenue",
-    "session_duration_stats",
-    "ols_trend_by_type",
-    "revenue_bridge",
-    "fulfillment_lag_percentiles",
-    # round 6
-    "tumbling_ohlc",
-    "interval_union_length",
-    "rolling_median_7d",
-    "weighted_median_value",
-    "pareto_front_2d",
-    "duplicate_ngram_coverage",
-    "readability_score",
-    "target_encode_smoothed",
-    "bot_regularity_flags",
-    "funnel_within_1h",
-    "stickiness_dau_mau",
-    "active_streaks",
-    "text_compression_ratio",
-    "session_bounce_rate",
-    # round 7
-    "trimmed_mean_price",
-    "monetary_unit_sample",
-    "view_purchase_lead_lag",
-    "heaps_law_fit",
-    "rrf_fusion_topk",
-    "prefix_jaccard_pairs",
-    "weighted_p90_value",
-    "iqr_outlier_fences",
-    "orderkey_gap_islands",
-    "winsorized_mean_price",
-    "capped_running_balance",
-    "seat_apportionment",
-    "attribution_time_decay",
-    "bigram_backoff_logprob",
-    # round 9
-    "dedup_clusters_incremental",
-    # round 10
-    "store_ingest_dedup_report",
-}
-
-# Queries whose CHECK CLASS upgraded since their latest driver record
-# (e.g. an oracle added to a formerly rows-only query): treat as
-# never-green so the stronger check gets a driver record. Prune once
-# the hash-green round lands.
-_FORCE_RECHECK: set[str] = set()
-# round 10's four oracle promotions (lsh_near_dup_pairs,
-# minhash_estimate_pairs, simhash64, simhash_near_dup_pairs) got
-# hash-green driver records in CORRECTNESS_r10 — pruned round 11.
-
-
 def _rotated(d: dict) -> dict:
-    # never-green first (oldest backlog before this round's additions),
+    # never-green first (registration order),
     # then greens LEAST-RECENTLY-VERIFIED first: with the whole catalog
     # green, each round's 50-slot window refreshes the stalest third of
     # the records instead of re-checking the same registration prefix
     # forever. Ties (same round) keep registration order.
     rounds = _green_rounds()
-    green = set(rounds) - _FORCE_RECHECK
-    head = {k: v for k, v in d.items() if k not in green and k not in _REGISTERED_AFTER_R3}
-    head |= {k: v for k, v in d.items() if k not in green}
+    head = {k: v for k, v in d.items() if k not in rounds}
     reg = {k: i for i, k in enumerate(d)}
     stale_first = sorted(
         (k for k in d if k not in head), key=lambda k: (rounds.get(k, 0), reg[k])

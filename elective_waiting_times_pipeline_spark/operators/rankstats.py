@@ -33,7 +33,7 @@ Scale notes (100 TB): the row table is touched twice (one hash agg to
 the distinct-value axis, one equi-join back for Spearman's
 cross-moment); the per-value relation is |distinct| rows, range-
 bucketed so no task ever sees more than ~1/64th of it; nothing is
-collected to the driver except the ~63 approx-quantile cut points.
+collected to the driver except the ≤ 63 sampled cut points.
 The decimal(38,0) sums hold while the largest moment fits 38 digits:
 Σ r2² ≈ 4n³, so n ≲ 3·10¹² rows (the final rho/z combine happens in
 double AFTER the exact sums, so no larger product is ever stored).
@@ -46,16 +46,12 @@ from pyspark.sql import functions as F
 
 from elective_waiting_times_pipeline_spark.operators.sampling import (
     ordered_prefix,
-    range_bucket,
-    range_cut_points,
 )
 
 _DEC = "decimal(38,0)"
 
 
-def doubled_avg_rank(
-    df: DataFrame, value_col: str, out_col: str = "r2", n_buckets: int = 64
-) -> DataFrame:
+def doubled_avg_rank(df: DataFrame, value_col: str, out_col: str = "r2") -> DataFrame:
     """Distinct-value → doubled tie-averaged rank map.
 
     Returns one row per distinct `value_col` with `out_col` =
@@ -77,11 +73,9 @@ def doubled_avg_rank(
         .agg(F.count(F.lit(1)).alias("_cnt"))
         .localCheckpoint(eager=False)
     )
-    cuts = range_cut_points(g, value_col, n_buckets, sample_rows=4096)
     pre = ordered_prefix(
         g,
         [F.col(value_col).asc()],
-        range_bucket(value_col, cuts),
         weight="_cnt",
         out_prefix="_cum",
         offsets_from_source=True,
@@ -97,7 +91,7 @@ def _dec(c: Column) -> Column:
     return c.cast(_DEC)
 
 
-def spearman_rho(df: DataFrame, x: str, y: str, n_buckets: int = 64) -> DataFrame:
+def spearman_rho(df: DataFrame, x: str, y: str) -> DataFrame:
     """Spearman rank correlation of two columns, tie-averaged ranks.
 
     One row: `n` (pair count) and `spearman_rho` (round 6). Pearson
@@ -132,7 +126,7 @@ def spearman_rho(df: DataFrame, x: str, y: str, n_buckets: int = 64) -> DataFram
     # twice. A shared cut list is sound: cut points only steer
     # parallelism (any monotone bucketing yields the same exact
     # ranks), and equal-mass cuts over the UNION axis are taken from
-    # the collapsed axis itself (sample_rows over ≤|ax|+|ay| rows).
+    # the collapsed axis itself (the 4096-row sample over ≤|ax|+|ay| rows).
     # Requires x and y to be union-compatible; both callers cast to
     # long. The axis is localCheckpoint'd (O(distinct) rows — the
     # bounded class), so the two filter branches and the offsets agg
@@ -151,11 +145,9 @@ def spearman_rho(df: DataFrame, x: str, y: str, n_buckets: int = 64) -> DataFram
         .agg(F.count(F.lit(1)).alias("_cnt"))
         .localCheckpoint(eager=False)
     )
-    cuts = range_cut_points(g, "_v", n_buckets, sample_rows=4096)
     pre = ordered_prefix(
         g,
         [F.col("_v").asc()],
-        range_bucket("_v", cuts),
         group_cols=["_tag"],
         weight="_cnt",
         out_prefix="_cum",
@@ -213,7 +205,6 @@ def mann_whitney_u(
     group_col: str,
     group_a: str,
     group_b: str,
-    n_buckets: int = 64,
 ) -> DataFrame:
     """Mann-Whitney U test (two-sided normal approximation with tie
     correction) comparing `value_col` between two groups.
@@ -245,11 +236,9 @@ def mann_whitney_u(
         )
         .localCheckpoint(eager=False)
     )
-    cuts = range_cut_points(g, value_col, n_buckets, sample_rows=4096)
     pre = ordered_prefix(
         g,
         [F.col(value_col).asc()],
-        range_bucket(value_col, cuts),
         weight="_cnt",
         out_prefix="_cum",
         offsets_from_source=True,

@@ -19,6 +19,13 @@ driver participation; safe at any cardinality. The salt gives
 independent re-rolls (e.g. per-epoch subsampling) without touching the
 key. Reference has no sampling surface; this is part of the
 beyond-reference training-data operator set (SURVEY §7.3 M5).
+
+The module also holds the package's one distributed-rank kernel,
+`ordered_prefix`: exact ranks and running totals under any order
+without a single-partition window. Value orders sample their own cut
+points (`range_cut_points` → `range_bucket`); hash orders
+(`hash_order_prefix` and the caps, budgets and exact splits built on
+it) bucket on the first hash byte.
 """
 
 from __future__ import annotations
@@ -26,11 +33,13 @@ from __future__ import annotations
 import math
 from collections.abc import Iterable, Mapping, Sequence
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, Window, WindowSpec
 from pyspark.sql import functions as F
 
 HEX_BITS = 4  # hex chars of the digest used ⇒ 16^4 = 65,536 buckets
 HEX_SPACE = 16**HEX_BITS
+CUT_BUCKETS = 64  # value-order buckets: range_cut_points returns ≤ 63 cuts
+CUT_SAMPLE_ROWS = 4096  # hash-sampled values the cut points come from
 
 
 def hash_hex_prefix(key: Column | str, salt: str = "") -> Column:
@@ -139,104 +148,29 @@ def hash_order_prefix(
     weight: Column | str | None = None,
     out_pos: str = "position",
     out_prefix: str = "cum_weight",
-    offsets_from_source: bool = False,
 ) -> DataFrame:
     """Distributed rank — and, with `weight`, inclusive running total —
     under the deterministic order (md5(key || salt), key), optionally
     partitioned by `group_cols` (e.g. per-source corpus quotas).
 
-    A naive ROW_NUMBER()/SUM() OVER (ORDER BY hash) is a
-    single-partition window — the whole table (or the whole hot group)
-    through one task. The scalable shape is the classic distributed
-    rank:
-      1. bucket = first 2 hex chars of the hash — a RANGE prefix of
-         the order, so bucket boundaries respect it (256 uniform
-         buckets; the hash makes them skew-free by construction, no
-         sampling pass needed);
-      2. row_number (+ running weight) within each (group, bucket) —
-         a 256-way parallel window even inside ONE hot group;
-      3. per-(group, bucket) counts/weight sums (≤256 rows per group)
-         → running offsets via a window over the tiny bucket axis →
-         broadcast back (|groups|·256 rows — thousands of sources is
-         still well under any broadcast threshold);
-      4. position = bucket offset + within-bucket row number (same
-         for the weight prefix).
-    Two shuffles of the data (bucket exchange + window sort) — the
-    same cost as any global sort — plus a tiny side plan. The salt
-    re-rolls the order without touching the key.
-
-    The offsets side aggregates the WINDOWED stream, so the source is
-    scanned exactly once: the window shuffle is written once and read
-    by both the join probe side and the tiny offsets agg. (Before r8
-    the offsets branch grouped the pre-window stream, whose
-    partial-agg-below-exchange plan defeated exchange reuse — an
-    expensive upstream was computed twice unless callers
-    localCheckpointed it first.)
-    """
+    `ordered_prefix` under a hash order: the first hash byte is a
+    RANGE prefix of that order, so it serves as the bucket — 256
+    uniform buckets, skew-free by construction, no sampling pass. The
+    salt re-rolls the order without touching the key."""
     c = F.col(key) if isinstance(key, str) else key
     s = c.cast("string")
     if salt:
         s = F.concat(s, F.lit(salt))
-    from pyspark.sql import Window
-
-    gcols = list(group_cols)
-    bucketed = df.withColumn("_h", F.md5(s)).withColumn("_bk", F.substring("_h", 1, 2))
-    w = Window.partitionBy(*gcols, "_bk").orderBy("_h", c)
-    ranked = bucketed.withColumn("_rn", F.row_number().over(w))
-    # offsets aggregate the WINDOWED stream (max(_rn) = bucket count,
-    # max_by(_cw, _rn) = bucket weight total; _rn unique per bucket) —
-    # same single-source-scan rationale as ordered_prefix: a groupBy
-    # on `bucketed` plans its partial agg below a fresh Exchange,
-    # structurally different from the window's Exchange, defeating
-    # reuse and paying a second full pass over the (possibly
-    # expensive) upstream. The agg over the window output is
-    # partition-local — no new exchange.
-    aggs = [F.max("_rn").alias("_n")]
-    src_aggs = [F.count(F.lit(1)).alias("_n")]
-    if weight is not None:
-        wc = F.col(weight) if isinstance(weight, str) else weight
-        ranked = ranked.withColumn(
-            "_cw", F.sum(wc).over(w.rowsBetween(Window.unboundedPreceding, 0))
-        )
-        aggs.append(F.max_by("_cw", "_rn").alias("_ws"))
-        src_aggs.append(F.sum(wc).alias("_ws"))
-    ow = Window.partitionBy(*gcols).orderBy("_bk").rowsBetween(Window.unboundedPreceding, -1)
-    # `offsets_from_source` trades a second source scan for skipping
-    # the second sort+window over the bucket exchange — see
-    # ordered_prefix; enable only when the source is cheap to rescan
-    # (checkpointed / raw narrow scan). The two scans must AGREE:
-    # a nondeterministic source (rand, monotonically_increasing_id,
-    # uncheckpointed sample) can produce inconsistent offsets.
-    offsets = (
-        bucketed.groupBy(*gcols, "_bk").agg(*src_aggs)
-        if offsets_from_source
-        else ranked.groupBy(*gcols, "_bk").agg(*aggs)
-    ).withColumn(
-        "_off", F.coalesce(F.sum("_n").over(ow), F.lit(0))
+    out = ordered_prefix(
+        df.withColumn("_h", F.md5(s)),
+        [F.col("_h"), c],
+        F.conv(F.substring("_h", 1, 2), 16, 10),
+        group_cols,
+        out_pos=out_pos,
+        weight=weight,
+        out_prefix=out_prefix,
     )
-    if weight is not None:
-        offsets = offsets.withColumn("_woff", F.coalesce(F.sum("_ws").over(ow), F.lit(0)))
-    # null-safe rejoin: a NULL group key is a real group (windows keep
-    # it), so the offsets join must not silently drop its rows — the
-    # group columns come back renamed and compared with eqNullSafe
-    # (still a hashable equi-key, the broadcast join survives)
-    keep = [
-        *[F.col(g).alias(f"_g{i}") for i, g in enumerate(gcols)],
-        F.col("_bk").alias("_obk"),
-        "_off",
-        *(["_woff"] if weight is not None else []),
-    ]
-    cond = F.col("_bk") == F.col("_obk")
-    for i, g in enumerate(gcols):
-        cond = cond & F.col(g).eqNullSafe(F.col(f"_g{i}"))
-    out = ranked.join(F.broadcast(offsets.select(*keep)), cond).withColumn(
-        out_pos, (F.col("_off") + F.col("_rn")).cast("long")
-    )
-    if weight is not None:
-        out = out.withColumn(out_prefix, (F.col("_woff") + F.col("_cw")).cast("long"))
-    drop = ["_h", "_bk", "_rn", "_cw", "_off", "_woff", "_obk"]
-    drop += [f"_g{i}" for i in range(len(gcols))]
-    return out.drop(*drop)
+    return out.drop("_h")
 
 
 def hash_order_position(
@@ -247,60 +181,42 @@ def hash_order_position(
 ) -> DataFrame:
     """Deterministic global training-order shuffle: 1-based contiguous
     `position` of every row under the order (md5(key || salt), key).
-    The ungrouped case of `hash_order_prefix` (see its scale notes)."""
+    The ungrouped case of `hash_order_prefix` (see `ordered_prefix`)."""
     return hash_order_prefix(df, key, (), salt, out_pos=out)
 
 
-def range_cut_points(
-    df: DataFrame,
-    value: str,
-    n_buckets: int = 64,
-    rel_err: float = 0.001,
-    sample_rows: int | None = None,
-) -> list[float]:
-    """Approximate-quantile cut points splitting `value`'s distribution
-    into ~`n_buckets` equal-mass ranges — the bucketing side of the
-    value-order distributed rank (`ordered_prefix`). The cut points
-    only steer PARALLELISM, never correctness — any monotone bucketing
-    yields the same exact ranks, a degenerate cut list merely loses
-    fan-out.
+def range_cut_points(df: DataFrame, value: str) -> list[float]:
+    """Cut points splitting `value`'s distribution into ~`CUT_BUCKETS`
+    equal-mass ranges — the bucketing side of the value-order
+    distributed rank (`ordered_prefix`). The cut points only steer
+    PARALLELISM, never correctness — any monotone bucketing yields the
+    same exact ranks, a degenerate cut list merely loses fan-out.
 
-    Two modes, both one bounded driver-side action:
-    - default: Greenwald-Khanna sketch over the full column (no full
-      sort; memory ~1/rel_err per partition).
-    - `sample_rows=N`: empirical quantiles of the N hash-smallest
-      values (ORDER BY xxhash64(value) LIMIT N → Spark's
-      TakeOrderedAndProject: a size-N bounded heap per partition, no
-      sort shuffle, ≤ N*8 bytes to the driver at any scale).
-      Deterministic under layout/reruns (pure value-hash order), and a
-      4096-row uniform sample pins each cut within ~1.6% rank error —
-      far finer than the 1/64 bucket width needs. Use when the column
-      is already a collapsed axis and the GK pass is measurable
-      overhead."""
-    qs = [i / n_buckets for i in range(1, n_buckets)]
-    if not qs:  # n_buckets <= 1: one bucket, no cut points
+    One bounded driver-side action: empirical quantiles of the
+    `CUT_SAMPLE_ROWS` hash-smallest values (ORDER BY xxhash64(value)
+    LIMIT N → Spark's TakeOrderedAndProject: a size-N bounded heap per
+    partition, no sort shuffle, ≤ N*8 bytes to the driver at any
+    scale). Deterministic under layout/reruns (pure value-hash order),
+    and a 4096-row uniform sample pins each cut within ~1.6% rank
+    error — far finer than the 1/64 bucket width needs."""
+    rows = (
+        df.select(F.col(value).cast("double").alias("_v"))
+        .where(F.col("_v").isNotNull())
+        .orderBy(F.xxhash64("_v"))
+        .limit(CUT_SAMPLE_ROWS)
+        .collect()
+    )
+    vals = sorted(r["_v"] for r in rows)
+    if not vals:
         return []
-    if sample_rows is not None:
-        rows = (
-            df.select(F.col(value).cast("double").alias("_v"))
-            .where(F.col("_v").isNotNull())
-            .orderBy(F.xxhash64("_v"))
-            .limit(sample_rows)
-            .collect()
-        )
-        vals = sorted(r["_v"] for r in rows)
-        if not vals:
-            return []
-        cuts = [vals[min(int(q * len(vals)), len(vals) - 1)] for q in qs]
-        return sorted(set(cuts))
-    cuts = df.approxQuantile(value, qs, rel_err)
-    return sorted(set(cuts))
+    qs = [i / CUT_BUCKETS for i in range(1, CUT_BUCKETS)]
+    return sorted({vals[min(int(q * len(vals)), len(vals) - 1)] for q in qs})
 
 
 def parquet_footer_cuts(
     path: str,
     column: str,
-    n_buckets: int = 64,
+    n_buckets: int = CUT_BUCKETS,
     max_footers: int = 64,
 ) -> list[float] | None:
     """Range cut points from parquet row-group STATISTICS — a driver-
@@ -397,7 +313,7 @@ def _uniform_step(cuts: Sequence[float]) -> float | None:
     # gap arithmetic below — inf gaps compare False against inf*(1+eps)
     # and NaN compares False against everything — and would return an
     # inf/nan step instead of rejecting. Non-finite cuts always take
-    # the total Column-chain path.
+    # the total CASE-chain path.
     if not all(math.isfinite(float(c)) for c in cuts):
         return None
     gaps = [float(cuts[i + 1]) - float(cuts[i]) for i in range(len(cuts) - 1)]
@@ -409,9 +325,7 @@ def _uniform_step(cuts: Sequence[float]) -> float | None:
     return (float(cuts[-1]) - float(cuts[0])) / (len(cuts) - 1)
 
 
-def range_bucket(
-    value: Column | str, cuts: Sequence[float], descending: bool = False
-) -> Column:
+def range_bucket(value: str, cuts: Sequence[float], descending: bool = False) -> Column:
     """Monotone bucket index of `value` along the ascending (or
     descending) value order: the count of cut points strictly before
     the value in sort direction. A pure per-row codegen expression —
@@ -426,7 +340,7 @@ def range_bucket(
     Window.orderBy; but DuckDB sorts NULLs last either way, so a
     null-keyed rank cannot be engine-stable across oracles.
 
-    Implementation notes (all three forms produce a MONOTONE bucketing
+    Implementation notes (both forms produce a MONOTONE bucketing
     with the identical NULL/NaN placement — callers' ranks are exact
     under any of them, so the choice is purely a plan-size/driver-cost
     trade):
@@ -439,19 +353,18 @@ def range_bucket(
       build per bucketed-prefix query at 64 cuts. NaN is guarded
       explicitly: Spark's CEIL/FLOOR cast NaN to 0, which would send
       NaN to the FIRST bucket while the sort puts it LAST.
-    - Non-uniform cuts with a plain string column name render the
-      whole CASE chain as ONE spark-sql string (`F.expr`): same tree,
-      zero per-cut py4j round trips.
-    - Non-uniform cuts with a Column expression keep the per-cut
-      Column chain. Not `size(filter(array))` — the higher-order-
-      function form hits a Spark 4 internal error
-      (INTERNAL_ERROR_ATTRIBUTE_NOT_FOUND) when the optimizer inlines
-      the lambda into a downstream window sort; the when-chain
-      codegens identically and collapses fine."""
-    col = F.col(value) if isinstance(value, str) else value
+    - Non-uniform cuts render the whole CASE chain as ONE spark-sql
+      string (`F.expr`): the same tree as a per-cut Column chain, with
+      zero per-cut py4j round trips. Non-finite cuts (inf/nan can
+      arrive from parquet footer stats or a sampled double column)
+      are string casts — `inf` is not a SQL literal. Not
+      `size(filter(array))` — the higher-order-function form hits a
+      Spark 4 internal error (INTERNAL_ERROR_ATTRIBUTE_NOT_FOUND) when
+      the optimizer inlines the lambda into a downstream window sort;
+      the CASE chain codegens identically and collapses fine."""
     if not cuts:
         return F.lit(0).cast("long")
-    v = col.cast("double")
+    v = F.col(value).cast("double")
     n = len(cuts)
     step = _uniform_step(cuts)
     if step is not None:
@@ -486,77 +399,101 @@ def range_bucket(
         )
         # NaN sorts LAST asc; NULL: GREATEST skips it -> bucket 0 ✓
         return F.when(F.isnan(v), F.lit(n)).otherwise(below).cast("long")
-    if (
-        isinstance(value, str)
-        and value.isidentifier()
-        # float(inf)!r renders as `inf`, which is not valid SQL — a
-        # non-finite cut must take the Column-chain path below, whose
-        # F.lit(float(c)) accepts inf/nan
-        and all(math.isfinite(float(c)) for c in cuts)
-    ):
-        vs = f"CAST(`{value}` AS DOUBLE)"
-        op = "<" if descending else ">"
-        chain = " + ".join(
-            f"(CASE WHEN {vs} {op} CAST({float(c)!r} AS DOUBLE) THEN 1 ELSE 0 END)"
-            for c in cuts
-        )
-        if descending:
-            return F.expr(
-                f"CAST(CASE WHEN `{value}` IS NULL THEN {n} ELSE {chain} END AS BIGINT)"
-            )
-        return F.expr(f"CAST({chain} AS BIGINT)")
-    terms = [
-        F.when((v < F.lit(float(c))) if descending else (v > F.lit(float(c))), 1).otherwise(0)
-        for c in cuts
-    ]
-    total = terms[0]
-    for t in terms[1:]:
-        total = total + t
+    name = "`" + value.replace("`", "``") + "`"
+    vs = f"CAST({name} AS DOUBLE)"
+    op = "<" if descending else ">"
+    lits = [repr(c) if math.isfinite(c) else f"'{c}'" for c in map(float, cuts)]
+    chain = " + ".join(f"(CASE WHEN {vs} {op} CAST({c} AS DOUBLE) THEN 1 ELSE 0 END)" for c in lits)
     if descending:
-        # Spark sorts NULL last under desc; the null-comparison terms
-        # all fall to otherwise(0), which would put NULL rows in the
-        # FIRST bucket and silently shift every rank
-        total = F.when(v.isNull(), F.lit(len(cuts))).otherwise(total)
-    return total.cast("long")
+        # Spark sorts NULL last under desc; the NULL comparisons all
+        # fall to ELSE 0, which would put NULL rows in the FIRST bucket
+        # and silently shift every rank
+        return F.expr(f"CAST(CASE WHEN {name} IS NULL THEN {n} ELSE {chain} END AS BIGINT)")
+    return F.expr(f"CAST({chain} AS BIGINT)")
+
+
+def _leading_key(order_cols: Sequence[Column]) -> tuple[str, bool]:
+    """(column name, descending) of the leading order key — the column
+    a value-order `ordered_prefix` samples its cut points from."""
+    node = order_cols[0]._jc.node()
+    descending = False
+    if node.getClass().getSimpleName() == "SortOrder":
+        descending = "Descending" in node.sortDirection().toString()
+        # range_bucket places NULL where Spark's default sort does
+        # (first asc, last desc); another placement would shift ranks
+        if ("NullsLast" if descending else "NullsFirst") not in node.nullOrdering().toString():
+            raise ValueError("leading order key needs Spark's default NULL placement")
+        node = node.child()
+    if node.getClass().getSimpleName() != "UnresolvedAttribute":
+        raise ValueError("sampled cut points need a plain column as the leading order key")
+    return node.sql(), descending
+
+
+def _bucket_axis(gcols: list[str]) -> WindowSpec:
+    """Per-group window over the (group, bucket) side relation in
+    bucket order. Its input is bounded by the bucketing: ≤ 64 value
+    buckets per group (`range_cut_points`), ≤ 256 hash buckets (the
+    first hash byte), or a caller's composite bound (curriculum_order:
+    10 NTILEs × 256). So ONE task per group is the intended plan. An
+    ungrouped axis partitions by the constant `_bk & 0`: an empty
+    partition spec makes WindowExec warn "No Partition Defined" on
+    every such bounded window, burying the warnings about unbounded
+    ones, and the optimizer folds a literal key (or `_bk * 0` on a
+    non-nullable bucket) back into an empty spec."""
+    return Window.partitionBy(*(gcols or [F.col("_bk").bitwiseAND(0)])).orderBy("_bk")
 
 
 def ordered_prefix(
     df: DataFrame,
     order_cols: Sequence[Column],
-    bucket: Column,
+    bucket: Column | None = None,
     group_cols: Iterable[str] = (),
     out_pos: str | None = None,
     weight: Column | str | None = None,
     out_prefix: str = "cum_weight",
     out_total: str | None = None,
     out_total_weight: str | None = None,
-    broadcast_offsets: bool = True,
     offsets_from_source: bool = False,
     weights: Sequence[tuple[Column | str, str]] = (),
 ) -> DataFrame:
-    """Distributed rank / running total under an arbitrary VALUE order
-    — the generalization of `hash_order_prefix` from hash orders to
-    any sort whose leading key admits a monotone `bucket` (use
-    `range_bucket` over `range_cut_points` for value orders, or a hash
-    prefix for hash orders). The caller guarantees `bucket` is a
-    monotone non-decreasing function of `order_cols` within each
-    group; ranks are then EXACT regardless of how balanced the buckets
-    are.
+    """Distributed rank / running total under `order_cols`, optionally
+    partitioned by `group_cols` — the one bucketed prefix kernel behind
+    the package's ranks, percentiles, NTILEs, trims and hash-order caps.
 
-    Same two-shuffle shape as `hash_order_prefix` (see its scale
-    notes): per-(group, bucket) window for the within-bucket
-    row_number / running weight, per-bucket counts -> cumulative
-    offsets via a window over the tiny bucket axis, broadcast back.
+    A naive ROW_NUMBER()/SUM() OVER (ORDER BY ...) is a single-partition
+    window — the whole table (or the whole hot group) through one task.
+    The scalable shape is the classic distributed rank:
+      1. `bucket` — a monotone non-decreasing function of `order_cols`
+         within each group, so bucket boundaries respect the order;
+      2. row_number (+ running weights) within each (group, bucket) —
+         a parallel window even inside ONE hot group;
+      3. per-(group, bucket) counts/weight sums → running offsets via
+         a window over the tiny bucket axis (`_bucket_axis`) →
+         broadcast back;
+      4. position = bucket offset + within-bucket row number (same for
+         each weight prefix).
+    Two shuffles of the data (bucket exchange + window sort) — the same
+    cost as any global sort — plus a tiny side plan. Ranks are EXACT
+    however balanced the buckets are; balance only steers parallelism.
+
+    `bucket=None` is a VALUE order: cut points are sampled from the
+    leading order key (a plain column, asc or desc) by
+    `range_cut_points` — one bounded driver-side action over `df` — and
+    applied by `range_bucket`. `hash_order_prefix` passes the first
+    hash byte instead; a caller may pass any other monotone bucket.
+
+    The rejoin is null-safe: a NULL group key is a real group (the
+    windows keep it), so its rows are ranked as their own group rather
+    than dropped — the group columns come back renamed and compared
+    with eqNullSafe (still a hashable equi-key, the broadcast join
+    survives).
+
     `out_total` additionally attaches the per-group row count (from
     the same side relation — no extra pass), which callers like the
     exact-NTILE curriculum bucketing need; `out_total_weight` does the
     same for the per-group WEIGHT total (requires `weight`), sparing
     weighted-quantile callers a separate groupBy pass over `df` plus a
-    totals join. Set
-    `broadcast_offsets=False` when |groups|*|buckets| can exceed the
-    broadcast threshold (e.g. grouping by a high-cardinality key): the
-    offsets join then shuffles on (group, bucket), which the bucket
-    component keeps skew-free.
+    totals join.
 
     `offsets_from_source=True` derives the per-bucket counts/weight
     sums from a direct hash agg on the PRE-WINDOW stream instead of
@@ -583,9 +520,10 @@ def ordered_prefix(
     side for ALL of them, where chaining ordered_prefix calls would
     pay the full machinery per measure (the ks_test_sources shape:
     cumulative group-A count and cumulative total count in one pass)."""
-    from pyspark.sql import Window
-
     gcols = list(group_cols)
+    if bucket is None:
+        value, descending = _leading_key(order_cols)
+        bucket = range_bucket(value, range_cut_points(df, value), descending)
     b = df.withColumn("_bk", bucket.cast("long"))
     w = Window.partitionBy(*gcols, "_bk").orderBy(*order_cols)
     # row_number is ALWAYS computed (not only when out_pos is asked
@@ -618,48 +556,48 @@ def ordered_prefix(
         )
         aggs.append(F.max_by(cwn, "_rn").alias(wsn))
         src_aggs.append(F.sum(wc).alias(wsn))
-    ow = Window.partitionBy(*gcols).orderBy("_bk").rowsBetween(Window.unboundedPreceding, -1)
+    ow = _bucket_axis(gcols).rowsBetween(Window.unboundedPreceding, -1)
     # same values either way: count == max(_rn), sum(w) == max_by(_cw, _rn)
     offsets = (
         b.groupBy(*gcols, "_bk").agg(*src_aggs)
         if offsets_from_source
         else ranked.groupBy(*gcols, "_bk").agg(*aggs)
     )
-    keep = [*gcols, "_bk"]
+    # all bucket-axis windows in ONE projection, so they share one
+    # partition key and one Window operator
+    axis = {}
     if out_pos is not None:
-        offsets = offsets.withColumn("_off", F.coalesce(F.sum("_n").over(ow), F.lit(0)))
-        keep.append("_off")
+        axis["_off"] = F.coalesce(F.sum("_n").over(ow), F.lit(0))
     for _wc, _oname, _cwn, woffn, wsn in wlist:
-        offsets = offsets.withColumn(woffn, F.coalesce(F.sum(wsn).over(ow), F.lit(0)))
-        keep.append(woffn)
-    if out_total is not None or out_total_weight is not None:
-        tw = (
-            Window.partitionBy(*gcols)
-            .orderBy("_bk")
-            .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
-        )
-        if out_total is not None:
-            offsets = offsets.withColumn("_tot", F.sum("_n").over(tw))
-            keep.append("_tot")
-        if out_total_weight is not None:
-            if weight is None:
-                raise ValueError("out_total_weight requires weight")
-            offsets = offsets.withColumn("_wtot", F.sum("_ws").over(tw))
-            keep.append("_wtot")
-    side = offsets.select(*keep)
-    if broadcast_offsets:
-        side = F.broadcast(side)
-    out = ranked.join(side, [*gcols, "_bk"])
-    if out_pos is not None:
-        out = out.withColumn(out_pos, (F.col("_off") + F.col("_rn")).cast("long"))
-    for _wc, oname, cwn, woffn, _wsn in wlist:
-        out = out.withColumn(oname, (F.col(woffn) + F.col(cwn)).cast("long"))
+        axis[woffn] = F.coalesce(F.sum(wsn).over(ow), F.lit(0))
+    tw = _bucket_axis(gcols).rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
     if out_total is not None:
-        out = out.withColumn(out_total, F.col("_tot").cast("long"))
+        axis["_tot"] = F.sum("_n").over(tw)
     if out_total_weight is not None:
-        out = out.withColumn(out_total_weight, F.col("_wtot").cast("long"))
-    drop = ["_bk", "_rn", "_off", "_tot", "_wtot"]
-    drop += [n for _wc, _o, cwn, woffn, _wsn in wlist for n in (cwn, woffn)]
+        if weight is None:
+            raise ValueError("out_total_weight requires weight")
+        axis["_wtot"] = F.sum("_ws").over(tw)
+    gkeys = [f"_g{i}" for i in range(len(gcols))]
+    side = offsets.withColumns(axis).select(
+        *[F.col(g).alias(k) for g, k in zip(gcols, gkeys)], F.col("_bk").alias("_obk"), *axis
+    )
+    cond = F.col("_bk") == F.col("_obk")
+    for g, k in zip(gcols, gkeys):
+        cond = cond & F.col(g).eqNullSafe(F.col(k))
+    outs = {}
+    if out_pos is not None:
+        outs[out_pos] = F.col("_off") + F.col("_rn")
+    for _wc, oname, cwn, woffn, _wsn in wlist:
+        outs[oname] = F.col(woffn) + F.col(cwn)
+    if out_total is not None:
+        outs[out_total] = F.col("_tot")
+    if out_total_weight is not None:
+        outs[out_total_weight] = F.col("_wtot")
+    out = ranked.join(F.broadcast(side), cond).withColumns(
+        {name: c.cast("long") for name, c in outs.items()}
+    )
+    drop = ["_bk", "_obk", "_rn", *gkeys, *axis]
+    drop += [cwn for _wc, _o, cwn, _woffn, _wsn in wlist]
     return out.drop(*drop)
 
 
@@ -694,8 +632,6 @@ def grouped_prefix_peak(
     `order_cols` within each group; `weight` must be non-NULL (a
     NULL weight row would be skipped by the running sum but change
     no downstream offset — callers feed ±1 deltas)."""
-    from pyspark.sql import Window
-
     gcols = list(group_cols)
     wc = F.col(weight) if isinstance(weight, str) else weight
     b = df.withColumn("_bk", bucket.cast("long")).withColumn("_wv", wc)
@@ -706,9 +642,7 @@ def grouped_prefix_peak(
     per_bk = run.groupBy(*gcols, "_bk").agg(
         F.max("_cw").alias("_mx"), F.sum("_wv").alias("_ws")
     )
-    ow = Window.partitionBy(*gcols).orderBy("_bk").rowsBetween(
-        Window.unboundedPreceding, -1
-    )
+    ow = _bucket_axis(gcols).rowsBetween(Window.unboundedPreceding, -1)
     return (
         per_bk.withColumn("_off", F.coalesce(F.sum("_ws").over(ow), F.lit(0)))
         .groupBy(*gcols)

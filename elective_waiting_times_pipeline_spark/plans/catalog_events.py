@@ -1072,10 +1072,7 @@ def peak_concurrency(spark: SparkSession, sf_dir: str) -> DataFrame:
     # and session boundaries track event times closely, so the cheap
     # single-column TakeOrdered scan replaces either a checkpoint of
     # the bounds relation or a second session_window derivation.
-    cuts = S.range_cut_points(
-        ev.select(F.unix_micros("ts").alias("_tus")), "_tus",
-        n_buckets=64, sample_rows=4096,
-    )
+    cuts = S.range_cut_points(ev.select(F.unix_micros("ts").alias("_tus")), "_tus")
     # fused peak-of-running-sum: max_rows(off + cw) == max_buckets(off
     # + max cw-in-bucket), so the boundary stream is windowed ONCE and
     # reduced partition-locally — no second sort+window for the

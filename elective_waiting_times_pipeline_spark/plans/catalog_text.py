@@ -889,10 +889,10 @@ def pack_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
     # whose footers can't vouch for doc_id falls back to the 4096-row
     # hash sample over a checkpointed projection.
     with_tokens = docs.select("doc_id", X.token_count("text").cast("long").alias("n_tokens"))
-    cuts = S.parquet_footer_cuts(f"{sf_dir}/documents.parquet", "doc_id", n_buckets=64)
+    cuts = S.parquet_footer_cuts(f"{sf_dir}/documents.parquet", "doc_id")
     if cuts is None:
         with_tokens = with_tokens.localCheckpoint(eager=False)
-        cuts = S.range_cut_points(with_tokens, "doc_id", n_buckets=64, sample_rows=4096)
+        cuts = S.range_cut_points(with_tokens, "doc_id")
     return P.chunk_offsets(with_tokens, budget=512, shards=8, id_cuts=cuts)
 
 
@@ -1999,11 +1999,9 @@ def zipf_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
     cw = Window.partitionBy("n").orderBy("_bk").rowsBetween(Window.unboundedPreceding, -1)
     cell = cell.withColumn("_boff", F.coalesce(F.sum("_cn").over(cw), F.lit(0)))
     per_n = cell.groupBy("n").agg(F.sum("_cn").alias("_gn"))
-    cuts = S.range_cut_points(per_n, "n", n_buckets=64, sample_rows=4096)
     goff = S.ordered_prefix(
         per_n,
         [F.col("n").desc()],
-        S.range_bucket("n", cuts, descending=True),
         weight="_gn",
         out_prefix="_cum",
     ).select("n", (F.col("_cum") - F.col("_gn")).alias("_goff"))
@@ -2085,7 +2083,7 @@ def curriculum_order(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Scale-safe form of NTILE(10) + global ROW_NUMBER: neither window
     # is ever corpus-sized. Stage A computes the EXACT global rank
     # under (mean_logprob DESC, doc_id) with the range-bucket
-    # distributed rank (approx-quantile cut points steer parallelism
+    # distributed rank (sampled cut points steer parallelism
     # only), then derives the exact NTILE bucket from (rank, N) with
     # the SQL-standard formula — first N%10 buckets get one extra row.
     # Stage B computes the final position with the same machinery
@@ -2101,11 +2099,9 @@ def curriculum_order(spark: SparkSession, sf_dir: str) -> DataFrame:
     scored = (
         X.unigram_logprob(docs).select("doc_id", "mean_logprob").localCheckpoint(eager=False)
     )
-    cuts = S.range_cut_points(scored, "mean_logprob", n_buckets=64, sample_rows=4096)
     ranked = S.ordered_prefix(
         scored,
         [F.col("mean_logprob").desc(), F.col("doc_id")],
-        S.range_bucket("mean_logprob", cuts, descending=True),
         out_pos="_r",
         out_total="_N",
         # scored is checkpointed: a second scan of it is cheaper than
@@ -2292,11 +2288,9 @@ def source_gini(spark: SparkSession, sf_dir: str) -> DataFrame:
     # partition per source (sources are few); the sampled cut points
     # keep partition depth ~corpus/64 at any density. Σ i·x rides
     # decimal(38,0): rank·n_chars sums pass int64 at petascale.
-    cuts = S.range_cut_points(docs, "n_chars", n_buckets=64, sample_rows=4096)
     ranked = S.ordered_prefix(
         docs,
         [F.col("n_chars"), F.col("doc_id")],
-        S.range_bucket("n_chars", cuts),
         group_cols=["source"],
         out_pos="i",
         # 3-column raw scan: rescanning it for the offsets agg beats
@@ -2979,11 +2973,9 @@ def ks_test_sources(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.sum("a").alias("_ca"), F.count(F.lit(1)).alias("_cnt"))
         .localCheckpoint(eager=False)
     )
-    cuts = S.range_cut_points(g, "v", 64, sample_rows=4096)
     pre = S.ordered_prefix(
         g,
         [F.col("v").asc()],
-        S.range_bucket("v", cuts),
         weight="_ca",
         out_prefix="_c1",
         weights=[("_cnt", "_ct")],

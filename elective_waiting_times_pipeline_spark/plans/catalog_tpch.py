@@ -692,11 +692,9 @@ def pareto_revenue_share(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.sum(sl2("o_totalprice")).alias("cents"))
         .localCheckpoint(eager=False)
     )
-    cuts = SA.range_cut_points(spend, "cents", 64, sample_rows=4096)
     ranked = SA.ordered_prefix(
         spend,
         [F.col("cents").desc(), F.col("o_custkey")],
-        SA.range_bucket("cents", cuts, descending=True),
         out_pos="rnk",
         weight="cents",
         out_prefix="run",

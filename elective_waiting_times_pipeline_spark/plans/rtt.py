@@ -11,8 +11,8 @@ histogram is aggregated while still wide, before any reshaping:
         GROUP BY GROUPING SETS ((geo,is),(geo),(is),()) × fixed keys
         SUM(_gt_b) per band b, SUM(unknown_start), SUM(total_all)
     ──▶ one row per grid cell: counts = [coalesce(SUM(_gt_b), 0)]
-        cum = aggregate(counts, fold running total)   (no window)
-        weeks.q = array_position(cum ≥ q·nonmiss, true) − 1
+        one linear fold over counts (no window): running total and,
+        per quantile, weeks.q = first band index with total ≥ q·nonmiss
 
 The ENGLAND pseudo-group (2.R:148-150: overwrite geo with a constant)
 and the independent∈{0,1,2=All} branch (2.R:344-353) are exactly the
@@ -161,20 +161,43 @@ def _grid(
         F.sum("total_all").alias("total_all"),
         F.array(*[F.coalesce(F.sum(b), F.lit(0)) for b in bands]).alias("counts"),
     )
-    # Running total over the band axis as a fold: cum[b] = cum[b-1] + counts[b].
-    cum = F.aggregate(
-        "counts",
-        F.array().cast("array<bigint>"),
-        lambda acc, n: F.concat(acc, F.array(F.coalesce(F.get(acc, F.size(acc) - 1), F.lit(0)) + n)),
+    n_bands = len(bands)
+
+    def band_sum(first: int, last: int) -> F.Column:
+        """Sum of bands first..last (1-based, inclusive) as a fold over a slice."""
+        if last < first:
+            return F.lit(0).cast("long")
+        return F.aggregate(F.slice("counts", first, last - first + 1), F.lit(0).cast("long"), lambda a, c: a + c)
+
+    cells = cells.select(
+        *fixed, "geo", "independent", "unknown_start", "total_all", "counts",
+        band_sum(1, n_bands).alias("nonmiss"),
+        band_sum(1, min(18, n_bands)).alias("n18"),
+        band_sum(53, n_bands).alias("n52"),
     )
-    cells = cells.select(*fixed, "geo", "independent", "unknown_start", "total_all", cum.alias("cum"))
+    # Each quantile's first crossing in ONE linear fold over the bands:
+    # the accumulator carries the running total, the 0-based band index
+    # and one slot per quantile that takes the index where the running
+    # total first reaches q·nonmiss (-1 until then, as
+    # array_position(cum >= q·nonmiss, true) - 1 gives when none does).
+    slots = [f"w{k}" for k in range(len(quantiles))]
+    zero = F.struct(
+        F.lit(0).cast("long").alias("run"), F.lit(0).alias("i"), *[F.lit(-1).alias(w) for w in slots]
+    )
 
-    def upto(week: int) -> F.Column:
-        return F.element_at("cum", min(week, len(bands)))
+    def step(acc: F.Column, n: F.Column) -> F.Column:
+        run = acc["run"] + n
+        return F.struct(
+            run.alias("run"),
+            (acc["i"] + 1).alias("i"),
+            *[
+                F.when((acc[w] < 0) & (run >= q * F.col("nonmiss")), acc["i"]).otherwise(acc[w]).alias(w)
+                for w, q in zip(slots, quantiles)
+            ],
+        )
 
-    nonmiss = upto(len(bands))
-    n18 = upto(18)
-    n52 = nonmiss - upto(52)
+    cells = cells.withColumn("crossing", F.aggregate("counts", zero, step))
+    nonmiss, n18, n52 = F.col("nonmiss"), F.col("n18"), F.col("n52")
     total = (
         F.when(F.col("pathway").isin("completeadmitted", "completenonadmitted"), nonmiss + F.col("unknown_start"))
         .when(F.col("pathway") == "newRTT", F.col("total_all"))
@@ -184,10 +207,6 @@ def _grid(
 
     def _supp(c: F.Column) -> F.Column:
         return F.when(keep, c)
-
-    def weeks(q: float) -> F.Column:
-        crossed = F.transform("cum", lambda c: c >= q * nonmiss)
-        return (F.array_position(crossed, True) - 1).cast("int")
 
     return cells.select(
         "monthyear",
@@ -201,7 +220,7 @@ def _grid(
         _supp(F.bround(100.0 * n18 / nonmiss, 1)).alias("rate.18wks.or.less"),
         _supp(n52).cast("long").alias("number.52.or.more"),
         _supp(F.bround(100.0 * n52 / nonmiss, 1)).alias("rate.52wks.or.more"),
-        *[_supp(weeks(q)).alias(f"weeks.{int(round(q * 100))}") for q in quantiles],
+        *[_supp(F.col("crossing")[w]).alias(f"weeks.{int(round(q * 100))}") for w, q in zip(slots, quantiles)],
     )
 
 

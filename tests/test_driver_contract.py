@@ -55,9 +55,6 @@ def test_rotation_fits_driver_window(entry_mod):
     assert set(qs) == set(m.catalog.SPARK_QUERIES)
     green = m._previously_green()
     assert green, "driver CORRECTNESS files should yield green keys"
-    # queries whose check class upgraded are treated as never-green so
-    # the stronger check earns a driver record
-    green = green - getattr(m, "_FORCE_RECHECK", set())
     never = [q for q in qs if q not in green]
     # every window slot goes to a never-green query while any remain
     window = qs[:50]

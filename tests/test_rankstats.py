@@ -31,7 +31,7 @@ def pairs(spark):
 def test_doubled_rank_matches_naive_window(spark, pairs):
     got = {
         r.x: r.r2
-        for r in doubled_avg_rank(pairs, "x", "r2", n_buckets=3).collect()
+        for r in doubled_avg_rank(pairs, "x", "r2").collect()
     }
     naive = (
         pairs.select("x")
@@ -63,7 +63,7 @@ def test_spearman_matches_pandas(spark, pairs):
 
 def test_spearman_layout_independent(spark, pairs):
     a = spearman_rho(pairs.repartition(1), "x", "y").collect()[0]
-    b = spearman_rho(pairs.repartition(7), "x", "y", n_buckets=2).collect()[0]
+    b = spearman_rho(pairs.repartition(7), "x", "y").collect()[0]
     assert (a.n, a.spearman_rho) == (b.n, b.spearman_rho)
 
 
@@ -80,7 +80,7 @@ def test_mann_whitney_matches_hand_formula(spark):
     b_vals = [2.0, 3.0, 3.0, 7.0, 8.0]
     rows = [("a", v) for v in a_vals] + [("b", v) for v in b_vals]
     df = spark.createDataFrame(rows, "g string, v double")
-    got = mann_whitney_u(df, "v", "g", "a", "b", n_buckets=2).collect()[0]
+    got = mann_whitney_u(df, "v", "g", "a", "b").collect()[0]
 
     s = pd.Series(a_vals + b_vals)
     ranks = s.rank(method="average")
@@ -106,9 +106,14 @@ def test_mann_whitney_ignores_other_groups_and_nulls(spark):
 # ---------------------------------------------------------------------------
 # property: the distributed doubled-rank map equals the naive global
 # window on arbitrary multisets (ties, negatives, huge gaps), under an
-# arbitrary bucket count — exactness must not depend on bucket balance
+# arbitrary explicit cut list (0 cuts = one bucket, up to 7 cuts) in
+# place of the sampled one — exactness must not depend on bucket balance
 # ---------------------------------------------------------------------------
+from unittest import mock
+
 from hypothesis import given, settings, strategies as st
+
+from elective_waiting_times_pipeline_spark.operators import sampling
 
 
 @settings(max_examples=10, deadline=None)
@@ -116,13 +121,14 @@ from hypothesis import given, settings, strategies as st
     vals=st.lists(
         st.sampled_from([-5.0, -1.0, 0.0, 0.5, 2.0, 2.0, 3.0, 1e9]), min_size=1, max_size=40
     ),
-    n_buckets=st.sampled_from([1, 2, 7]),
+    cuts=st.lists(
+        st.sampled_from([-5.0, -1.0, 0.0, 1.0, 2.0, 3.0, 1e9]), max_size=7
+    ).map(lambda c: sorted(set(c))),
 )
-def test_doubled_rank_property(spark, vals, n_buckets):
+def test_doubled_rank_property(spark, vals, cuts):
     df = spark.createDataFrame([(v,) for v in vals], "x double")
-    got = {
-        r.x: r.r2 for r in doubled_avg_rank(df, "x", "r2", n_buckets=n_buckets).collect()
-    }
+    with mock.patch.object(sampling, "range_cut_points", lambda _df, _value: cuts):
+        got = {r.x: r.r2 for r in doubled_avg_rank(df, "x", "r2").collect()}
     # doubled tie-averaged rank from first principles
     import collections
 

@@ -1,4 +1,4 @@
-"""Round-8 invariants: the three range_bucket implementations agree on
+"""Round-8 invariants: the two range_bucket implementations agree on
 NULL/NaN sort-position placement and monotonicity, and
 parquet_footer_cuts behaves across file layouts / stats availability.
 """
@@ -14,26 +14,17 @@ from pyspark.sql import functions as F
 from elective_waiting_times_pipeline_spark.operators import sampling as S
 
 UNIFORM = [10.0, 20.0, 30.0]  # closed-form path
-SKEWED = [10.0, 11.0, 30.0]  # expr-string (str name) / Column-chain paths
-
-
-def _bucket_variants(cuts, descending):
-    """(label, bucket Column) for every implementation path."""
-    return [
-        ("str", S.range_bucket("v", cuts, descending=descending)),
-        ("col", S.range_bucket(F.col("v"), cuts, descending=descending)),
-    ]
+SKEWED = [10.0, 11.0, 30.0]  # expr-string CASE-chain path
 
 
 @pytest.mark.parametrize("cuts", [UNIFORM, SKEWED])
 @pytest.mark.parametrize("descending", [False, True])
 def test_range_bucket_paths_agree_and_rank_exactly(spark, cuts, descending):
-    """All implementation paths (closed-form uniform, expr-string
-    chain, Column chain) must yield EXACT ranks vs a naive global
-    window — including NaN (sorts largest) and NULL (first asc / last
-    desc) rows. The uniform cuts hit the closed form; the skewed cuts
-    hit the chain forms; passing the name vs the Column selects the
-    expr-string vs py4j builds."""
+    """Both implementation paths (closed-form uniform, expr-string
+    CASE chain) must yield EXACT ranks vs a naive global window —
+    including NaN (sorts largest) and NULL (first asc / last desc)
+    rows. The uniform cuts hit the closed form; the skewed cuts hit
+    the chain form."""
     rows = [
         (0, 5.0),
         (1, 10.0),  # exactly on a cut
@@ -50,10 +41,9 @@ def test_range_bucket_paths_agree_and_rank_exactly(spark, cuts, descending):
         (r.k, r.r)
         for r in df.withColumn("r", F.row_number().over(Window.orderBy(*order))).collect()
     }
-    for label, bucket in _bucket_variants(cuts, descending):
-        out = S.ordered_prefix(df, order, bucket, out_pos="r")
-        got = {(r.k, r.r) for r in out.collect()}
-        assert got == naive, f"path={label} desc={descending} cuts={cuts}"
+    out = S.ordered_prefix(df, order, S.range_bucket("v", cuts, descending), out_pos="r")
+    got = {(r.k, r.r) for r in out.collect()}
+    assert got == naive, f"desc={descending} cuts={cuts}"
 
 
 def test_range_bucket_uniform_closed_form_is_small(spark):

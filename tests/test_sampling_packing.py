@@ -377,14 +377,8 @@ def valued(spark):
 def test_ordered_prefix_rank_matches_global_window(spark, valued):
     from pyspark.sql import Window
 
-    cuts = S.range_cut_points(valued, "v", n_buckets=16)
-    out = S.ordered_prefix(
-        valued,
-        [F.col("v"), F.col("k")],
-        S.range_bucket(F.col("v"), cuts),
-        out_pos="r",
-        out_total="N",
-    )
+    # bucket=None: cut points sampled from the leading order key
+    out = S.ordered_prefix(valued, [F.col("v"), F.col("k")], out_pos="r", out_total="N")
     naive = valued.withColumn("r", F.row_number().over(Window.orderBy("v", "k")))
     assert {(x.k, x.r) for x in out.collect()} == {(x.k, x.r) for x in naive.collect()}
     assert out.select("N").distinct().collect()[0].N == 1500
@@ -393,11 +387,9 @@ def test_ordered_prefix_rank_matches_global_window(spark, valued):
 def test_ordered_prefix_descending_and_weight(spark, valued):
     from pyspark.sql import Window
 
-    cuts = S.range_cut_points(valued, "v", n_buckets=16)
     out = S.ordered_prefix(
         valued,
         [F.col("v").desc(), F.col("k")],
-        S.range_bucket(F.col("v"), cuts, descending=True),
         out_pos="r",
         weight="w",
         out_prefix="cw",
@@ -415,14 +407,12 @@ def test_ordered_prefix_grouped_matches_per_group_window(spark, valued):
     from pyspark.sql import Window
 
     g = valued.withColumn("g", (F.col("k") % 3).cast("int"))
-    cuts = S.range_cut_points(g, "v", n_buckets=8)
     out = S.ordered_prefix(
         g,
         [F.col("v"), F.col("k")],
-        S.range_bucket(F.col("v"), cuts),
+        S.range_bucket("v", [4.0, 11.0, 19.0, 30.0]),
         group_cols=["g"],
         out_pos="r",
-        broadcast_offsets=False,
     )
     w = Window.partitionBy("g").orderBy("v", "k")
     naive = g.withColumn("r", F.row_number().over(w))
@@ -437,27 +427,21 @@ def test_range_bucket_degenerate_cuts_still_exact(spark, valued):
 
     const = valued.withColumn("v", F.lit(7.0))
     out = S.ordered_prefix(
-        const, [F.col("v"), F.col("k")], S.range_bucket(F.col("v"), []), out_pos="r"
+        const, [F.col("v"), F.col("k")], S.range_bucket("v", []), out_pos="r"
     )
     naive = const.withColumn("r", F.row_number().over(Window.orderBy("v", "k")))
     assert {(x.k, x.r) for x in out.collect()} == {(x.k, x.r) for x in naive.collect()}
 
 
 def test_ordered_prefix_layout_independent(spark, valued):
-    cuts = S.range_cut_points(valued, "v", n_buckets=16)
     a = sorted(
         (x.k, x.r)
-        for x in S.ordered_prefix(
-            valued, [F.col("v"), F.col("k")], S.range_bucket(F.col("v"), cuts), out_pos="r"
-        ).collect()
+        for x in S.ordered_prefix(valued, [F.col("v"), F.col("k")], out_pos="r").collect()
     )
     b = sorted(
         (x.k, x.r)
         for x in S.ordered_prefix(
-            valued.repartition(11),
-            [F.col("v"), F.col("k")],
-            S.range_bucket(F.col("v"), cuts),
-            out_pos="r",
+            valued.repartition(11), [F.col("v"), F.col("k")], out_pos="r"
         ).collect()
     )
     assert a == b
@@ -484,7 +468,7 @@ def test_ordered_prefix_property_matches_naive(spark, vals, cuts):
     out = S.ordered_prefix(
         df,
         [F.col("v"), F.col("k")],
-        S.range_bucket(F.col("v"), sorted({float(c) for c in cuts})),
+        S.range_bucket("v", sorted({float(c) for c in cuts})),
         out_pos="r",
         weight="w",
         out_prefix="cw",
@@ -513,7 +497,7 @@ def test_range_bucket_nan_keeps_monotone_rank(spark):
     for desc in (False, True):
         order = [F.col("v").desc() if desc else F.col("v").asc(), F.col("k")]
         out = S.ordered_prefix(
-            df, order, S.range_bucket(F.col("v"), cuts, descending=desc), out_pos="r"
+            df, order, S.range_bucket("v", cuts, descending=desc), out_pos="r"
         )
         naive = df.withColumn("r", F.row_number().over(Window.orderBy(*order)))
         assert {(x.k, x.r) for x in out.collect()} == {
@@ -533,12 +517,74 @@ def test_range_bucket_null_keys_match_spark_sort_position(spark):
     for desc in (False, True):
         order = [F.col("v").desc() if desc else F.col("v").asc(), F.col("k")]
         out = S.ordered_prefix(
-            df, order, S.range_bucket(F.col("v"), cuts, descending=desc), out_pos="r"
+            df, order, S.range_bucket("v", cuts, descending=desc), out_pos="r"
         )
         naive = df.withColumn("r", F.row_number().over(Window.orderBy(*order)))
         assert {(x.k, x.r) for x in out.collect()} == {
             (x.k, x.r) for x in naive.collect()
         }, f"descending={desc}"
+
+
+def test_null_group_is_ranked_as_its_own_group(spark):
+    # a NULL group key is a real group: every input row comes back and
+    # the NULL rows are ranked (and summed) among themselves — under a
+    # value order (explicit and sampled cut points) and a hash order
+    from pyspark.sql import Window
+
+    df = spark.createDataFrame(
+        [(0, "a", 3.0, 1), (1, None, 1.0, 2), (2, "a", 2.0, 3), (3, None, 5.0, 4), (4, "b", 4.0, 5)],
+        "k long, g string, v double, w int",
+    )
+    value = [F.col("v"), F.col("k")]
+    hashed = [F.md5(F.col("k").cast("string")), F.col("k")]
+    kw = dict(out_pos="r", weight="w", out_prefix="cw")
+    cases = [
+        ("value order, explicit cuts", value,
+         lambda: S.ordered_prefix(df, value, S.range_bucket("v", [2.5]), ["g"], **kw)),
+        ("value order, sampled cuts", value,
+         lambda: S.ordered_prefix(df, value, group_cols=["g"], **kw)),
+        ("hash order", hashed, lambda: S.hash_order_prefix(df, "k", ["g"], **kw)),
+    ]
+    for label, order, build in cases:
+        w = Window.partitionBy("g").orderBy(*order)
+        naive = df.withColumn("r", F.row_number().over(w)).withColumn(
+            "cw", F.sum("w").over(w.rowsBetween(Window.unboundedPreceding, 0))
+        )
+        out = build()
+        got = sorted((x.k, x.g, x.r, x.cw) for x in out.collect())
+        assert len(got) == 5, f"{label}: {got}"
+        assert out.columns == [*df.columns, "r", "cw"], label
+        assert got == sorted((x.k, x.g, x.r, x.cw) for x in naive.collect()), label
+
+
+def test_sampled_cuts_reject_leading_keys_they_cannot_bucket(spark, valued):
+    # cut points are sampled from a plain column, and range_bucket
+    # places NULL where Spark's default sort does — anything else
+    # must pass an explicit bucket instead of silently misranking
+    for lead in (F.col("v").desc_nulls_first(), F.col("v").asc_nulls_last(), F.col("v") + 1):
+        with pytest.raises(ValueError):
+            S.ordered_prefix(valued, [lead, F.col("k")], out_pos="r")
+
+
+def test_ungrouped_prefix_windows_are_all_partitioned(spark, valued):
+    # the bucket-axis offsets/total windows of an ungrouped prefix carry
+    # a constant partition key, so no Window has an empty partition
+    # spec (WindowExec's "No Partition Defined" warning stays for
+    # genuinely unbounded windows) — under a non-nullable bucket too
+    out = S.ordered_prefix(
+        valued, [F.col("v"), F.col("k")], out_pos="r", weight="w", out_total="N"
+    )
+    hashed = S.hash_order_position(valued, "k")
+    for df in (out, hashed):
+        plan = df._jdf.queryExecution().optimizedPlan()
+        stack, windows = [plan], 0
+        while stack:
+            n = stack.pop()
+            stack.extend(n.children().apply(i) for i in range(n.children().size()))
+            if n.nodeName() == "Window":
+                windows += 1
+                assert n.partitionSpec().size() > 0, n.toString()
+        assert windows >= 2
 
 
 def test_stratified_exact_split_proportions(spark, sf_dir):
