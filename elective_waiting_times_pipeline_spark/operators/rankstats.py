@@ -44,9 +44,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from elective_waiting_times_pipeline_spark.operators.sampling import (
-    ordered_prefix,
-)
+from elective_waiting_times_pipeline_spark.operators.sampling import value_prefix
 
 _DEC = "decimal(38,0)"
 
@@ -73,9 +71,9 @@ def doubled_avg_rank(df: DataFrame, value_col: str, out_col: str = "r2") -> Data
         .agg(F.count(F.lit(1)).alias("_cnt"))
         .localCheckpoint(eager=False)
     )
-    pre = ordered_prefix(
+    pre = value_prefix(
         g,
-        [F.col(value_col).asc()],
+        value_col,
         weight="_cnt",
         out_prefix="_cum",
         offsets_from_source=True,
@@ -145,9 +143,9 @@ def spearman_rho(df: DataFrame, x: str, y: str) -> DataFrame:
         .agg(F.count(F.lit(1)).alias("_cnt"))
         .localCheckpoint(eager=False)
     )
-    pre = ordered_prefix(
+    pre = value_prefix(
         g,
-        [F.col("_v").asc()],
+        "_v",
         group_cols=["_tag"],
         weight="_cnt",
         out_prefix="_cum",
@@ -236,9 +234,9 @@ def mann_whitney_u(
         )
         .localCheckpoint(eager=False)
     )
-    pre = ordered_prefix(
+    pre = value_prefix(
         g,
-        [F.col(value_col).asc()],
+        value_col,
         weight="_cnt",
         out_prefix="_cum",
         offsets_from_source=True,

@@ -23,7 +23,7 @@ beyond-reference training-data operator set (SURVEY §7.3 M5).
 The module also holds the package's one distributed-rank kernel,
 `ordered_prefix`: exact ranks and running totals under any order
 without a single-partition window. Value orders sample their own cut
-points (`range_cut_points` → `range_bucket`); hash orders
+points (`value_prefix`: `range_cut_points` → `range_bucket`); hash orders
 (`hash_order_prefix` and the caps, budgets and exact splits built on
 it) bucket on the first hash byte.
 """
@@ -161,10 +161,13 @@ def hash_order_prefix(
     s = c.cast("string")
     if salt:
         s = F.concat(s, F.lit(salt))
+    # a NULL key hashes to NULL, which sorts first: bucket -1 keeps
+    # those rows ahead of every hash byte (a NULL bucket would miss the
+    # rejoin)
     out = ordered_prefix(
         df.withColumn("_h", F.md5(s)),
         [F.col("_h"), c],
-        F.conv(F.substring("_h", 1, 2), 16, 10),
+        F.coalesce(F.conv(F.substring("_h", 1, 2), 16, 10).cast("long"), F.lit(-1)),
         group_cols,
         out_pos=out_pos,
         weight=weight,
@@ -412,23 +415,6 @@ def range_bucket(value: str, cuts: Sequence[float], descending: bool = False) ->
     return F.expr(f"CAST({chain} AS BIGINT)")
 
 
-def _leading_key(order_cols: Sequence[Column]) -> tuple[str, bool]:
-    """(column name, descending) of the leading order key — the column
-    a value-order `ordered_prefix` samples its cut points from."""
-    node = order_cols[0]._jc.node()
-    descending = False
-    if node.getClass().getSimpleName() == "SortOrder":
-        descending = "Descending" in node.sortDirection().toString()
-        # range_bucket places NULL where Spark's default sort does
-        # (first asc, last desc); another placement would shift ranks
-        if ("NullsLast" if descending else "NullsFirst") not in node.nullOrdering().toString():
-            raise ValueError("leading order key needs Spark's default NULL placement")
-        node = node.child()
-    if node.getClass().getSimpleName() != "UnresolvedAttribute":
-        raise ValueError("sampled cut points need a plain column as the leading order key")
-    return node.sql(), descending
-
-
 def _bucket_axis(gcols: list[str]) -> WindowSpec:
     """Per-group window over the (group, bucket) side relation in
     bucket order. Its input is bounded by the bucketing: ≤ 64 value
@@ -446,7 +432,7 @@ def _bucket_axis(gcols: list[str]) -> WindowSpec:
 def ordered_prefix(
     df: DataFrame,
     order_cols: Sequence[Column],
-    bucket: Column | None = None,
+    bucket: Column,
     group_cols: Iterable[str] = (),
     out_pos: str | None = None,
     weight: Column | str | None = None,
@@ -476,11 +462,9 @@ def ordered_prefix(
     cost as any global sort — plus a tiny side plan. Ranks are EXACT
     however balanced the buckets are; balance only steers parallelism.
 
-    `bucket=None` is a VALUE order: cut points are sampled from the
-    leading order key (a plain column, asc or desc) by
-    `range_cut_points` — one bounded driver-side action over `df` — and
-    applied by `range_bucket`. `hash_order_prefix` passes the first
-    hash byte instead; a caller may pass any other monotone bucket.
+    `value_prefix` passes a VALUE order's sampled range bucket,
+    `hash_order_prefix` the first hash byte; a caller may pass any
+    other monotone, non-NULL bucket.
 
     The rejoin is null-safe: a NULL group key is a real group (the
     windows keep it), so its rows are ranked as their own group rather
@@ -521,9 +505,6 @@ def ordered_prefix(
     pay the full machinery per measure (the ks_test_sources shape:
     cumulative group-A count and cumulative total count in one pass)."""
     gcols = list(group_cols)
-    if bucket is None:
-        value, descending = _leading_key(order_cols)
-        bucket = range_bucket(value, range_cut_points(df, value), descending)
     b = df.withColumn("_bk", bucket.cast("long"))
     w = Window.partitionBy(*gcols, "_bk").orderBy(*order_cols)
     # row_number is ALWAYS computed (not only when out_pos is asked
@@ -599,6 +580,22 @@ def ordered_prefix(
     drop = ["_bk", "_obk", "_rn", *gkeys, *axis]
     drop += [cwn for _wc, _o, cwn, _woffn, _wsn in wlist]
     return out.drop(*drop)
+
+
+def value_prefix(
+    df: DataFrame,
+    value: str,
+    tiebreak: Sequence[str] = (),
+    descending: bool = False,
+    **kw,
+) -> DataFrame:
+    """`ordered_prefix` under the VALUE order (`value` asc or desc, then
+    `tiebreak`), bucketed by cut points sampled from `value`:
+    `range_cut_points` — one bounded driver-side action over `df` —
+    then `range_bucket`. `kw` passes through to `ordered_prefix`."""
+    lead = F.col(value).desc() if descending else F.col(value).asc()
+    bucket = range_bucket(value, range_cut_points(df, value), descending)
+    return ordered_prefix(df, [lead, *map(F.col, tiebreak)], bucket, **kw)
 
 
 def grouped_prefix_peak(

@@ -2138,9 +2138,9 @@ def weighted_median_value(spark: SparkSession, sf_dir: str) -> DataFrame:
     # of the axis (bounded heap); the group total weight rides the offsets
     # side relation, so the checkpoint has exactly two consumers — the
     # sample action that materializes it and the rank plan
-    c = S.ordered_prefix(
+    c = S.value_prefix(
         v,
-        [F.col("val")],
+        "val",
         group_cols=["flag"],
         weight="w",
         out_prefix="cw",
@@ -2396,9 +2396,9 @@ def trimmed_mean_price(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count(F.lit(1)).alias("cnt"))
         .localCheckpoint(eager=False)  # cut-points sample + prefix plan share one agg
     )
-    c = S.ordered_prefix(
+    c = S.value_prefix(
         v,
-        [F.col("val")],
+        "val",
         group_cols=["flag"],
         weight="cnt",
         out_prefix="cw",
@@ -2626,9 +2626,9 @@ def winsorized_mean_price(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count(F.lit(1)).alias("cnt"))
         .localCheckpoint(eager=False)
     )
-    c = S.ordered_prefix(
+    c = S.value_prefix(
         v,
-        [F.col("val")],
+        "val",
         group_cols=["flag"],
         weight="cnt",
         out_prefix="cw",
@@ -2697,9 +2697,10 @@ def monetary_unit_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     v = li.select(
         "l_orderkey", "l_linenumber", sl2("l_extendedprice").alias("cents")
     ).localCheckpoint(eager=False)  # cut-points sample + prefix plan share one scan
-    c = S.ordered_prefix(
+    c = S.value_prefix(
         v,
-        [F.col("l_orderkey"), F.col("l_linenumber")],
+        "l_orderkey",
+        ["l_linenumber"],
         weight="cents",
         out_prefix="cw",
         offsets_from_source=True,
@@ -2754,9 +2755,9 @@ def weighted_p90_value(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.sum(F.floor(F.col("l_quantity") + 0.5).cast("long")).alias("w"))
         .localCheckpoint(eager=False)
     )
-    c = S.ordered_prefix(
+    c = S.value_prefix(
         v,
-        [F.col("val")],
+        "val",
         group_cols=["flag"],
         weight="w",
         out_prefix="cw",
@@ -2823,9 +2824,9 @@ def iqr_outlier_fences(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count(F.lit(1)).alias("cnt"))
         .localCheckpoint(eager=False)  # quartile pass + outlier re-join share it
     )
-    c = S.ordered_prefix(
+    c = S.value_prefix(
         v,
-        [F.col("val")],
+        "val",
         group_cols=["flag"],
         weight="cnt",
         out_prefix="cw",
@@ -2889,9 +2890,9 @@ def orderkey_gap_islands(spark: SparkSession, sf_dir: str) -> DataFrame:
     from elective_waiting_times_pipeline_spark.operators import sampling as S
 
     o = load_table(spark, sf_dir, "orders").select(F.col("o_orderkey").alias("key"))
-    k = S.ordered_prefix(
+    k = S.value_prefix(
         o,
-        [F.col("key")],
+        "key",
         out_pos="pos",
         offsets_from_source=True,
     )

@@ -1999,9 +1999,10 @@ def zipf_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
     cw = Window.partitionBy("n").orderBy("_bk").rowsBetween(Window.unboundedPreceding, -1)
     cell = cell.withColumn("_boff", F.coalesce(F.sum("_cn").over(cw), F.lit(0)))
     per_n = cell.groupBy("n").agg(F.sum("_cn").alias("_gn"))
-    goff = S.ordered_prefix(
+    goff = S.value_prefix(
         per_n,
-        [F.col("n").desc()],
+        "n",
+        descending=True,
         weight="_gn",
         out_prefix="_cum",
     ).select("n", (F.col("_cum") - F.col("_gn")).alias("_goff"))
@@ -2099,9 +2100,11 @@ def curriculum_order(spark: SparkSession, sf_dir: str) -> DataFrame:
     scored = (
         X.unigram_logprob(docs).select("doc_id", "mean_logprob").localCheckpoint(eager=False)
     )
-    ranked = S.ordered_prefix(
+    ranked = S.value_prefix(
         scored,
-        [F.col("mean_logprob").desc(), F.col("doc_id")],
+        "mean_logprob",
+        ["doc_id"],
+        descending=True,
         out_pos="_r",
         out_total="_N",
         # scored is checkpointed: a second scan of it is cheaper than
@@ -2288,9 +2291,10 @@ def source_gini(spark: SparkSession, sf_dir: str) -> DataFrame:
     # partition per source (sources are few); the sampled cut points
     # keep partition depth ~corpus/64 at any density. Σ i·x rides
     # decimal(38,0): rank·n_chars sums pass int64 at petascale.
-    ranked = S.ordered_prefix(
+    ranked = S.value_prefix(
         docs,
-        [F.col("n_chars"), F.col("doc_id")],
+        "n_chars",
+        ["doc_id"],
         group_cols=["source"],
         out_pos="i",
         # 3-column raw scan: rescanning it for the offsets agg beats
@@ -2973,9 +2977,9 @@ def ks_test_sources(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.sum("a").alias("_ca"), F.count(F.lit(1)).alias("_cnt"))
         .localCheckpoint(eager=False)
     )
-    pre = S.ordered_prefix(
+    pre = S.value_prefix(
         g,
-        [F.col("v").asc()],
+        "v",
         weight="_ca",
         out_prefix="_c1",
         weights=[("_cnt", "_ct")],

@@ -692,9 +692,11 @@ def pareto_revenue_share(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.sum(sl2("o_totalprice")).alias("cents"))
         .localCheckpoint(eager=False)
     )
-    ranked = SA.ordered_prefix(
+    ranked = SA.value_prefix(
         spend,
-        [F.col("cents").desc(), F.col("o_custkey")],
+        "cents",
+        ["o_custkey"],
+        descending=True,
         out_pos="rnk",
         weight="cents",
         out_prefix="run",

@@ -4,13 +4,16 @@ layout independence of the distributed-rank formulation."""
 
 from __future__ import annotations
 
+import contextlib
 import math
+from unittest import mock
 
 import pandas as pd
 import pytest
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
+from elective_waiting_times_pipeline_spark.operators import sampling
 from elective_waiting_times_pipeline_spark.operators.rankstats import (
     doubled_avg_rank,
     mann_whitney_u,
@@ -28,11 +31,17 @@ def pairs(spark):
     return spark.createDataFrame(rows, "x double, y double")
 
 
+def cut_points(cuts):
+    """Context in which the rank kernel buckets by the explicit `cuts`
+    (None: the sampled cut points). On these small fixtures the sampled
+    cuts give every distinct value its own bucket; a coarse list puts
+    several values, and their ties, in one bucket."""
+    if cuts is None:
+        return contextlib.nullcontext()
+    return mock.patch.object(sampling, "range_cut_points", lambda _df, _value: list(cuts))
+
+
 def test_doubled_rank_matches_naive_window(spark, pairs):
-    got = {
-        r.x: r.r2
-        for r in doubled_avg_rank(pairs, "x", "r2").collect()
-    }
     naive = (
         pairs.select("x")
         .withColumn("_r", F.rank().over(Window.orderBy("x")))
@@ -41,11 +50,14 @@ def test_doubled_rank_matches_naive_window(spark, pairs):
         .distinct()
         .collect()
     )
-    assert got == {r.x: r.r2 for r in naive}
-    # doubled average ranks over n rows always sum (weighted) to n(n+1)
-    n = len(_XS)
-    cnt = {v: _XS.count(v) for v in set(_XS)}
-    assert sum(got[v] * cnt[v] for v in cnt) == n * (n + 1)
+    for cuts in (None, [0.5, 5.0]):
+        with cut_points(cuts):
+            got = {r.x: r.r2 for r in doubled_avg_rank(pairs, "x", "r2").collect()}
+        assert got == {r.x: r.r2 for r in naive}, cuts
+        # doubled average ranks over n rows always sum (weighted) to n(n+1)
+        n = len(_XS)
+        cnt = {v: _XS.count(v) for v in set(_XS)}
+        assert sum(got[v] * cnt[v] for v in cnt) == n * (n + 1)
 
 
 def test_spearman_matches_pandas(spark, pairs):
@@ -63,7 +75,8 @@ def test_spearman_matches_pandas(spark, pairs):
 
 def test_spearman_layout_independent(spark, pairs):
     a = spearman_rho(pairs.repartition(1), "x", "y").collect()[0]
-    b = spearman_rho(pairs.repartition(7), "x", "y").collect()[0]
+    with cut_points([2.0]):
+        b = spearman_rho(pairs.repartition(7), "x", "y").collect()[0]
     assert (a.n, a.spearman_rho) == (b.n, b.spearman_rho)
 
 
@@ -80,7 +93,6 @@ def test_mann_whitney_matches_hand_formula(spark):
     b_vals = [2.0, 3.0, 3.0, 7.0, 8.0]
     rows = [("a", v) for v in a_vals] + [("b", v) for v in b_vals]
     df = spark.createDataFrame(rows, "g string, v double")
-    got = mann_whitney_u(df, "v", "g", "a", "b").collect()[0]
 
     s = pd.Series(a_vals + b_vals)
     ranks = s.rank(method="average")
@@ -91,9 +103,12 @@ def test_mann_whitney_matches_hand_formula(spark):
     tsum = sum(c**3 - c for c in s.value_counts())
     var = na * nb / 12.0 * ((n + 1) - tsum / (n * (n - 1)))
     z = (u - na * nb / 2.0) / math.sqrt(var)
-    assert (got.n_a, got.n_b) == (na, nb)
-    assert got.u_stat == pytest.approx(u, abs=1e-9)
-    assert got.z_score == pytest.approx(z, abs=1e-6)
+    for cuts in (None, [4.0]):
+        with cut_points(cuts):
+            got = mann_whitney_u(df, "v", "g", "a", "b").collect()[0]
+        assert (got.n_a, got.n_b) == (na, nb), cuts
+        assert got.u_stat == pytest.approx(u, abs=1e-9), cuts
+        assert got.z_score == pytest.approx(z, abs=1e-6), cuts
 
 
 def test_mann_whitney_ignores_other_groups_and_nulls(spark):
@@ -109,11 +124,7 @@ def test_mann_whitney_ignores_other_groups_and_nulls(spark):
 # arbitrary explicit cut list (0 cuts = one bucket, up to 7 cuts) in
 # place of the sampled one — exactness must not depend on bucket balance
 # ---------------------------------------------------------------------------
-from unittest import mock
-
 from hypothesis import given, settings, strategies as st
-
-from elective_waiting_times_pipeline_spark.operators import sampling
 
 
 @settings(max_examples=10, deadline=None)
@@ -127,7 +138,7 @@ from elective_waiting_times_pipeline_spark.operators import sampling
 )
 def test_doubled_rank_property(spark, vals, cuts):
     df = spark.createDataFrame([(v,) for v in vals], "x double")
-    with mock.patch.object(sampling, "range_cut_points", lambda _df, _value: cuts):
+    with cut_points(cuts):
         got = {r.x: r.r2 for r in doubled_avg_rank(df, "x", "r2").collect()}
     # doubled tie-averaged rank from first principles
     import collections

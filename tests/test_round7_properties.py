@@ -117,13 +117,18 @@ def test_ordered_prefix_total_weight_matches_group_sums(spark, rows):
     """out_total_weight attaches each group's FULL weight sum to every
     row, and the running prefix reaches exactly that total on the last
     row of the (val, uid) order — checked against plain Python sums."""
-    from elective_waiting_times_pipeline_spark.operators.sampling import ordered_prefix
+    from elective_waiting_times_pipeline_spark.operators.sampling import (
+        ordered_prefix,
+        range_bucket,
+    )
 
     data = [(g, v, w, i) for i, (g, v, w) in enumerate(rows)]
     df = spark.createDataFrame(data, "g string, v long, w long, uid long")
+    # four coarse buckets over 0..50, so a bucket holds several values
     out = ordered_prefix(
         df,
         [F.col("v"), F.col("uid")],
+        range_bucket("v", [12.5, 25.0, 37.5]),
         group_cols=["g"],
         weight="w",
         out_prefix="cw",

@@ -222,19 +222,24 @@ def test_simhash_overcap_buckets_accounts_for_dropped_pairs(spark):
 @pytest.mark.parametrize("descending", [False, True])
 def test_range_bucket_nonfinite_cuts_are_total(spark, descending):
     """A cut list containing inf (possible from footer stats on a
-    double column containing inf) must neither render invalid SQL
-    (expr-string path) nor misdetect as uniform (closed form) — both
-    fall back to the Column chain, which is total."""
+    double column containing inf) must neither render invalid SQL in
+    the CASE-chain string (`inf` is not a SQL literal, so it renders as
+    a string cast) nor misdetect as uniform (closed form). Each value
+    lands in the bucket its sort position asks for: the count of cuts
+    strictly before it in sort direction, NULL first asc / last desc,
+    NaN (Spark's largest double) last asc / first desc."""
     cuts = [0.0, float("inf")]
     assert S._uniform_step(cuts) is None
     df = spark.createDataFrame(
-        [(0, -1.0), (1, 0.5), (2, float("inf")), (3, None)], "i long, v double"
+        [(0, -1.0), (1, 0.5), (2, float("inf")), (3, None), (4, float("nan"))],
+        "i long, v double",
     )
-    # str-name form exercises the (guarded) expr-string branch
     out = df.select("i", S.range_bucket("v", cuts, descending=descending).alias("b"))
     got = {r.i: r.b for r in out.collect()}
-    assert set(got) == {0, 1, 2, 3}
-    assert all(0 <= got[i] <= len(cuts) for i in got)
+    if descending:
+        assert got == {0: 2, 1: 1, 2: 0, 3: 2, 4: 0}
+    else:
+        assert got == {0: 0, 1: 1, 2: 1, 3: 0, 4: 2}
 
 
 @pytest.mark.parametrize("descending", [False, True])

@@ -377,8 +377,8 @@ def valued(spark):
 def test_ordered_prefix_rank_matches_global_window(spark, valued):
     from pyspark.sql import Window
 
-    # bucket=None: cut points sampled from the leading order key
-    out = S.ordered_prefix(valued, [F.col("v"), F.col("k")], out_pos="r", out_total="N")
+    # cut points sampled from v
+    out = S.value_prefix(valued, "v", ["k"], out_pos="r", out_total="N")
     naive = valued.withColumn("r", F.row_number().over(Window.orderBy("v", "k")))
     assert {(x.k, x.r) for x in out.collect()} == {(x.k, x.r) for x in naive.collect()}
     assert out.select("N").distinct().collect()[0].N == 1500
@@ -387,20 +387,20 @@ def test_ordered_prefix_rank_matches_global_window(spark, valued):
 def test_ordered_prefix_descending_and_weight(spark, valued):
     from pyspark.sql import Window
 
-    out = S.ordered_prefix(
-        valued,
-        [F.col("v").desc(), F.col("k")],
-        out_pos="r",
-        weight="w",
-        out_prefix="cw",
-    )
+    kw = dict(out_pos="r", weight="w", out_prefix="cw")
     w = Window.orderBy(F.col("v").desc(), "k")
     naive = valued.withColumn("r", F.row_number().over(w)).withColumn(
         "cw", F.sum("w").over(w.rowsBetween(Window.unboundedPreceding, 0))
     )
-    assert {(x.k, x.r, x.cw) for x in out.collect()} == {
-        (x.k, x.r, x.cw) for x in naive.collect()
-    }
+    want = {(x.k, x.r, x.cw) for x in naive.collect()}
+    # sampled cuts (one value per bucket here) and coarse explicit cuts
+    # (about nine values per bucket)
+    sampled = S.value_prefix(valued, "v", ["k"], descending=True, **kw)
+    coarse = S.ordered_prefix(
+        valued, [F.col("v").desc(), F.col("k")], S.range_bucket("v", [9.5, 18.5, 27.5], True), **kw
+    )
+    for out in (sampled, coarse):
+        assert {(x.k, x.r, x.cw) for x in out.collect()} == want
 
 
 def test_ordered_prefix_grouped_matches_per_group_window(spark, valued):
@@ -436,13 +436,11 @@ def test_range_bucket_degenerate_cuts_still_exact(spark, valued):
 def test_ordered_prefix_layout_independent(spark, valued):
     a = sorted(
         (x.k, x.r)
-        for x in S.ordered_prefix(valued, [F.col("v"), F.col("k")], out_pos="r").collect()
+        for x in S.value_prefix(valued, "v", ["k"], out_pos="r").collect()
     )
     b = sorted(
         (x.k, x.r)
-        for x in S.ordered_prefix(
-            valued.repartition(11), [F.col("v"), F.col("k")], out_pos="r"
-        ).collect()
+        for x in S.value_prefix(valued.repartition(11), "v", ["k"], out_pos="r").collect()
     )
     assert a == b
 
@@ -528,22 +526,24 @@ def test_range_bucket_null_keys_match_spark_sort_position(spark):
 def test_null_group_is_ranked_as_its_own_group(spark):
     # a NULL group key is a real group: every input row comes back and
     # the NULL rows are ranked (and summed) among themselves — under a
-    # value order (explicit and sampled cut points) and a hash order
+    # value order (explicit and sampled cut points) and a hash order,
+    # whose NULL hash keys (md5(NULL) is NULL) sort first in any group
     from pyspark.sql import Window
 
     df = spark.createDataFrame(
-        [(0, "a", 3.0, 1), (1, None, 1.0, 2), (2, "a", 2.0, 3), (3, None, 5.0, 4), (4, "b", 4.0, 5)],
-        "k long, g string, v double, w int",
+        [(0, "a", 3.0, 1, None), (1, None, 1.0, 2, None), (2, "a", 2.0, 3, "x2"),
+         (3, None, 5.0, 4, "x3"), (4, "b", 4.0, 5, "x4")],
+        "k long, g string, v double, w int, h string",
     )
     value = [F.col("v"), F.col("k")]
-    hashed = [F.md5(F.col("k").cast("string")), F.col("k")]
+    hashed = [F.md5("h"), F.col("h")]
     kw = dict(out_pos="r", weight="w", out_prefix="cw")
     cases = [
         ("value order, explicit cuts", value,
          lambda: S.ordered_prefix(df, value, S.range_bucket("v", [2.5]), ["g"], **kw)),
         ("value order, sampled cuts", value,
-         lambda: S.ordered_prefix(df, value, group_cols=["g"], **kw)),
-        ("hash order", hashed, lambda: S.hash_order_prefix(df, "k", ["g"], **kw)),
+         lambda: S.value_prefix(df, "v", ["k"], group_cols=["g"], **kw)),
+        ("hash order", hashed, lambda: S.hash_order_prefix(df, "h", ["g"], **kw)),
     ]
     for label, order, build in cases:
         w = Window.partitionBy("g").orderBy(*order)
@@ -555,15 +555,12 @@ def test_null_group_is_ranked_as_its_own_group(spark):
         assert len(got) == 5, f"{label}: {got}"
         assert out.columns == [*df.columns, "r", "cw"], label
         assert got == sorted((x.k, x.g, x.r, x.cw) for x in naive.collect()), label
-
-
-def test_sampled_cuts_reject_leading_keys_they_cannot_bucket(spark, valued):
-    # cut points are sampled from a plain column, and range_bucket
-    # places NULL where Spark's default sort does — anything else
-    # must pass an explicit bucket instead of silently misranking
-    for lead in (F.col("v").desc_nulls_first(), F.col("v").asc_nulls_last(), F.col("v") + 1):
-        with pytest.raises(ValueError):
-            S.ordered_prefix(valued, [lead, F.col("k")], out_pos="r")
+    # ungrouped, the NULL-key row keeps its row and sorts first too
+    one_null = df.where("k != 1")
+    naive = one_null.withColumn("position", F.row_number().over(Window.orderBy(*hashed)))
+    got = sorted((x.k, x.position) for x in S.hash_order_position(one_null, "h").collect())
+    assert got == sorted((x.k, x.position) for x in naive.collect())
+    assert (0, 1) in got
 
 
 def test_ungrouped_prefix_windows_are_all_partitioned(spark, valued):
@@ -571,9 +568,7 @@ def test_ungrouped_prefix_windows_are_all_partitioned(spark, valued):
     # a constant partition key, so no Window has an empty partition
     # spec (WindowExec's "No Partition Defined" warning stays for
     # genuinely unbounded windows) — under a non-nullable bucket too
-    out = S.ordered_prefix(
-        valued, [F.col("v"), F.col("k")], out_pos="r", weight="w", out_total="N"
-    )
+    out = S.value_prefix(valued, "v", ["k"], out_pos="r", weight="w", out_total="N")
     hashed = S.hash_order_position(valued, "k")
     for df in (out, hashed):
         plan = df._jdf.queryExecution().optimizedPlan()
