@@ -21,7 +21,8 @@ from elective_waiting_times_pipeline_spark.plans import catalog
 
 def entry(spark: SparkSession) -> DataFrame:
     """Flagship query on /root/testdata/sf0.001: the signature
-    histogram-quantile dashboard kernel over the lineitem fact analog."""
+    histogram-quantile kernel (`operators.histogram.band_stats`, the
+    same fold the RTT dashboard runs) over the lineitem fact analog."""
     return catalog.SPARK_QUERIES["histogram_quantile"](spark, "/root/testdata/sf0.001")
 
 

@@ -7,7 +7,6 @@ from elective_waiting_times_pipeline_spark.operators.asof import asof_join_backw
 from elective_waiting_times_pipeline_spark.operators.histogram import (
     band_histogram,
     histogram_stats,
-    wide_to_band_long,
 )
 from elective_waiting_times_pipeline_spark.operators.rangejoin import range_join
 from elective_waiting_times_pipeline_spark.operators.sampling import (
@@ -24,5 +23,4 @@ __all__ = [
     "histogram_stats",
     "range_join",
     "stratified_hash_sample",
-    "wide_to_band_long",
 ]

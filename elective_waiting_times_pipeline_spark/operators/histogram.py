@@ -5,60 +5,118 @@ given per-group weekly wait-band counts (band b covers (b-1, b] weeks),
   * quantile q  = (first band where running-total ≥ q × total) − 1,
     i.e. integer weeks waited at the q-th percentile of a PRE-BINNED
     distribution — NOT percentile_approx (different semantics);
-  * number ≤ T weeks   = sum of counts over bands 1..T;
+  * number ≤ T weeks   = sum of counts over bands up to T;
   * number ≥ T weeks   = total − that prefix sum;
   * rates = round(100 × count / total, 1);
   * small-sample suppression: all stats NULL when total < 20
-    (`2.R:233`, `2.R:277-298`).
+    (`2.R:233`, `2.R:277-298`); the total itself is never suppressed.
 
-Spark-first design: one hash aggregation collapses the fact rows to
-(group × band) — partial map-side combine makes this the only shuffle —
-then a window cumulative sum over the (tiny) per-group band axis, then
-one more hash agg extracts every quantile and threshold with
-conditional aggregates. No UDAF, no Python in the hot path; the whole
-kernel is whole-stage-codegen'd expressions, so it survives a 100 TB
-fact table as long as the group count does (band axis is ≤ ~110 rows
-per group after the first agg).
+One kernel, two entry points. `band_stats` works on rows that each
+hold a dense ARRAY<LONG> of band counts: it binds the total once, then
+one linear fold over the array carries the running total, the band
+index and one slot per quantile (the index where the running total
+first reaches q × total); threshold counts are folds over a prefix
+slice. No window, no UDAF, no Python in the hot path.
 
-Wide inputs (one column per band, like the RTT extract) need no melt:
-`plans/rtt.py` sums the band columns and folds running totals over an
-array. `wide_to_band_long` serves callers that want the long form.
+  * `plans/rtt.py` builds the array straight from the wide RTT extract
+    (one grouping-sets aggregate sums each band column) and calls
+    `band_stats` with first band 1.
+  * `histogram_stats` takes the long (group × band × cnt) form, e.g.
+    from `band_histogram`, and densifies each group in one aggregate
+    before calling `band_stats`.
 """
 
 from __future__ import annotations
 
 from typing import Iterable, Sequence
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+# 2.R:233 — statistics of a group with fewer patients are suppressed.
+MIN_TOTAL = 20
 
-def wide_to_band_long(
-    df: DataFrame,
-    gt_cols: Sequence[str],
-    keep_cols: Sequence[str],
-    band_col: str = "band",
-    cnt_col: str = "cnt",
+
+def _sum(arr: Column) -> Column:
+    return F.aggregate(arr, F.lit(0).cast("long"), lambda a, c: a + c)
+
+
+def band_stats(
+    cells: DataFrame,
+    counts: str,
+    first_band: int | Column,
+    quantiles: Sequence[float],
+    le_thresholds: Iterable[int],
+    ge_thresholds: Iterable[int],
+    half_even: bool,
 ) -> DataFrame:
-    """Melt wide `Gt.*` histogram columns into (band, cnt) rows.
+    """Quantiles + threshold counts/rates + suppression per row of
+    ``cells``, whose ``counts`` column is a dense ARRAY<LONG> of band
+    counts: element i is band ``first_band + i`` (an int, or a Column
+    when the band range differs per row).
 
-    Band index is 1-based in column order (Gt.00.To.01 → band 1).
-    NULL counts are dropped (R's `na.rm=TRUE` everywhere); the set of
-    populated bands varies by month (`2.R:141-145`) and the long form
-    absorbs that drift — absent band = absent row, not a schema change.
+    Returns ``cells`` plus the columns
+      total_patients,
+      weeks_{q*100} per quantile (INT, NULL-suppressed),
+      number_{T}_or_less / rate_{T}wks_or_less per ≤-threshold,
+      number_{T}_or_more / rate_{T}wks_or_more per ≥-threshold.
+
+    ``half_even=True`` rounds the rate columns half-to-even (R/Python
+    ``round`` semantics — needed for golden parity with the reference,
+    e.g. 26.25 → 26.2); False rounds HALF_UP like SQL-engine ROUND.
     """
-    pairs = F.array(
-        *[
-            # backticks: the advertised 'Gt.00.To.01...' names would
-            # otherwise parse as nested struct-field access
-            F.struct(F.lit(i + 1).alias(band_col), F.col(f"`{c}`").cast("long").alias(cnt_col))
-            for i, c in enumerate(gt_cols)
-        ]
+    first = first_band if isinstance(first_band, Column) else F.lit(first_band)
+    arr, total = F.col(counts), F.col("_total")
+    quantiles = list(quantiles)
+    le_thresholds, ge_thresholds = list(le_thresholds), list(ge_thresholds)
+
+    def prefix(thr: int) -> Column:
+        """Sum of the bands up to and including band ``thr``."""
+        return _sum(F.slice(arr, 1, F.greatest(F.lit(thr) - first + 1, F.lit(0))))
+
+    thresholds = sorted(set(le_thresholds) | set(ge_thresholds))
+    # The total and the prefix sums are bound as columns first: codegen
+    # does not CSE inside lambda bodies, so a total written inline in the
+    # fold would be recomputed at every step.
+    out = cells.select("*", _sum(arr).alias("_total"), *[prefix(t).alias(f"_le{t}") for t in thresholds])
+    # Each quantile's first crossing in ONE linear fold over the bands:
+    # the accumulator carries the running total, the 0-based band index
+    # and one slot per quantile that takes the index where the running
+    # total first reaches q·total (-1 until then).
+    slots = [f"w{k}" for k in range(len(quantiles))]
+    zero = F.struct(
+        F.lit(0).cast("long").alias("run"), F.lit(0).alias("i"), *[F.lit(-1).alias(w) for w in slots]
     )
-    exploded = df.select(*keep_cols, F.explode(pairs).alias("_bc"))
-    return exploded.select(
-        *keep_cols, F.col(f"_bc.{band_col}").alias(band_col), F.col(f"_bc.{cnt_col}").alias(cnt_col)
-    ).filter(F.col(cnt_col).isNotNull())
+
+    def step(acc: Column, n: Column) -> Column:
+        run = acc["run"] + n
+        return F.struct(
+            run.alias("run"),
+            (acc["i"] + 1).alias("i"),
+            *[
+                F.when((acc[w] < 0) & (run >= q * total), acc["i"]).otherwise(acc[w]).alias(w)
+                for w, q in zip(slots, quantiles)
+            ],
+        )
+
+    out = out.withColumn("_crossing", F.aggregate(arr, zero, step))
+    _round = F.bround if half_even else F.round
+
+    def keep(c: Column) -> Column:
+        return F.when(total >= MIN_TOTAL, c)
+
+    stats = [total.alias("total_patients")]
+    for w, q in zip(slots, quantiles):
+        stats.append(keep(first - 1 + F.col("_crossing")[w]).alias(f"weeks_{int(round(q * 100))}"))
+    for thr in le_thresholds:
+        n_le = F.col(f"_le{thr}")
+        stats.append(keep(n_le).alias(f"number_{thr}_or_less"))
+        stats.append(keep(_round(100.0 * n_le / total, 1)).alias(f"rate_{thr}wks_or_less"))
+    for thr in ge_thresholds:
+        n_ge = total - F.col(f"_le{thr}")
+        stats.append(keep(n_ge).alias(f"number_{thr}_or_more"))
+        stats.append(keep(_round(100.0 * n_ge / total, 1)).alias(f"rate_{thr}wks_or_more"))
+    return out.select(*[F.col(f"`{c}`") for c in cells.columns], *stats)
 
 
 def wide_to_band_array(
@@ -85,25 +143,11 @@ def band_array_to_wide(
     return df.select("*", *cols).drop(arr_col)
 
 
-def band_histogram(
-    df: DataFrame,
-    group_cols: Sequence[str],
-    band_col: str,
-    cnt_col: str | None = None,
-) -> DataFrame:
-    """Collapse fact rows to one row per (group × band).
-
-    If ``cnt_col`` is None each input row counts once (building the
-    histogram from raw per-item values); otherwise pre-binned counts
-    are summed. Either way this is a single shuffle with map-side
-    partial aggregation.
-    """
-    agg = F.count(F.lit(1)) if cnt_col is None else F.sum(cnt_col)
-    return df.groupBy(*group_cols, band_col).agg(agg.cast("long").alias("cnt"))
-
-
-def _suppress(total: Column, min_total: int, stat: Column) -> Column:
-    return F.when(total >= min_total, stat)
+def band_histogram(df: DataFrame, group_cols: Sequence[str], band_col: str) -> DataFrame:
+    """Collapse fact rows to one (group × band × cnt) row per band, each
+    input row counting once: a single shuffle with map-side partial
+    aggregation."""
+    return df.groupBy(*group_cols, band_col).agg(F.count(F.lit(1)).alias("cnt"))
 
 
 def histogram_stats(
@@ -114,56 +158,36 @@ def histogram_stats(
     quantiles: Iterable[float] = (0.50, 0.92, 0.95),
     le_thresholds: Iterable[int] = (18,),
     ge_thresholds: Iterable[int] = (52,),
-    min_total: int = 20,
     half_even: bool = False,
 ) -> DataFrame:
-    """Quantiles + threshold counts/rates + suppression from a
-    (group × band × cnt) histogram.
+    """`band_stats` per group of a long (group × band × cnt) histogram
+    with one row per (group, band), e.g. from `band_histogram`.
 
-    Output columns:
-      total_patients,
-      weeks_{q*100} per quantile (INT, NULL-suppressed),
-      number_{T}_or_less / rate_{T}wks_or_less per ≤-threshold,
-      number_{T}_or_more / rate_{T}wks_or_more per ≥-threshold.
+    One aggregate densifies each group: its lowest and highest band and
+    a band → cnt map, expanded over `sequence(lo, hi)` with absent bands
+    counted 0, so band ``lo + i`` is element i. The array length — and
+    the per-group fold — is O(max band − min band), not O(populated
+    bands): a group whose bands span a huge range pays for every band in
+    between. Rows with a NULL band are dropped (R's na.rm).
 
-    ``half_even=True`` rounds the rate columns half-to-even (R/Python
-    ``round`` semantics — needed for golden parity with the reference,
-    e.g. 26.25 → 26.2); the default HALF_UP matches SQL-engine ROUND.
+    Output: the group columns plus `band_stats`' columns.
     """
-    _round = F.bround if half_even else F.round
     grp = list(group_cols)
-    w_cum = (
-        Window.partitionBy(*grp)
-        .orderBy(band_col)
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-    w_all = Window.partitionBy(*grp)
-    cum = F.sum(cnt_col).over(w_cum)
-    total = F.sum(cnt_col).over(w_all)
-    enriched = hist.select(
-        *grp,
-        F.col(band_col).alias("_band"),
-        F.col(cnt_col).alias("_cnt"),
-        cum.alias("_cum"),
-        total.alias("_total"),
-    )
-
-    aggs: list[Column] = [F.max("_total").alias("total_patients")]
-    t = F.max("_total")
-    for q in quantiles:
-        name = f"weeks_{int(round(q * 100))}"
-        crossing = F.min(F.when(F.col("_cum") >= q * F.col("_total"), F.col("_band")))
-        aggs.append(_suppress(t, min_total, (crossing - 1).cast("int")).alias(name))
-    for thr in le_thresholds:
-        n_le = F.coalesce(F.sum(F.when(F.col("_band") <= thr, F.col("_cnt"))), F.lit(0))
-        aggs.append(_suppress(t, min_total, n_le.cast("long")).alias(f"number_{thr}_or_less"))
-        aggs.append(
-            _suppress(t, min_total, _round(100.0 * n_le / t, 1)).alias(f"rate_{thr}wks_or_less")
+    dense = (
+        hist.filter(F.col(band_col).isNotNull())
+        .groupBy(*grp)
+        .agg(
+            F.min(band_col).alias("_lo"),
+            F.max(band_col).alias("_hi"),
+            F.map_from_entries(F.collect_list(F.struct(band_col, F.col(cnt_col).cast("long")))).alias("_m"),
         )
-    for thr in ge_thresholds:
-        n_ge = t - F.coalesce(F.sum(F.when(F.col("_band") <= thr, F.col("_cnt"))), F.lit(0))
-        aggs.append(_suppress(t, min_total, n_ge.cast("long")).alias(f"number_{thr}_or_more"))
-        aggs.append(
-            _suppress(t, min_total, _round(100.0 * n_ge / t, 1)).alias(f"rate_{thr}wks_or_more")
+        .select(
+            *grp,
+            "_lo",
+            F.transform(
+                F.sequence("_lo", "_hi"), lambda b: F.coalesce(F.element_at("_m", b), F.lit(0).cast("long"))
+            ).alias("_counts"),
         )
-    return enriched.groupBy(*grp).agg(*aggs)
+    )
+    stats = band_stats(dense, "_counts", F.col("_lo"), quantiles, le_thresholds, ge_thresholds, half_even)
+    return stats.drop("_lo", "_counts")

@@ -131,7 +131,6 @@ def histogram_quantile(spark: SparkSession, sf_dir: str) -> DataFrame:
         quantiles=(0.50, 0.92, 0.95),
         le_thresholds=(18,),
         ge_thresholds=(36,),
-        min_total=20,
     )
 
 

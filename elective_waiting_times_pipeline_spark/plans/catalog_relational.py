@@ -2200,7 +2200,7 @@ def pareto_front_2d(spark: SparkSession, sf_dir: str) -> DataFrame:
         .rowsBetween(Window.unboundedPreceding, -1)
     )
     ranked = b.withColumn("_inmax", F.max("msz").over(win))
-    owin = Window.orderBy("_bk").rowsBetween(Window.unboundedPreceding, -1)
+    owin = S._bucket_axis([]).rowsBetween(Window.unboundedPreceding, -1)
     offsets = (
         b.groupBy("_bk")
         .agg(F.max("msz").alias("_bmax"))

@@ -3606,7 +3606,7 @@ def heaps_law_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy(F.expr("least((fd * 32) div n_total, 31)").alias("_bk"))
         .agg(F.count(F.lit(1)).cast("long").alias("vn"))
     )
-    w = Window.orderBy("_bk").rowsBetween(Window.unboundedPreceding, 0)
+    w = S._bucket_axis([]).rowsBetween(Window.unboundedPreceding, 0)
     axis = (
         db.join(vb, "_bk", "left")
         .select(

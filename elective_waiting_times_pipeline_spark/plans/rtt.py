@@ -11,8 +11,9 @@ histogram is aggregated while still wide, before any reshaping:
         GROUP BY GROUPING SETS ((geo,is),(geo),(is),()) × fixed keys
         SUM(_gt_b) per band b, SUM(unknown_start), SUM(total_all)
     ──▶ one row per grid cell: counts = [coalesce(SUM(_gt_b), 0)]
-        one linear fold over counts (no window): running total and,
-        per quantile, weeks.q = first band index with total ≥ q·nonmiss
+        operators.histogram.band_stats: one linear fold over counts
+        (no window) — running total and, per quantile, weeks.q = first
+        band index with total ≥ q·nonmiss; threshold counts and rates
 
 The ENGLAND pseudo-group (2.R:148-150: overwrite geo with a constant)
 and the independent∈{0,1,2=All} branch (2.R:344-353) are exactly the
@@ -47,6 +48,8 @@ from typing import Sequence
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from elective_waiting_times_pipeline_spark.operators.histogram import band_stats
 
 PATHWAY_MAP = {
     "Incomplete Pathways": "incomplete",
@@ -161,66 +164,30 @@ def _grid(
         F.sum("total_all").alias("total_all"),
         F.array(*[F.coalesce(F.sum(b), F.lit(0)) for b in bands]).alias("counts"),
     )
-    n_bands = len(bands)
-
-    def band_sum(first: int, last: int) -> F.Column:
-        """Sum of bands first..last (1-based, inclusive) as a fold over a slice."""
-        if last < first:
-            return F.lit(0).cast("long")
-        return F.aggregate(F.slice("counts", first, last - first + 1), F.lit(0).cast("long"), lambda a, c: a + c)
-
-    cells = cells.select(
-        *fixed, "geo", "independent", "unknown_start", "total_all", "counts",
-        band_sum(1, n_bands).alias("nonmiss"),
-        band_sum(1, min(18, n_bands)).alias("n18"),
-        band_sum(53, n_bands).alias("n52"),
-    )
-    # Each quantile's first crossing in ONE linear fold over the bands:
-    # the accumulator carries the running total, the 0-based band index
-    # and one slot per quantile that takes the index where the running
-    # total first reaches q·nonmiss (-1 until then, as
-    # array_position(cum >= q·nonmiss, true) - 1 gives when none does).
-    slots = [f"w{k}" for k in range(len(quantiles))]
-    zero = F.struct(
-        F.lit(0).cast("long").alias("run"), F.lit(0).alias("i"), *[F.lit(-1).alias(w) for w in slots]
-    )
-
-    def step(acc: F.Column, n: F.Column) -> F.Column:
-        run = acc["run"] + n
-        return F.struct(
-            run.alias("run"),
-            (acc["i"] + 1).alias("i"),
-            *[
-                F.when((acc[w] < 0) & (run >= q * F.col("nonmiss")), acc["i"]).otherwise(acc[w]).alias(w)
-                for w, q in zip(slots, quantiles)
-            ],
-        )
-
-    cells = cells.withColumn("crossing", F.aggregate("counts", zero, step))
-    nonmiss, n18, n52 = F.col("nonmiss"), F.col("n18"), F.col("n52")
+    # half_even: R round() is half-to-even (26.25 → 26.2, not 26.3)
+    stats = band_stats(cells, "counts", 1, quantiles, (18,), (52,), half_even=True)
+    n = F.col("total_patients")
     total = (
-        F.when(F.col("pathway").isin("completeadmitted", "completenonadmitted"), nonmiss + F.col("unknown_start"))
+        F.when(F.col("pathway").isin("completeadmitted", "completenonadmitted"), n + F.col("unknown_start"))
         .when(F.col("pathway") == "newRTT", F.col("total_all"))
-        .otherwise(nonmiss)
+        .otherwise(n)
     )
-    keep = (nonmiss >= 20) & (F.col("pathway") != "newRTT")
 
-    def _supp(c: F.Column) -> F.Column:
-        return F.when(keep, c)
+    def _supp(name: str) -> F.Column:
+        return F.when(F.col("pathway") != "newRTT", F.col(name))
 
-    return cells.select(
+    return stats.select(
         "monthyear",
         F.col("geo").alias(geo_col),
         "specialty",
         F.col("pathway").alias("type"),
         "independent",
         total.cast("long").alias("total.patients"),
-        _supp(n18).cast("long").alias("number.18.or.less"),
-        # bround: R round() is half-to-even (26.25 → 26.2, not 26.3)
-        _supp(F.bround(100.0 * n18 / nonmiss, 1)).alias("rate.18wks.or.less"),
-        _supp(n52).cast("long").alias("number.52.or.more"),
-        _supp(F.bround(100.0 * n52 / nonmiss, 1)).alias("rate.52wks.or.more"),
-        *[_supp(F.col("crossing")[w]).alias(f"weeks.{int(round(q * 100))}") for w, q in zip(slots, quantiles)],
+        _supp("number_18_or_less").alias("number.18.or.less"),
+        _supp("rate_18wks_or_less").alias("rate.18wks.or.less"),
+        _supp("number_52_or_more").alias("number.52.or.more"),
+        _supp("rate_52wks_or_more").alias("rate.52wks.or.more"),
+        *[_supp(f"weeks_{int(round(q * 100))}").alias(f"weeks.{int(round(q * 100))}") for q in quantiles],
     )
 
 

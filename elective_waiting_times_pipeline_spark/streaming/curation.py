@@ -41,7 +41,7 @@ from elective_waiting_times_pipeline_spark.operators.text import (
     token_count,
     tokens,
 )
-from elective_waiting_times_pipeline_spark.streaming.io import read_table_stream
+from elective_waiting_times_pipeline_spark.streaming.io import drain, read_table_stream
 
 DEFAULT_SPLITS = {"train": 0.8, "val": 0.1, "test": 0.1}
 
@@ -127,13 +127,4 @@ def run_curation_available_now(
     completion (availableNow) into a memory sink; returns the curated
     table. Stateless chain → plain append mode, no watermark."""
     raw = read_table_stream(spark, parquet_dir)
-    q = (
-        curate(raw, **kwargs)
-        .writeStream.outputMode("append")
-        .format("memory")
-        .queryName(query_name)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.sql(f"SELECT * FROM {query_name}")
+    return drain(curate(raw, **kwargs), query_name, "append")

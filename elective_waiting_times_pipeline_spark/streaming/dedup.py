@@ -19,7 +19,7 @@ from collections.abc import Sequence
 
 from pyspark.sql import DataFrame, SparkSession
 
-from elective_waiting_times_pipeline_spark.streaming.io import read_events_stream
+from elective_waiting_times_pipeline_spark.streaming.io import drain, read_events_stream
 
 
 def dedup_stream(
@@ -42,13 +42,4 @@ def run_dedup_available_now(
     """Drive streaming dedup over a parquet directory to completion
     (availableNow) into a memory sink; returns the deduped table."""
     raw = read_events_stream(spark, parquet_dir)
-    q = (
-        dedup_stream(raw, keys, delay=delay)
-        .writeStream.outputMode("append")
-        .format("memory")
-        .queryName(query_name)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.sql(f"SELECT * FROM {query_name}")
+    return drain(dedup_stream(raw, keys, delay=delay), query_name, "append")

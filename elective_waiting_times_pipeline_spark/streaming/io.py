@@ -9,7 +9,9 @@ Every streaming reader goes through `read_events_stream`, which infers
 the actual on-disk schema (a driver-side footer read — no data scan)
 and normalizes the event-time column to TIMESTAMP_LTZ, so the
 watermarked operators downstream see exactly one dtype regardless of
-which encoding the files carry.
+which encoding the files carry. `drain` is the matching exit every
+`run_*_available_now` harness uses: run to completion into a memory
+sink and read it back as a batch table.
 """
 
 from __future__ import annotations
@@ -66,3 +68,12 @@ def read_table_stream(spark: SparkSession, parquet_path: str) -> DataFrame:
 def read_events_stream(spark: SparkSession, parquet_path: str) -> DataFrame:
     """Events-table stream (ts normalized to TIMESTAMP_LTZ)."""
     return read_table_stream(spark, parquet_path)
+
+
+def drain(df: DataFrame, name: str, mode: str) -> DataFrame:
+    """Run a streaming frame to completion (availableNow) into a memory
+    sink called ``name`` with output mode ``mode``; return the sink's
+    table as a batch DataFrame."""
+    q = df.writeStream.outputMode(mode).format("memory").queryName(name).trigger(availableNow=True).start()
+    q.awaitTermination()
+    return df.sparkSession.sql(f"SELECT * FROM {name}")

@@ -17,7 +17,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from elective_waiting_times_pipeline_spark.streaming.io import read_events_stream
+from elective_waiting_times_pipeline_spark.streaming.io import drain, read_events_stream
 
 
 def attribution_join(
@@ -80,12 +80,4 @@ def run_attribution_available_now(
         return read_events_stream(spark, parquet_path)
 
     joined = attribution_join(stream(), stream(), within=within)
-    q = (
-        joined.writeStream.outputMode("append")
-        .format("memory")
-        .queryName(query_name)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.sql(f"SELECT * FROM {query_name}")
+    return drain(joined, query_name, "append")

@@ -171,7 +171,7 @@ def run_finalized_sessions_available_now(
     micro-batch (so timers observe advancing watermarks), to
     completion; returns the emitted session rows."""
     from elective_waiting_times_pipeline_spark.sources.readers import _ensure_session_confs
-    from elective_waiting_times_pipeline_spark.streaming.io import normalize_event_time
+    from elective_waiting_times_pipeline_spark.streaming.io import drain, normalize_event_time
 
     _ensure_session_confs(spark)
     schema = spark.read.parquet(parquet_path).schema
@@ -182,12 +182,4 @@ def run_finalized_sessions_available_now(
     )
     events = normalize_event_time(raw) if "ts" in raw.columns else raw
     out = finalized_sessions(events.select("user_id", "ts"), gap=gap, watermark=watermark)
-    q = (
-        out.writeStream.outputMode("append")
-        .format("memory")
-        .queryName(query_name)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.sql(f"SELECT * FROM {query_name}")
+    return drain(out, query_name, "append")

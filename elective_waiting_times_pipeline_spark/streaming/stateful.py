@@ -69,18 +69,11 @@ def run_stateful_available_now(
 ) -> DataFrame:
     """Drive the stateful operator over a parquet directory to
     completion; returns the final per-user rows (last update wins)."""
-    from elective_waiting_times_pipeline_spark.streaming.io import read_events_stream
+    from elective_waiting_times_pipeline_spark.streaming.io import drain, read_events_stream
 
     raw = read_events_stream(spark, parquet_path)
     out = running_user_totals(raw.select("user_id", "value"))
-    q = (
-        out.writeStream.outputMode("update")
-        .format("memory")
-        .queryName(query_name)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    drain(out, query_name, "update")
     return spark.sql(
         f"SELECT user_id, max_by(n_events, n_events) AS n_events, "
         f"max_by(total_value, n_events) AS total_value FROM {query_name} GROUP BY user_id"
@@ -182,18 +175,11 @@ def run_funnel_available_now(
     """Drive the streaming funnel over a parquet directory to
     completion; returns each user's FINAL funnel row (max n_seen =
     the last update, since every update sees strictly more events)."""
-    from elective_waiting_times_pipeline_spark.streaming.io import read_events_stream
+    from elective_waiting_times_pipeline_spark.streaming.io import drain, read_events_stream
 
     raw = read_events_stream(spark, parquet_path)
     out = streaming_funnel(raw.select("user_id", "event_type", "ts"))
-    q = (
-        out.writeStream.outputMode("update")
-        .format("memory")
-        .queryName(query_name)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    drain(out, query_name, "update")
     return spark.sql(
         f"SELECT user_id, max_by(t_view, n_seen) AS t_view, "
         f"max_by(t_click, n_seen) AS t_click, "

@@ -125,21 +125,10 @@ def run_store_dedup_available_now(
     (availableNow, memory sinks): returns (flagged docs, candidate
     pairs) as batch tables — the test/repro harness shape used by the
     other streaming modules."""
-    from elective_waiting_times_pipeline_spark.streaming.io import read_table_stream
+    from elective_waiting_times_pipeline_spark.streaming.io import drain, read_table_stream
 
     stream = read_table_stream(spark, docs_parquet)
-    out = []
-    for name, df in (
-        (f"{query_prefix}_exact", flag_known_exact(stream, fingerprint_store)),
-        (f"{query_prefix}_cand", near_dup_candidates_vs_store(stream, signature_store)),
-    ):
-        q = (
-            df.writeStream.outputMode("append")
-            .format("memory")
-            .queryName(name)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        out.append(spark.sql(f"SELECT * FROM {name}"))
-    return out[0], out[1]
+    return (
+        drain(flag_known_exact(stream, fingerprint_store), f"{query_prefix}_exact", "append"),
+        drain(near_dup_candidates_vs_store(stream, signature_store), f"{query_prefix}_cand", "append"),
+    )

@@ -18,7 +18,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from elective_waiting_times_pipeline_spark.streaming.io import read_events_stream
+from elective_waiting_times_pipeline_spark.streaming.io import drain, read_events_stream
 
 
 def windowed_event_counts(events: DataFrame, window: str = "1 hour", watermark: str = "2 hours") -> DataFrame:
@@ -45,15 +45,7 @@ def run_available_now(
     (availableNow) into a memory sink; returns the result table."""
     raw = read_events_stream(spark, parquet_path)
     agg = windowed_event_counts(raw, window=window)
-    q = (
-        agg.writeStream.outputMode("complete")
-        .format("memory")
-        .queryName(query_name)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.sql(f"SELECT * FROM {query_name}")
+    return drain(agg, query_name, "complete")
 
 
 def session_window_stats(events: DataFrame, gap: str = "30 minutes", watermark: str = "2 hours") -> DataFrame:
@@ -90,15 +82,7 @@ def run_sessions_available_now(
     completion (availableNow) into a memory sink."""
     raw = read_events_stream(spark, parquet_path)
     agg = session_window_stats(raw, gap=gap)
-    q = (
-        agg.writeStream.outputMode("complete")
-        .format("memory")
-        .queryName(query_name)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.sql(f"SELECT * FROM {query_name}")
+    return drain(agg, query_name, "complete")
 
 
 def windowed_ohlc(events: DataFrame, window: str = "1 hour", watermark: str = "2 hours") -> DataFrame:
@@ -139,12 +123,4 @@ def run_ohlc_available_now(
     (availableNow) into a memory sink; returns the result table."""
     raw = read_events_stream(spark, parquet_path)
     agg = windowed_ohlc(raw, window=window)
-    q = (
-        agg.writeStream.outputMode("complete")
-        .format("memory")
-        .queryName(query_name)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.sql(f"SELECT * FROM {query_name}")
+    return drain(agg, query_name, "complete")

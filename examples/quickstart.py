@@ -36,6 +36,7 @@ def main() -> None:
     print(f"orders: {orders.count()} rows, schema {[f.name for f in orders.schema.fields]}")
 
     # -- 2. the dashboard kernel (reference 2.R) ----------------------------
+    # histogram_quantile runs the same band_stats fold as plans/rtt.py
     stats = catalog.SPARK_QUERIES["histogram_quantile"](spark, SF)
     print("\nRTT dashboard statistics (histogram-derived quantiles):")
     stats.show(5, truncate=False)

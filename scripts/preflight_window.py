@@ -1,18 +1,25 @@
 #!/usr/bin/env python
-"""Pre-flight the driver's next correctness window: run the FIRST 50
-`__spark_entry__.queries()` keys at sf0.01 (the driver's scale) and
-compare each against its DuckDB oracle under a REPRESENTATION-SENSITIVE
-hash (pandas hash_pandas_object over name-sorted, value-sorted columns
-— the strictness class that caught survival_conversion's HUGEINT
-column when the dtype-normalizing suite comparator could not).
+"""Strict oracle check of `__spark_entry__.queries()` against their
+DuckDB oracles under a REPRESENTATION-SENSITIVE hash (pandas
+hash_pandas_object over name-sorted, value-sorted columns — the
+strictness class that caught survival_conversion's HUGEINT column when
+the dtype-normalizing suite comparator could not).
 
-Usage: python scripts/preflight_window.py [sf_dir] [n_window]
+Usage:
+  python scripts/preflight_window.py [--window N] [--sf DIR ...]
+      the FIRST N (default 50) queries() keys — the driver's next
+      correctness window;
+  python scripts/preflight_window.py q1 [q2 ...] [--sf DIR ...]
+      the named queries.
+--sf defaults to sf0.01 (the driver's scale) and may be repeated.
 Prints one line per query and a FAIL summary; exit 1 on any mismatch.
 """
 
 from __future__ import annotations
 
+import argparse
 import hashlib
+import importlib
 import os
 import sys
 
@@ -21,13 +28,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 import duckdb
 import pandas as pd
 
-SF = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
-N = int(sys.argv[2]) if len(sys.argv) > 2 else 50
-
-TABLES = [
-    "region", "nation", "customer", "supplier", "part",
-    "orders", "lineitem", "events", "documents", "embeddings",
-]
+from elective_waiting_times_pipeline_spark.sources.readers import TESTDATA_TABLES
 
 
 def strict_hash(df: pd.DataFrame) -> tuple[str, dict]:
@@ -47,47 +48,54 @@ def strict_hash(df: pd.DataFrame) -> tuple[str, dict]:
 
 
 def main() -> None:
-    import importlib
+    ap = argparse.ArgumentParser(description=__doc__.splitlines()[0])
+    ap.add_argument("names", nargs="*", help="queries to check (default: the first --window keys)")
+    ap.add_argument("--sf", action="append", help="lake directory (repeatable; default sf0.01)")
+    ap.add_argument("--window", type=int, default=50, help="window size when no names are given")
+    args = ap.parse_args()
+    sfs = args.sf or ["/root/testdata/sf0.01"]
 
     entry = importlib.import_module("__spark_entry__")
     from elective_waiting_times_pipeline_spark import get_spark
 
     spark = get_spark(app_name="preflight")
     qs, oracles = entry.queries(), entry.oracle_sql()
-    window = list(qs)[:N]
-
-    con = duckdb.connect()
-    for t in TABLES:
-        path = os.path.join(SF, f"{t}.parquet")
-        if os.path.exists(path):
-            con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{path}')")
+    names = args.names or list(qs)[: args.window]
 
     fails: list[str] = []
-    for name in window:
-        try:
-            sdf = qs[name](spark, SF).toPandas()
-        except Exception as e:
-            print(f"{name}: SPARK ERR {type(e).__name__}: {str(e)[:120]}")
-            fails.append(name)
-            continue
-        if name not in oracles:
-            print(f"{name}: rows-only ({len(sdf)} rows)")
-            continue
-        try:
-            odf = con.sql(oracles[name]).df()
-        except Exception as e:
-            print(f"{name}: ORACLE ERR {type(e).__name__}: {str(e)[:120]}")
-            fails.append(name)
-            continue
-        hs, ds = strict_hash(sdf)
-        ho, do = strict_hash(odf)
-        if hs == ho:
-            print(f"{name}: OK ({len(sdf)} rows)")
-        else:
-            print(f"{name}: HASH MISMATCH spark={ds} oracle={do} "
-                  f"rows {len(sdf)}/{len(odf)}")
-            fails.append(name)
-    print(f"\n{len(window) - len(fails)}/{len(window)} green")
+    for sf in sfs:
+        con = duckdb.connect()
+        for t in TESTDATA_TABLES:
+            path = os.path.join(sf, f"{t}.parquet")
+            if os.path.exists(path):
+                con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{path}')")
+        for name in names:
+            tag = f"{sf} {name}" if len(sfs) > 1 else name
+            try:
+                sdf = qs[name](spark, sf).toPandas()
+            except Exception as e:
+                print(f"{tag}: SPARK ERR {type(e).__name__}: {str(e)[:120]}")
+                fails.append(tag)
+                continue
+            if name not in oracles:
+                print(f"{tag}: rows-only ({len(sdf)} rows)")
+                continue
+            try:
+                odf = con.sql(oracles[name]).df()
+            except Exception as e:
+                print(f"{tag}: ORACLE ERR {type(e).__name__}: {str(e)[:120]}")
+                fails.append(tag)
+                continue
+            hs, ds = strict_hash(sdf)
+            ho, do = strict_hash(odf)
+            if hs == ho:
+                print(f"{tag}: OK ({len(sdf)} rows)")
+            else:
+                print(f"{tag}: HASH MISMATCH spark={ds} oracle={do} "
+                      f"rows {len(sdf)}/{len(odf)}")
+                fails.append(tag)
+    total = len(names) * len(sfs)
+    print(f"\n{total - len(fails)}/{total} green")
     if fails:
         print("FAILS:", fails)
         sys.exit(1)

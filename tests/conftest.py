@@ -5,6 +5,7 @@ import os
 import pytest
 
 from elective_waiting_times_pipeline_spark import get_spark
+from elective_waiting_times_pipeline_spark.sources.readers import TESTDATA_TABLES
 
 SF_SMOKE = "/root/testdata/sf0.001"
 SF_CORRECT = "/root/testdata/sf0.01"
@@ -30,9 +31,7 @@ def make_lake(spark, tmp_path, **override_tables):
 
     sf = str(tmp_path / "lake")
     (tmp_path / "lake").mkdir(exist_ok=True)
-    names = ("region", "nation", "customer", "supplier", "part", "orders",
-             "lineitem", "events", "documents", "embeddings")
-    for t in names:
+    for t in TESTDATA_TABLES:
         if t in override_tables:
             continue
         src = f"{SF_SMOKE}/{t}.parquet"

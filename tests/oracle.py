@@ -12,23 +12,12 @@ import math
 import duckdb
 import pandas as pd
 
-TABLES = (
-    "region",
-    "nation",
-    "customer",
-    "supplier",
-    "part",
-    "orders",
-    "lineitem",
-    "events",
-    "documents",
-    "embeddings",
-)
+from elective_waiting_times_pipeline_spark.sources.readers import TESTDATA_TABLES
 
 
 def duck_run(sql: str, sf_dir: str) -> pd.DataFrame:
     con = duckdb.connect()
-    for t in TABLES:
+    for t in TESTDATA_TABLES:
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
     return con.execute(sql).fetchdf()
 

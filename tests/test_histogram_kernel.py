@@ -11,7 +11,6 @@ from pyspark.sql import Row
 from elective_waiting_times_pipeline_spark.operators.histogram import (
     band_histogram,
     histogram_stats,
-    wide_to_band_long,
 )
 
 
@@ -44,6 +43,22 @@ def test_sparse_bands_skip_missing(spark):
     assert r.weeks_95 == 49
 
 
+def test_low_band_range_with_gap(spark):
+    # bands 0, 1 and 4 (2, 3 absent): band 0 is weeks −1. total 40;
+    # cum 12, 20, 20, 20, 40 over bands 0..4 → q=0.25 (target 10) at
+    # band 0 → weeks −1; q=0.5 (20) at band 1 → 0; q=0.95 (38) at
+    # band 4 → 3. ≤1 → 20, ≥2 → 40 − 20 = 20 (all in band 4).
+    r = _stats_for(spark, {0: 12, 1: 8, 4: 20}, quantiles=(0.25, 0.5, 0.95),
+                   le_thresholds=(1,), ge_thresholds=(2,))
+    assert r.total_patients == 40
+    assert (r.weeks_25, r.weeks_50, r.weeks_95) == (-1, 0, 3)
+    assert r.number_1_or_less == 20 and r.rate_1wks_or_less == 50.0
+    assert r.number_2_or_more == 20 and r.rate_2wks_or_more == 50.0
+    # a ≤-threshold below the lowest band counts nothing
+    r = _stats_for(spark, {3: 15, 5: 15}, quantiles=(0.5,), le_thresholds=(1,), ge_thresholds=(4,))
+    assert r.weeks_50 == 2 and r.number_1_or_less == 0 and r.number_4_or_more == 15
+
+
 def test_thresholds(spark):
     # 30 in band 10, 10 in band 60: ≤18 → 30 (75.0%), ≥52 → 10 (25.0%)
     r = _stats_for(spark, {10: 30, 60: 10}, le_thresholds=(18,), ge_thresholds=(52,))
@@ -62,16 +77,6 @@ def test_suppression_boundary(spark):
     assert r19.total_patients == 19  # total itself is not suppressed
     assert r20.weeks_50 == 0
     assert r21.weeks_50 == 0
-
-
-def test_wide_to_band_long(spark):
-    df = spark.createDataFrame(
-        [("a", 5, None, 7)], schema="k string, g1 long, g2 long, g3 long"
-    )
-    long = wide_to_band_long(df, ["g1", "g2", "g3"], ["k"]).collect()
-    got = {(r.k, r.band): r.cnt for r in long}
-    # NULL band dropped (na.rm), band index = 1-based column order
-    assert got == {("a", 1): 5, ("a", 3): 7}
 
 
 def test_band_histogram_counts_rows(spark):

@@ -17,13 +17,13 @@ import duckdb
 import pytest
 
 from elective_waiting_times_pipeline_spark.plans import catalog
-from tests.oracle import TABLES
+from elective_waiting_times_pipeline_spark.sources.readers import TESTDATA_TABLES
 
 
 @pytest.fixture(scope="module")
 def empty_con(sf_dir):
     con = duckdb.connect()
-    for t in TABLES:
+    for t in TESTDATA_TABLES:
         # Schema-only clone: same column names/types, zero rows.
         con.execute(
             f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet' WHERE false"

@@ -63,9 +63,11 @@ def test_cube_uses_expand_not_rescans(spark, sf_dir):
 def test_histogram_kernel_single_scan_and_partial_aggs(spark, sf_dir):
     assert _n_scans(_plan(spark, "histogram_quantile", sf_dir)) == 1
     simple = _plan(spark, "histogram_quantile", sf_dir, mode="simple")
-    # quantile extraction rides partial+final hash aggregation (the
-    # conditional-min crossing search is map-side combinable)
-    assert "partial_min" in simple and "partial_sum" in simple
+    # the band counts combine map-side before the shuffle, and the
+    # crossing search is a fold over each group's band array, not a
+    # window over the band rows
+    assert "partial_count" in simple
+    assert "Window" not in simple
 
 
 def test_minhash_single_corpus_scan(spark, sf_dir):
