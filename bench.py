@@ -13,12 +13,9 @@ from __future__ import annotations
 
 import json
 import os
-import sys
 import time
 
-sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
-
-from elective_waiting_times_pipeline_spark import get_spark
+from elective_waiting_times_pipeline_spark import get_spark, harness
 from elective_waiting_times_pipeline_spark.plans import catalog
 
 # Queries a large result set (row-level output) — force full execution
@@ -26,73 +23,48 @@ from elective_waiting_times_pipeline_spark.plans import catalog
 _COUNT_ONLY = {"filter_project", "window_share"}
 
 
-def headline_queries() -> list[str]:
-    # SPARK_GRAFT_QUERIES=a,b,c restricts the run (iterating on one
-    # query's perf without paying for the whole headline set); unknown
-    # names fail fast rather than silently benching nothing
-    override = os.environ.get("SPARK_GRAFT_QUERIES", "").strip()
-    if override:
-        names = [n.strip() for n in override.split(",") if n.strip()]
-        unknown = [n for n in names if n not in catalog.SPARK_QUERIES]
-        if unknown:
-            raise SystemExit(f"SPARK_GRAFT_QUERIES: unknown queries {unknown}")
-        return names
-    names = getattr(catalog, "HEADLINE", None)
-    return list(names) if names else sorted(catalog.SPARK_QUERIES)
-
-
 def main() -> None:
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    # selected before the session starts, so a typo in
+    # SPARK_GRAFT_QUERIES fails without paying for a JVM
+    names = harness.query_names()
+    sf_dir = harness.sf_dir()
     spark = get_spark(app_name="bench")
     timings: dict[str, float] = {}
     errors: dict[str, str] = {}
 
     def run(name: str) -> None:
         df = catalog.SPARK_QUERIES[name](spark, sf_dir)
-        df.count() if name in _COUNT_ONLY else df.collect()
-
-    def reclaim() -> None:
-        # Leaked localCheckpoint blocks from completed queries pile up
-        # in the block manager across a 40-query session and inflate
-        # later queries up to 3x (measured: weighted_median_value 2.2 s
-        # isolated vs 6.4 s after five checkpoint-heavy queries).
-        # Python gc drops the py4j refs, JVM gc lets the ContextCleaner
-        # unpersist the now-unreferenced RDDs — only garbage is
-        # reclaimed, no race with live plans. Runs OUTSIDE the timed
-        # window: each query is measured on a clean block manager, the
-        # way the driver runs queries independently.
-        import gc
-
-        gc.collect()
-        spark.sparkContext._jvm.System.gc()
+        harness.execute(df, "count" if name in _COUNT_ONLY else "collect")
 
     # Warmup pass: JIT, parquet footers, broadcast infra — so timings
     # measure steady-state query execution, not JVM bootstrap. Each
     # query is failure-isolated: one broken query records an error
-    # instead of zeroing the whole round's perf signal.
-    for name in headline_queries():
+    # instead of zeroing the whole round's perf signal. `reclaim` runs
+    # outside the timed window, so each query is measured on a clean
+    # block manager, the way the driver runs queries independently.
+    for name in names:
         try:
             run(name)
         except Exception:
             pass  # recorded (with message) in the timed passes below
-        reclaim()
+        harness.reclaim(spark)
     # Two timed passes, per-query MIN: the min is the standard
     # noise-robust estimator — bursty host contention inflates
     # individual samples but never deflates them.
     for _ in range(2):
-        for name in headline_queries():
+        for name in names:
             t0 = time.perf_counter()
             try:
                 run(name)
             except Exception as e:
                 if name not in timings:
                     errors[name] = f"{type(e).__name__}: {e}"[:500]
-                reclaim()
+                harness.reclaim(spark)
                 continue
             dt = round(time.perf_counter() - t0, 3)
             timings[name] = min(timings.get(name, dt), dt)
             errors.pop(name, None)
-            reclaim()
+            harness.reclaim(spark)
     total = round(sum(timings.values()), 3)
     # Machine-speed calibration: a fixed, data-independent JVM job
     # (codegen'd sum over a synthetic range). Same-code bench totals
@@ -124,11 +96,7 @@ def main() -> None:
         dt = time.perf_counter() - t0
         if i > 0:
             calib_sched = dt if calib_sched is None else min(calib_sched, dt)
-    sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
-    try:
-        sf_val = float(sf)
-    except ValueError:
-        sf_val = sf
+    sf_val = harness.sf_value(sf_dir)
     # Key order is tail-survivable BY CONTRACT: the driver's artifact
     # keeps only the last 2000 chars of this line, so the big per-query
     # dicts go FIRST and every headline/continuity scalar goes LAST —

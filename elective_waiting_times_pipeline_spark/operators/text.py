@@ -349,22 +349,6 @@ def lang_id_profile(df: DataFrame, text_col: str = "text", id_col: str = "doc_id
     return p.select(id_col, out.otherwise(F.lit("und")).alias("lang_pred"))
 
 
-def lang_id(col: Column | str) -> Column:
-    """Column-expression form of the language heuristic (per-row HOFs;
-    prefer lang_id_profile for corpus-scale scans)."""
-    toks = tokens(col)
-    n = F.size(toks)
-    ratios = {
-        lang: F.when(n > 0, stopword_hits(toks, lang) / n).otherwise(0.0)
-        for lang in STOPWORDS
-    }
-    best = F.greatest(*ratios.values())
-    out = F.when(best <= 0.0, F.lit("und"))
-    for lang in STOPWORDS:  # insertion order = precedence on ties
-        out = out.when(ratios[lang] == best, F.lit(lang))
-    return out.otherwise(F.lit("und"))
-
-
 def fingerprint_md5(col: Column | str) -> Column:
     """Normalization fingerprint: md5 of lowercased,
     whitespace-collapsed text — the exact-dedup key."""

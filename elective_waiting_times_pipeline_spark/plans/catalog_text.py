@@ -9,7 +9,7 @@ from pyspark.sql import functions as F
 
 from elective_waiting_times_pipeline_spark.operators import dedup as D
 from elective_waiting_times_pipeline_spark.operators import text as X
-from elective_waiting_times_pipeline_spark.plans.registry import query
+from elective_waiting_times_pipeline_spark.plans.registry import built_once, query
 from elective_waiting_times_pipeline_spark.sources.readers import load_table
 
 # DuckDB expression fragments mirroring operators/text.py exactly.
@@ -496,16 +496,12 @@ def dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
 # decision on top is one hash join. Recomputing the closure per
 # decision measured ~294 s at ×100 vs ~190 s for the shared
 # clustering alone — the store caps every decision at O(read of a
-# 16-byte/doc map). Build-once cache keyed on the source fingerprint,
-# exactly like catalog_vector's _ivf_index.
+# 16-byte/doc map). Built once per session by `registry.built_once`,
+# like catalog_vector's _ivf_index.
 # ---------------------------------------------------------------------------
-_CLUSTER_STORE_CACHE: dict[tuple, str] = {}
-
-
 def _cluster_store(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Session-scoped (id, cluster_id) store cache for the catalog's
-    decision queries: built once per (sf_dir, source fingerprint)
-    into a tempdir, atexit-cleaned, stale keys evicted.
+    """Session-scoped (id, cluster_id) store for the catalog's decision
+    queries, built once per (sf_dir, source fingerprint).
 
     PRODUCTION NOTE: this tempdir cache exists so the bench/driver —
     a fresh process per run — pays the closure build once per
@@ -521,26 +517,15 @@ def _cluster_store(spark: SparkSession, sf_dir: str) -> DataFrame:
         near_dup_clusters,
         write_cluster_store,
     )
-    from elective_waiting_times_pipeline_spark.plans.catalog_vector import (
-        _source_fingerprint,
-    )
 
-    key = (sf_dir, _source_fingerprint(f"{sf_dir}/documents.parquet"))
-    if key not in _CLUSTER_STORE_CACHE:
-        import atexit
-        import shutil
-        import tempfile
-
+    def build(root: str) -> None:
         docs = load_table(spark, sf_dir, "documents")
-        root = tempfile.mkdtemp(prefix="cluster_store_")
-        atexit.register(shutil.rmtree, root, ignore_errors=True)
         write_cluster_store(
             near_dup_clusters(docs, shingle_n=3, min_jaccard=0.1), f"{root}/clusters"
         )
-        for old in [k for k in _CLUSTER_STORE_CACHE if k[0] == sf_dir]:
-            shutil.rmtree(_CLUSTER_STORE_CACHE.pop(old), ignore_errors=True)
-        _CLUSTER_STORE_CACHE[key] = root
-    return spark.read.parquet(f"{_CLUSTER_STORE_CACHE[key]}/clusters")
+
+    root = built_once(("cluster_store", sf_dir), f"{sf_dir}/documents.parquet", build)
+    return spark.read.parquet(f"{root}/clusters")
 
 
 # Keep the min-id doc per near-dup cluster (SURVEY §7.5 —

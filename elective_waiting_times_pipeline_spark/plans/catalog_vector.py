@@ -7,7 +7,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from elective_waiting_times_pipeline_spark.operators import similarity as S
-from elective_waiting_times_pipeline_spark.plans.registry import query
+from elective_waiting_times_pipeline_spark.plans.registry import built_once, query
 from elective_waiting_times_pipeline_spark.sources.readers import load_table
 
 
@@ -255,47 +255,16 @@ def lsh_near_dup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 # query) pays that once: the probe then scans ~n_probe/n_cells of the
 # corpus via partition pruning (tests/test_skew_ivf_simhash.py asserts
 # both pruning and one-shot-equality of the persisted lifecycle).
-_IVF_INDEX_CACHE: dict[tuple, str] = {}
-
-
-def _source_fingerprint(path: str) -> tuple:
-    """Cheap invalidation key for the cached index: (size, mtime) of
-    the source parquet (or of every file under it when it is a
-    directory). Regenerated source data gets a fresh index instead of
-    stale vec_ids from the old snapshot."""
-    import os
-
-    if os.path.isdir(path):
-        parts = []
-        for root, _dirs, files in os.walk(path):
-            for f in sorted(files):
-                st = os.stat(os.path.join(root, f))
-                parts.append((f, st.st_size, st.st_mtime_ns))
-        return tuple(parts)
-    st = os.stat(path)
-    return (st.st_size, st.st_mtime_ns)
-
-
 def _ivf_index(spark: SparkSession, sf_dir: str, n_cells: int = 16):
-    key = (sf_dir, n_cells, _source_fingerprint(f"{sf_dir}/embeddings.parquet"))
-    if key not in _IVF_INDEX_CACHE:
-        import atexit
-        import shutil
-        import tempfile
-
+    def build(root: str) -> None:
         emb = load_table(spark, sf_dir, "embeddings")
         cents = S.ivf_fit(emb, n_cells=n_cells)
-        root = tempfile.mkdtemp(prefix="ivf_index_")
-        atexit.register(shutil.rmtree, root, ignore_errors=True)
         S.ivf_assign(emb, cents, cell_col="cell").write.partitionBy("cell").parquet(
             f"{root}/index"
         )
         cents.write.parquet(f"{root}/centroids")
-        # drop stale snapshots of the same (sf_dir, n_cells)
-        for old_key in [k for k in _IVF_INDEX_CACHE if k[:2] == (sf_dir, n_cells)]:
-            shutil.rmtree(_IVF_INDEX_CACHE.pop(old_key), ignore_errors=True)
-        _IVF_INDEX_CACHE[key] = root
-    root = _IVF_INDEX_CACHE[key]
+
+    root = built_once(("ivf_index", sf_dir, n_cells), f"{sf_dir}/embeddings.parquet", build)
     return spark.read.parquet(f"{root}/index"), spark.read.parquet(f"{root}/centroids")
 
 

@@ -8,6 +8,10 @@ documented in plans/catalog.py.
 
 from __future__ import annotations
 
+import atexit
+import os
+import shutil
+import tempfile
 from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
@@ -35,11 +39,42 @@ def query(name: str, oracle: str | None = None, headline: bool = False):
     return deco
 
 
-def dec2(c) -> F.Column:
-    """Cast to DECIMAL(18,2) — order-independent, but ~10× slower than
-    the scaled-long path below (boxed decimal arithmetic per row).
-    Kept for wide-decimal needs; hot aggregates use sl2/sum2."""
-    return (F.col(c) if isinstance(c, str) else c).cast("decimal(18,2)")
+# Build-once artifacts (the IVF index, the near-dup cluster store): key
+# -> (source fingerprint, tempdir). A fresh process per bench/driver run
+# pays each build once per session instead of once per query.
+_BUILT: dict[tuple, tuple[tuple, str]] = {}
+
+
+def _source_fingerprint(path: str) -> tuple:
+    """Cheap invalidation key: (size, mtime) of the source parquet, or of
+    every file under it when it is a directory."""
+    if os.path.isdir(path):
+        parts = []
+        for root, _dirs, files in os.walk(path):
+            for f in sorted(files):
+                st = os.stat(os.path.join(root, f))
+                parts.append((f, st.st_size, st.st_mtime_ns))
+        return tuple(parts)
+    st = os.stat(path)
+    return (st.st_size, st.st_mtime_ns)
+
+
+def built_once(key: tuple, source: str, build: Callable[[str], None]) -> str:
+    """Directory holding `build(dir)`'s output for `key`, built once per
+    session into an atexit-cleaned tempdir. A changed `source` (size or
+    mtime) rebuilds and deletes the stale dir, so regenerated data never
+    reads an artifact of the old snapshot."""
+    fp = _source_fingerprint(source)
+    hit = _BUILT.get(key)
+    if hit is not None and hit[0] == fp:
+        return hit[1]
+    root = tempfile.mkdtemp(prefix=f"{key[0]}_")
+    atexit.register(shutil.rmtree, root, ignore_errors=True)
+    build(root)
+    if hit is not None:
+        shutil.rmtree(hit[1], ignore_errors=True)
+    _BUILT[key] = (fp, root)
+    return root
 
 
 def sl2(c) -> F.Column:

@@ -49,11 +49,7 @@ def bucketed_join(
 def join_is_shuffle_free(df: DataFrame) -> bool:
     """True when the plan contains a SortMergeJoin with no Exchange
     feeding it (the bucketed co-location engaged)."""
-    import contextlib
-    import io
+    from elective_waiting_times_pipeline_spark.harness import explain
 
-    buf = io.StringIO()
-    with contextlib.redirect_stdout(buf):
-        df.explain("formatted")
-    plan = buf.getvalue()
+    plan = explain(df)
     return "SortMergeJoin" in plan and "Exchange hashpartitioning" not in plan

@@ -80,7 +80,7 @@ def _ensure_session_confs(spark: SparkSession) -> None:
         pass  # locked-down conf: proceed with whatever the session has
 
 
-def normalize_time_column(df: DataFrame, col: str) -> DataFrame:
+def normalize_time_column(df: DataFrame, col: str = "ts") -> DataFrame:
     """THE event-time normalization rules, shared by the batch
     (load_table) and streaming (streaming.io) edges so they can never
     diverge on the same files: long → raw nanos truncated to micros

@@ -19,7 +19,7 @@ from collections.abc import Sequence
 
 from pyspark.sql import DataFrame, SparkSession
 
-from elective_waiting_times_pipeline_spark.streaming.io import drain, read_events_stream
+from elective_waiting_times_pipeline_spark.streaming.io import drain, read_table_stream
 
 
 def dedup_stream(
@@ -41,5 +41,5 @@ def run_dedup_available_now(
 ) -> DataFrame:
     """Drive streaming dedup over a parquet directory to completion
     (availableNow) into a memory sink; returns the deduped table."""
-    raw = read_events_stream(spark, parquet_dir)
+    raw = read_table_stream(spark, parquet_dir)
     return drain(dedup_stream(raw, keys, delay=delay), query_name, "append")

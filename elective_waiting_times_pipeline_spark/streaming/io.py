@@ -5,11 +5,12 @@ one physical encoding (parquet TIMESTAMP(NANOS) read as long via
 `nanosAsLong`, and parquet TIMESTAMP(MICROS) without a timezone read as
 TIMESTAMP_NTZ). The batch edge normalizes in
 `sources.readers.load_table`; this module is the streaming counterpart.
-Every streaming reader goes through `read_events_stream`, which infers
+Every streaming reader goes through `read_table_stream`, which infers
 the actual on-disk schema (a driver-side footer read — no data scan)
-and normalizes the event-time column to TIMESTAMP_LTZ, so the
-watermarked operators downstream see exactly one dtype regardless of
-which encoding the files carry. `drain` is the matching exit every
+and normalizes the event-time column to TIMESTAMP_LTZ with the batch
+edge's own `normalize_time_column`, so the watermarked operators
+downstream see exactly one dtype regardless of which encoding the
+files carry. `drain` is the matching exit every
 `run_*_available_now` harness uses: run to completion into a memory
 sink and read it back as a batch table.
 """
@@ -17,22 +18,6 @@ sink and read it back as a batch table.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
-from pyspark.sql import types as T
-
-
-def normalize_event_time(df: DataFrame, col: str = "ts") -> DataFrame:
-    """Branch on the *actual* dtype of the event-time column — the
-    SAME rules as the batch edge (one shared normalizer in
-    sources.readers, so batch and streaming can never diverge on the
-    same files): long → raw nanos (truncate to micros), TIMESTAMP_NTZ
-    → cast (value-preserving under the UTC session tz), TIMESTAMP_LTZ
-    → passthrough."""
-    from elective_waiting_times_pipeline_spark.sources.readers import (
-        normalize_time_column,
-    )
-
-    return normalize_time_column(df, col)
 
 
 def read_table_stream(spark: SparkSession, parquet_path: str) -> DataFrame:
@@ -45,6 +30,7 @@ def read_table_stream(spark: SparkSession, parquet_path: str) -> DataFrame:
     exists."""
     from elective_waiting_times_pipeline_spark.sources.readers import (
         _ensure_session_confs,
+        normalize_time_column,
     )
 
     import os
@@ -62,12 +48,7 @@ def read_table_stream(spark: SparkSession, parquet_path: str) -> DataFrame:
         reader = reader.option("pathGlobFilter", tail)
         parquet_path = head or "."
     df = reader.load(parquet_path)
-    return normalize_event_time(df) if "ts" in df.columns else df
-
-
-def read_events_stream(spark: SparkSession, parquet_path: str) -> DataFrame:
-    """Events-table stream (ts normalized to TIMESTAMP_LTZ)."""
-    return read_table_stream(spark, parquet_path)
+    return normalize_time_column(df)
 
 
 def drain(df: DataFrame, name: str, mode: str) -> DataFrame:

@@ -17,7 +17,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from elective_waiting_times_pipeline_spark.streaming.io import drain, read_events_stream
+from elective_waiting_times_pipeline_spark.streaming.io import drain, read_table_stream
 
 
 def attribution_join(
@@ -77,7 +77,7 @@ def run_attribution_available_now(
     directory to completion (availableNow) into a memory sink."""
 
     def stream():
-        return read_events_stream(spark, parquet_path)
+        return read_table_stream(spark, parquet_path)
 
     joined = attribution_join(stream(), stream(), within=within)
     return drain(joined, query_name, "append")

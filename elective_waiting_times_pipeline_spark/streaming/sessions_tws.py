@@ -170,8 +170,11 @@ def run_finalized_sessions_available_now(
     """Drive the finalizer over a parquet directory, one file per
     micro-batch (so timers observe advancing watermarks), to
     completion; returns the emitted session rows."""
-    from elective_waiting_times_pipeline_spark.sources.readers import _ensure_session_confs
-    from elective_waiting_times_pipeline_spark.streaming.io import drain, normalize_event_time
+    from elective_waiting_times_pipeline_spark.sources.readers import (
+        _ensure_session_confs,
+        normalize_time_column,
+    )
+    from elective_waiting_times_pipeline_spark.streaming.io import drain
 
     _ensure_session_confs(spark)
     schema = spark.read.parquet(parquet_path).schema
@@ -180,6 +183,6 @@ def run_finalized_sessions_available_now(
         .option("maxFilesPerTrigger", max_files_per_trigger)
         .parquet(parquet_path)
     )
-    events = normalize_event_time(raw) if "ts" in raw.columns else raw
+    events = normalize_time_column(raw)
     out = finalized_sessions(events.select("user_id", "ts"), gap=gap, watermark=watermark)
     return drain(out, query_name, "append")

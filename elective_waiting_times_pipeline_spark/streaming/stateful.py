@@ -69,9 +69,9 @@ def run_stateful_available_now(
 ) -> DataFrame:
     """Drive the stateful operator over a parquet directory to
     completion; returns the final per-user rows (last update wins)."""
-    from elective_waiting_times_pipeline_spark.streaming.io import drain, read_events_stream
+    from elective_waiting_times_pipeline_spark.streaming.io import drain, read_table_stream
 
-    raw = read_events_stream(spark, parquet_path)
+    raw = read_table_stream(spark, parquet_path)
     out = running_user_totals(raw.select("user_id", "value"))
     drain(out, query_name, "update")
     return spark.sql(
@@ -175,9 +175,9 @@ def run_funnel_available_now(
     """Drive the streaming funnel over a parquet directory to
     completion; returns each user's FINAL funnel row (max n_seen =
     the last update, since every update sees strictly more events)."""
-    from elective_waiting_times_pipeline_spark.streaming.io import drain, read_events_stream
+    from elective_waiting_times_pipeline_spark.streaming.io import drain, read_table_stream
 
-    raw = read_events_stream(spark, parquet_path)
+    raw = read_table_stream(spark, parquet_path)
     out = streaming_funnel(raw.select("user_id", "event_type", "ts"))
     drain(out, query_name, "update")
     return spark.sql(

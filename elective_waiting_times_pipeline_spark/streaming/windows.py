@@ -18,7 +18,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from elective_waiting_times_pipeline_spark.streaming.io import drain, read_events_stream
+from elective_waiting_times_pipeline_spark.streaming.io import drain, read_table_stream
 
 
 def windowed_event_counts(events: DataFrame, window: str = "1 hour", watermark: str = "2 hours") -> DataFrame:
@@ -43,7 +43,7 @@ def run_available_now(
 ) -> DataFrame:
     """Drive the streaming agg over a parquet directory to completion
     (availableNow) into a memory sink; returns the result table."""
-    raw = read_events_stream(spark, parquet_path)
+    raw = read_table_stream(spark, parquet_path)
     agg = windowed_event_counts(raw, window=window)
     return drain(agg, query_name, "complete")
 
@@ -80,7 +80,7 @@ def run_sessions_available_now(
 ) -> DataFrame:
     """Drive session-window aggregation over a parquet directory to
     completion (availableNow) into a memory sink."""
-    raw = read_events_stream(spark, parquet_path)
+    raw = read_table_stream(spark, parquet_path)
     agg = session_window_stats(raw, gap=gap)
     return drain(agg, query_name, "complete")
 
@@ -121,6 +121,6 @@ def run_ohlc_available_now(
 ) -> DataFrame:
     """Drive the streaming OHLC over a parquet directory to completion
     (availableNow) into a memory sink; returns the result table."""
-    raw = read_events_stream(spark, parquet_path)
+    raw = read_table_stream(spark, parquet_path)
     agg = windowed_ohlc(raw, window=window)
     return drain(agg, query_name, "complete")

@@ -18,13 +18,12 @@ from __future__ import annotations
 import json
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F
 
-from elective_waiting_times_pipeline_spark import get_spark
+from elective_waiting_times_pipeline_spark import get_spark, harness
 from elective_waiting_times_pipeline_spark.operators.dedup import ngram_jaccard_pairs
 from elective_waiting_times_pipeline_spark.operators.text import tokens
 
@@ -33,7 +32,7 @@ SHINGLE_N = 3
 
 
 def main() -> None:
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/sf1lake/sf1")
+    sf_dir = harness.sf_dir("/root/sf1lake/sf1")
     caps = [int(a) for a in sys.argv[1:]] or [None, 256, 64]
     if None not in caps:
         caps = [None, *caps]
@@ -94,10 +93,7 @@ def main() -> None:
             F.sum(F.col("df") * F.col("df")).alias("fanout"),
             F.max("df").alias("max_df"),
         ).collect()[0]
-        pg.write.format("noop").mode("overwrite").save()  # warm
-        t0 = time.perf_counter()
-        pg.write.format("noop").mode("overwrite").save()
-        wall = round(time.perf_counter() - t0, 3)
+        wall = round(harness.warm_times(spark, lambda: harness.execute(pg, "noop"), 1)[0], 3)
         pairs = pg.select("id_a", "id_b").localCheckpoint()
         n_pairs = pairs.count()
         rec = None
@@ -119,8 +115,7 @@ def main() -> None:
         if plan_out and cap is not None:
             with open(plan_out, "w") as f:
                 f.write(f"== ngram_jaccard_pairs max_doc_freq={cap} @ {sf_dir} ==\n\n")
-                f.write(pg._sc._jvm.PythonSQLUtils.explainString(
-                    pg._jdf.queryExecution(), "formatted"))
+                f.write(harness.explain(pg))
     print(json.dumps(out))
 
 

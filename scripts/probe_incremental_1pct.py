@@ -23,16 +23,14 @@ import sys
 import tempfile
 import time
 
-HERE = os.path.dirname(os.path.abspath(__file__))
-sys.path.insert(0, os.path.dirname(HERE))
-sys.path.insert(0, HERE)
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 os.environ.setdefault("SPARK_GRAFT_TABLES", "documents")
 os.environ.setdefault("SPARK_GRAFT_SHIFT_TEXT", "1")
 
 from pyspark.sql import functions as F
 
-from elective_waiting_times_pipeline_spark import get_spark
+from elective_waiting_times_pipeline_spark import get_spark, harness
 from elective_waiting_times_pipeline_spark.operators.cluster import (
     near_dup_clusters,
     update_cluster_store,
@@ -44,29 +42,16 @@ from elective_waiting_times_pipeline_spark.operators.dedup import (
     ngram_jaccard_pairs_delta,
     verify_candidate_pairs,
 )
-from scale_probe import _exec, replicate
-
-
-def timed(fn, runs: int = 2) -> float:
-    """Warmup + min-of-N (the round-9 protocol: single-shot first
-    executions swung ~2× under host bursts)."""
-    import gc
-
-    best = None
-    for i in range(runs + 1):
-        t0 = time.perf_counter()
-        fn()
-        dt = time.perf_counter() - t0
-        if i > 0:
-            best = dt if best is None else min(best, dt)
-        gc.collect()
-    return round(best, 1)
+from scale_probe import replicate
 
 
 def main() -> None:
     factor = int(sys.argv[1]) if len(sys.argv) > 1 else 100
     pct = int(sys.argv[2]) if len(sys.argv) > 2 else 100  # 1-in-pct is "new"
     spark = get_spark(app_name="probe_incremental_1pct")
+    # warmup + min-of-2: single-shot first executions swung ~2x under
+    # host bursts
+    timed = lambda fn: round(min(harness.warm_times(spark, fn, 2)), 1)  # noqa: E731
     lake = tempfile.mkdtemp(prefix="lake_incr1pct_")
     try:
         replicate(spark, factor, lake)
@@ -86,17 +71,18 @@ def main() -> None:
         old_store = spark.read.parquet(f"{lake}/old_store")
 
         t_full = timed(
-            lambda: _exec(near_dup_clusters(docs, shingle_n=3, min_jaccard=0.1))
+            lambda: harness.execute(near_dup_clusters(docs, shingle_n=3, min_jaccard=0.1), "noop")
         )
         t_incr = timed(
-            lambda: _exec(
+            lambda: harness.execute(
                 update_cluster_store(
                     old_store,
                     ngram_jaccard_pairs_delta(
                         docs, new_ids, shingle_n=3, min_jaccard=0.1
                     ),
                     new_ids,
-                )
+                ),
+                "noop",
             )
         )
 
@@ -119,7 +105,7 @@ def main() -> None:
             verified = verify_candidate_pairs(
                 cand, docs, shingle_n=3, min_jaccard=0.1
             )
-            _exec(update_cluster_store(old_store, verified, new_ids))
+            harness.execute(update_cluster_store(old_store, verified, new_ids), "noop")
 
         t_sig = timed(sig_path)
         # recall of the sig path's verified pairs vs the exact delta

@@ -42,24 +42,16 @@ import os
 import shutil
 import sys
 import tempfile
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F
 
-from elective_waiting_times_pipeline_spark import get_spark
+from elective_waiting_times_pipeline_spark import get_spark, harness
 from elective_waiting_times_pipeline_spark.plans import catalog
 from elective_waiting_times_pipeline_spark.sources.readers import TESTDATA_TABLES, load_table
 
-BASE = "/root/testdata/sf0.1"
-# Force full execution through the noop sink: unlike collect() it never
-# measures py4j serialization of multi-million-row outputs, and unlike
-# count() it cannot let Catalyst prune away the computed columns of a
-# narrow projection (a count over a no-shuffle plan collapses to the
-# parquet row count, skipping the work being measured).
-def _exec(df) -> None:
-    df.write.format("noop").mode("overwrite").save()
+BASE = harness.DEFAULT_SF_DIR
 
 
 _LOWER = "abcdefghijklmnopqrstuvwxyz"
@@ -175,45 +167,19 @@ def replicate(spark, factor: int, out_dir: str) -> None:
             df.write.mode("overwrite").parquet(f"{out_dir}/{t}.parquet")
 
 
-def probe_queries() -> list[str]:
-    """Headline set by default; SPARK_GRAFT_QUERIES=a,b,c restricts the
-    probe to named queries (same contract as bench.py) so a new
-    operator's ×N evidence doesn't pay for the whole set."""
-    override = os.environ.get("SPARK_GRAFT_QUERIES", "").strip()
-    if override:
-        names = [n.strip() for n in override.split(",") if n.strip()]
-        unknown = [n for n in names if n not in catalog.SPARK_QUERIES]
-        if unknown:
-            raise SystemExit(f"SPARK_GRAFT_QUERIES: unknown queries {unknown}")
-        return names
-    return list(catalog.HEADLINE)
-
-
-def run(sf_dir: str, label: str) -> dict:
-    import gc
-
+def run(sf_dir: str, label: str, names: list[str]) -> dict:
     spark = get_spark(app_name="scale_probe")
     timings = {}
     errors = {}
-
-    def reclaim() -> None:
-        # drop leaked localCheckpoint blocks between queries (see
-        # bench.py::reclaim — measured up to 3x inflation without it);
-        # runs outside the timed window
-        gc.collect()
-        spark.sparkContext._jvm.System.gc()
-
-    for name in probe_queries():
-        fn = catalog.SPARK_QUERIES[name]
+    # noop sink: unlike collect() it never measures py4j serialization
+    # of multi-million-row outputs
+    for name in names:
+        probe = lambda: harness.execute(catalog.SPARK_QUERIES[name](spark, sf_dir), "noop")  # noqa: E731
         try:
-            _exec(fn(spark, sf_dir))  # warm
-            reclaim()
-            t0 = time.perf_counter()
-            _exec(fn(spark, sf_dir))
-            timings[name] = round(time.perf_counter() - t0, 2)
+            timings[name] = round(harness.warm_times(spark, probe, 1)[0], 2)
         except Exception as e:  # isolate: one blown query keeps the rest measurable
             errors[name] = f"{type(e).__name__}: {e}"[:300]
-        reclaim()
+            harness.reclaim(spark)
     out = {"label": label, "total_sec": round(sum(timings.values()), 2), "queries": timings}
     if errors:
         out["errors"] = errors
@@ -223,7 +189,8 @@ def run(sf_dir: str, label: str) -> dict:
 
 if __name__ == "__main__":
     factor = int(sys.argv[1]) if len(sys.argv) > 1 else 10
-    run(BASE, "sf0.1")
+    names = harness.query_names()
+    run(BASE, "sf0.1", names)
     tmp = tempfile.mkdtemp(prefix="scale_probe_")
     try:
         spark = get_spark(app_name="scale_probe")
@@ -238,6 +205,6 @@ if __name__ == "__main__":
             mode += " shifted-text"
         if os.environ.get("SPARK_GRAFT_SHIFT_KEYS", "").strip():
             mode += " shifted-keys"
-        run(tmp, f"sf0.1 x{factor}{mode}")
+        run(tmp, f"sf0.1 x{factor}{mode}", names)
     finally:
         shutil.rmtree(tmp, ignore_errors=True)

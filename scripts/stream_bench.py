@@ -29,7 +29,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F
 
-from elective_waiting_times_pipeline_spark import get_spark
+from elective_waiting_times_pipeline_spark import get_spark, harness
 from elective_waiting_times_pipeline_spark.streaming.curation import curate
 from elective_waiting_times_pipeline_spark.streaming.io import read_table_stream
 from elective_waiting_times_pipeline_spark.streaming.store_dedup import (
@@ -52,7 +52,7 @@ def _run_stream(df, name: str) -> float:
 
 
 def main() -> None:
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    sf_dir = harness.sf_dir()
     docs_path = f"{sf_dir}/documents.parquet"
     spark = get_spark(app_name="stream_bench")
 
@@ -88,11 +88,6 @@ def main() -> None:
             "sec": round(secs, 3),
             "rows_per_sec": round(n_docs / secs, 1),
         }
-    sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
-    try:
-        sf_val: float | str = float(sf)
-    except ValueError:
-        sf_val = sf
     print(
         json.dumps(
             {
@@ -100,7 +95,7 @@ def main() -> None:
                 "n_docs": n_docs,
                 "pipelines": results,
                 "unit": "sec",
-                "sf": sf_val,
+                "sf": harness.sf_value(sf_dir),
             }
         )
     )

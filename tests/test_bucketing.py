@@ -6,6 +6,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
+from elective_waiting_times_pipeline_spark.harness import explain
 from elective_waiting_times_pipeline_spark.sources.bucketing import (
     bucketed_join,
     join_is_shuffle_free,
@@ -44,11 +45,6 @@ def test_bucketed_join_equals_plain(spark, sf_dir, bucketed_tables):
 
 
 def test_bucketed_agg_skips_exchange(spark, bucketed_tables):
-    import contextlib, io
-
     lt, _ = bucketed_tables
     agg = spark.table(lt).groupBy("l_orderkey").agg(F.sum("l_quantity"))
-    buf = io.StringIO()
-    with contextlib.redirect_stdout(buf):
-        agg.explain("formatted")
-    assert "Exchange hashpartitioning" not in buf.getvalue()
+    assert "Exchange hashpartitioning" not in explain(agg)

@@ -7,6 +7,7 @@ from __future__ import annotations
 from pyspark.sql import Row
 from pyspark.sql import functions as F
 
+from elective_waiting_times_pipeline_spark.harness import plan_string
 from elective_waiting_times_pipeline_spark.operators import dedup as D
 from elective_waiting_times_pipeline_spark.operators import similarity as S
 from elective_waiting_times_pipeline_spark.sources.readers import load_table
@@ -429,7 +430,7 @@ def test_ivf_quantized_store_probe_recall_and_pruning(spark, tmp_path):
 
     got = S.ivf_quantized_topk(store, cents, qdf, k=10, n_probe=4)
     # partition pruning reaches the scan
-    plan = got._jdf.queryExecution().executedPlan().toString()
+    plan = plan_string(got)
     assert "cell" in plan
     got_ids = {r.vec_id for r in got.collect()}
     # recall vs the full quantized MIPS ranking (probing 4/8 cells)

@@ -16,6 +16,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from elective_waiting_times_pipeline_spark.harness import plan_string
 from elective_waiting_times_pipeline_spark.sources.readers import load_table, write_partitioned
 
 
@@ -44,7 +45,7 @@ def test_dpp_subquery_prunes_month_partitions(spark, sf_dir, tmp_path):
     joined = fact.join(dim, "ship_month").groupBy("ship_month").agg(
         F.count(F.lit(1)).alias("n")
     )
-    plan = joined._jdf.queryExecution().executedPlan().toString()
+    plan = plan_string(joined)
     assert "dynamicpruning" in plan.lower(), plan[:2000]
 
     # correctness: identical to the statically-filtered equivalent
@@ -67,7 +68,7 @@ def test_static_month_filter_prunes_at_plan_time(spark, sf_dir, tmp_path):
     one_month = fact.filter(F.col("ship_month") == "1995-06").agg(
         F.count(F.lit(1)).alias("n")
     )
-    scan = one_month._jdf.queryExecution().executedPlan().toString()
+    scan = plan_string(one_month)
     assert "PartitionFilters" in scan and "1995-06" in scan
     n = one_month.collect()[0].n
     manual = (

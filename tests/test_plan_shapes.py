@@ -5,21 +5,16 @@ loses them is a scale regression."""
 
 from __future__ import annotations
 
-import contextlib
-import io
 import re
 
 import pytest
 
+from elective_waiting_times_pipeline_spark.harness import explain
 from elective_waiting_times_pipeline_spark.plans import catalog
 
 
 def _plan(spark, name, sf_dir, mode="formatted"):
-    df = catalog.SPARK_QUERIES[name](spark, sf_dir)
-    buf = io.StringIO()
-    with contextlib.redirect_stdout(buf):
-        df.explain(mode)
-    return buf.getvalue()
+    return explain(catalog.SPARK_QUERIES[name](spark, sf_dir), mode)
 
 
 def _n_scans(plan: str) -> int:
@@ -259,10 +254,8 @@ def test_runtime_filter_bypasses_when_bucket_set_saturated(spark):
     fact = spark.createDataFrame([(i, i % 250) for i in range(500)], "row_id long, k long")
     dim = spark.createDataFrame([(i,) for i in range(200)], "d long")
     got = prefiltered_semi_join(fact, dim, "k", "d", m=64)
-    plan = io.StringIO()
-    with contextlib.redirect_stdout(plan):
-        got.explain("formatted")
-    assert "__rf_bucket" not in plan.getvalue()  # no prefilter stage
-    assert "LeftSemi" in plan.getvalue()
+    plan = explain(got)
+    assert "__rf_bucket" not in plan  # no prefilter stage
+    assert "LeftSemi" in plan
     want = fact.join(dim, fact.k == dim.d, "left_semi")
     assert sorted(r.row_id for r in got.collect()) == sorted(r.row_id for r in want.collect())

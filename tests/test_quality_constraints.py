@@ -3,11 +3,9 @@ the referential orphan check, and the one-scan plan guarantee."""
 
 from __future__ import annotations
 
-import contextlib
-import io
-
 from pyspark.sql import functions as F
 
+from elective_waiting_times_pipeline_spark.harness import explain
 from elective_waiting_times_pipeline_spark.operators import quality as Q
 
 
@@ -43,10 +41,7 @@ def test_dq_report_is_single_aggregation(spark):
     df = Q.dq_report(
         _df(spark), [Q.not_null("k"), Q.in_range("v", 0, 100)], unique_key=("k",)
     )
-    buf = io.StringIO()
-    with contextlib.redirect_stdout(buf):
-        df.explain("formatted")
-    plan = buf.getvalue()
+    plan = explain(df)
     # one scan; partial+final aggregation pairs, no per-rule jobs
     assert plan.count("Scan ExistingRDD") + plan.count("Scan parquet") <= 2
     assert "HashAggregate" in plan or "SortAggregate" in plan or "ObjectHashAggregate" in plan

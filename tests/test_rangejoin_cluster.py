@@ -9,6 +9,7 @@ import pytest
 from pyspark.sql import Row
 from pyspark.sql import functions as F
 
+from elective_waiting_times_pipeline_spark.harness import plan_string
 from elective_waiting_times_pipeline_spark.operators import cluster as C
 from elective_waiting_times_pipeline_spark.operators.rangejoin import range_join
 
@@ -83,7 +84,7 @@ def test_range_join_timestamps_no_nested_loop(spark):
     ).select("iv_id", F.col("s").cast("timestamp").alias("s"), F.col("e").cast("timestamp").alias("e"))
     out = range_join(points, ivs, "ts", "s", "e", strategy="binned", bin_width=600)
     assert sorted(r.p_id for r in out.collect()) == [2, 3]
-    plan = out._jdf.queryExecution().executedPlan().toString()
+    plan = plan_string(out)
     assert "BroadcastNestedLoopJoin" not in plan
 
 
@@ -215,5 +216,5 @@ def test_radius_join_stencil_equals_bruteforce(spark):
     # (cell, neighbor) match — no false negatives, verify kills the rest
     assert got == brute and len(brute) > 0
 
-    plan = radius_join(df, radius=1.5)._jdf.queryExecution().executedPlan().toString()
+    plan = plan_string(radius_join(df, radius=1.5))
     assert "CartesianProduct" not in plan and "BroadcastNestedLoopJoin" not in plan

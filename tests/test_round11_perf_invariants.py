@@ -10,6 +10,7 @@ import pytest
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
+from elective_waiting_times_pipeline_spark.harness import final_plan, plan_string
 from elective_waiting_times_pipeline_spark.operators import sampling as S
 
 
@@ -183,7 +184,7 @@ def test_repetition_features_row_local_parity_and_shape(spark):
     assert [f.dataType.simpleString() for f in got.schema.fields] == [
         f.dataType.simpleString() for f in ref.schema.fields
     ]
-    plan = got._jdf.queryExecution().executedPlan().toString()
+    plan = plan_string(got)
     assert "Exchange" not in plan
 
 
@@ -214,10 +215,7 @@ def test_symmetrize_single_subtree_and_parity(spark):
     )
     assert sorted(map(tuple, got.collect())) == sorted(map(tuple, ref.collect()))
     assert got.schema == ref.schema
-    got.write.format("noop").mode("overwrite").save()
-    # final plan only — AQE's toString repeats nodes in the trailing
-    # "== Initial Plan ==" section
-    plan = got._jdf.queryExecution().executedPlan().toString().split("== Initial Plan ==")[0]
+    plan = final_plan(got)
     # upstream agg (2 nodes) + the distinct (2 nodes) = 4; the union
     # form carries the upstream agg twice (6 total)
     assert plan.count("HashAggregate") == 4, plan

@@ -7,6 +7,7 @@ import re
 
 import pytest
 
+from elective_waiting_times_pipeline_spark.harness import final_plan
 from elective_waiting_times_pipeline_spark.plans import rtt
 from tests.rtt_fixture import STAT_COLS, make_fixture, oracle_stats, same_stat
 
@@ -104,8 +105,7 @@ def test_dashboard_plan_is_one_shuffle_without_melt_or_window(fact):
     sets aggregate's exchange is the plan's only shuffle."""
     rows, long = rtt.prepare_fact(fact)
     df = rtt.dashboard_stats(rows, long, geo_col="ccg")
-    df.collect()
-    final = df._jdf.queryExecution().executedPlan().toString().split("== Initial Plan ==")[0]
+    final = final_plan(df)
     nodes = re.findall(r"^[\s+\-:]*(?:\*\(\d+\) )?(\w+)", final, flags=re.M)
     assert "Expand" in nodes, final
     assert not [n for n in nodes if n == "Generate" or n.startswith("Window")], final

@@ -6,6 +6,7 @@ import pytest
 from pyspark.sql import Row
 from pyspark.sql import functions as F
 
+from elective_waiting_times_pipeline_spark.harness import plan_string
 from elective_waiting_times_pipeline_spark.operators import dedup as D
 from elective_waiting_times_pipeline_spark.operators import similarity as S
 from elective_waiting_times_pipeline_spark.operators.skew import salted_join_left, salted_sum
@@ -165,10 +166,7 @@ def test_ivf_lifecycle_persisted_index_matches_one_shot(spark, tmp_path):
         (r.vec_id, r.cosine_sim) for r in direct
     ]
 
-    plan = (
-        S.ivf_probe(indexed2, cents2, q, k=10, n_probe=3)
-        ._jdf.queryExecution().executedPlan().toString()
-    )
+    plan = plan_string(S.ivf_probe(indexed2, cents2, q, k=10, n_probe=3))
     import re
 
     m = re.search(r"PartitionFilters: \[([^\]]*)\]", plan)

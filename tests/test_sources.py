@@ -8,6 +8,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from elective_waiting_times_pipeline_spark.functions.names import check_names
+from elective_waiting_times_pipeline_spark.harness import explain, plan_string
 from elective_waiting_times_pipeline_spark.sources.edges import extract_links, write_csv
 from elective_waiting_times_pipeline_spark.sources.readers import read_csv_checked
 
@@ -115,9 +116,7 @@ def test_register_views_sql_face(spark, sf_dir):
     ).collect()[0]
     assert row.n > 0 and row.n_name.startswith("NATION_")
     # pushdown survives the view: a filtered scan still prunes
-    plan = spark.sql(
-        "SELECT l_orderkey FROM lineitem WHERE l_quantity < 2"
-    )._jdf.queryExecution().executedPlan().toString()
+    plan = plan_string(spark.sql("SELECT l_orderkey FROM lineitem WHERE l_quantity < 2"))
     assert "LessThan(l_quantity,2" in plan
 
 
@@ -169,9 +168,6 @@ def test_read_parquet_evolving_schema_generations(spark, tmp_path):
 
 
 def test_orc_roundtrip_partition_pruning_and_pushdown(spark, tmp_path):
-    import contextlib
-    import io
-
     from pyspark.sql import functions as F
 
     from elective_waiting_times_pipeline_spark.sources.edges import read_orc, write_orc
@@ -192,10 +188,7 @@ def test_orc_roundtrip_partition_pruning_and_pushdown(spark, tmp_path):
     assert {r.val for r in back.filter(F.col("k") == 7).collect()} == {"v7"}
     # pruning + pushdown are visible in the plan, as for parquet
     q = back.filter((F.col("part") == 2) & (F.col("k") > 100)).select("k")
-    buf = io.StringIO()
-    with contextlib.redirect_stdout(buf):
-        q.explain()
-    plan = buf.getvalue()
+    plan = explain(q, "simple")
     assert "PartitionFilters" in plan and "part" in plan
     assert "PushedFilters" in plan and "GreaterThan(k,100)" in plan
 
@@ -241,12 +234,7 @@ def test_orc_roundtrip_with_pushdown(spark, tmp_path):
     assert back.count() == nation.count()
     assert set(back.columns) == set(nation.columns)
     # predicate pushdown reaches the ORC scan
-    import contextlib, io
-
-    buf = io.StringIO()
-    with contextlib.redirect_stdout(buf):
-        back.filter(F.col("n_regionkey") == 1).explain("formatted")
-    assert "PushedFilters: [" in buf.getvalue()
+    assert "PushedFilters: [" in explain(back.filter(F.col("n_regionkey") == 1))
 
 
 def test_csv_tolerant_captures_malformed_rows(spark, tmp_path):

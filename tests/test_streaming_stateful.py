@@ -4,7 +4,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from elective_waiting_times_pipeline_spark.streaming.io import normalize_event_time
+from elective_waiting_times_pipeline_spark.sources.readers import normalize_time_column as normalize_event_time
 from elective_waiting_times_pipeline_spark.streaming.stateful import run_stateful_available_now
 
 
@@ -113,7 +113,7 @@ def test_streaming_funnel_exact_across_micro_batches(spark, sf_dir, tmp_path):
     from pyspark.sql import functions as F
 
     from elective_waiting_times_pipeline_spark.plans.catalog import SPARK_QUERIES
-    from elective_waiting_times_pipeline_spark.streaming.io import normalize_event_time
+    from elective_waiting_times_pipeline_spark.sources.readers import normalize_time_column as normalize_event_time
     from elective_waiting_times_pipeline_spark.streaming.stateful import streaming_funnel
 
     ev = normalize_event_time(spark.read.parquet(f"{sf_dir}/events.parquet"))
