@@ -21,32 +21,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 
-def zorder_key(x: Column | str, y: Column | str, bits: int = 16) -> Column:
-    """Interleave the low `bits` bits of two non-negative integer
-    columns: bit i of x lands at position 2i, bit i of y at 2i+1.
-    Values are masked to `bits` bits first — SILENTLY: keys above
-    2^bits alias to the same cell and locality degrades, so callers
-    must size `bits` to the key domain (or pre-bucket). bits can go up
-    to 31: the top interleaved bit lands at position 2*bits-1 <= 61,
-    clear of the sign bit for non-negative keys. 16+16 bits rank
-    65k x 65k cells — enough for file-level locality on bucketed
-    domains."""
-    if not 1 <= bits <= 31:
-        raise ValueError(
-            f"bits must be in [1, 31] (got {bits}): position 2*bits-1 must stay "
-            "clear of the long sign bit or negative keys wreck the range layout"
-        )
-    xc = (F.col(x) if isinstance(x, str) else x).cast("long")
-    yc = (F.col(y) if isinstance(y, str) else y).cast("long")
-    parts = []
-    for i in range(bits):
-        parts.append(F.shiftleft(F.shiftrightunsigned(xc, i).bitwiseAND(F.lit(1)), 2 * i))
-        parts.append(F.shiftleft(F.shiftrightunsigned(yc, i).bitwiseAND(F.lit(1)), 2 * i + 1))
-    return reduce(lambda a, b: a.bitwiseOR(b), parts)
-
-
 def zorder_key_sql(x: str, y: str, bits: int = 16) -> str:
-    """The identical interleave as a SQL expression (DuckDB oracle)."""
+    """`zorder_key_n([x, y], bits)` as a SQL expression (DuckDB oracle)."""
     parts = []
     for i in range(bits):
         parts.append(f"((({x} >> {i}) & 1) << {2 * i})")
@@ -55,15 +31,21 @@ def zorder_key_sql(x: str, y: str, bits: int = 16) -> str:
 
 
 def zorder_key_n(cols: "list[Column | str]", bits: int = 16) -> Column:
-    """N-column Morton interleave: bit i of column j lands at position
-    i*n + j. Total bits n*bits must stay <= 62 (clear of the sign
-    bit) — 3 columns x 16 bits or 4 x 12 are typical lake layouts.
-    Same masking caveat as zorder_key."""
+    """Morton interleave of the low `bits` bits of n >= 2 non-negative
+    integer columns: bit i of column j lands at position i*n + j (for
+    two columns, x at 2i and y at 2i+1). n*bits must stay <= 62, clear
+    of the sign bit, or negative keys wreck the range layout; 2 x 16
+    bits rank 65k x 65k cells, 3 x 16 or 4 x 12 are typical lake
+    layouts. Values are masked to `bits` bits SILENTLY: keys above
+    2^bits alias to the same cell and locality degrades, so callers
+    must size `bits` to the key domain (or pre-bucket)."""
     n = len(cols)
     if n < 2:
         raise ValueError("zorder_key_n needs >= 2 columns")
-    if n * bits > 62:
-        raise ValueError(f"{n} cols x {bits} bits = {n * bits} > 62 interleaved bits")
+    if bits < 1 or n * bits > 62:
+        raise ValueError(
+            f"{n} cols x {bits} bits: need bits >= 1 and at most 62 interleaved bits"
+        )
     cs = [(F.col(c) if isinstance(c, str) else c).cast("long") for c in cols]
     parts = []
     for i in range(bits):
@@ -85,7 +67,7 @@ def write_zordered(
     no global sort) and sort within each partition, so every file's
     (x, y) min/max stats cover a compact rectangle and scans filtered
     on either column skip most files."""
-    keyed = df.withColumn("_zkey", zorder_key(x, y, bits))
+    keyed = df.withColumn("_zkey", zorder_key_n([x, y], bits))
     (
         keyed.repartitionByRange(n_files, "_zkey")
         .sortWithinPartitions("_zkey")

@@ -111,13 +111,15 @@ def final_plan(df) -> str:
 def plan_counts(plan: str) -> dict:
     """Node counts of a final plan. Only the final section counts: a
     finalized AQE plan repeats every node under "== Initial Plan ==".
-    A shuffle is a hash/range/single-partition Exchange, so broadcasts
-    are counted apart; checkpointed subtrees show as RDD scans."""
+    A shuffle is a hash/range/single-partition Exchange node, so
+    broadcasts are counted apart, and so is a reuse, which Spark prints
+    as `ReusedExchange [...], Exchange hashpartitioning(...)`;
+    checkpointed subtrees show as RDD scans."""
     plan = plan.split(_INITIAL)[0]
     return {
         "parquet_scans": plan.count("FileScan parquet"),
         "rdd_scans": plan.count("Scan ExistingRDD"),
-        "shuffles": len(re.findall(r"Exchange (?:hash|range|Single)", plan)),
+        "shuffles": len(re.findall(r"^[ :+-]*Exchange (?:hash|range|Single)", plan, re.M)),
         "broadcasts": plan.count("BroadcastExchange"),
         "reused": plan.count("ReusedExchange"),
         "pushed": len(re.findall(r"PushedFilters: \[(?!\])", plan)),

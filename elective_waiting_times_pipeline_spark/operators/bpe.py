@@ -8,8 +8,8 @@ characters (with an end-of-word marker), repeatedly (1) count adjacent
 symbol pairs across the corpus, (2) merge the most frequent pair
 everywhere, leftmost-first within a word. Each round here is:
 
-    count:  explode adjacent pairs (operators/text.py::bigram_pairs'
-            shifted-slice shape) → one hash agg with map-side partials
+    count:  explode adjacent pairs (operators/text.py::bigram_pairs,
+            the `ngrams` shifted-slice kernel) → one hash agg with map-side partials
             — the corpus-sized stage, one scan per round
     argmax: deterministic top pair by (count DESC, left, right) —
             a 1-row TakeOrdered collect (bounded)

@@ -21,9 +21,8 @@ from pyspark.sql import functions as F
 from elective_waiting_times_pipeline_spark.operators.text import (
     fingerprint_md5,
     md5_prefix60,
-    shingles_from_tokens,
+    ngrams,
     tokens,
-    word_shingles,
 )
 
 
@@ -65,45 +64,6 @@ def exact_dup_groups(df: DataFrame, text_col: str = "text", id_col: str = "doc_i
     )
 
 
-def shingle_hashes(text_col: str, n: int = 3) -> F.Column:
-    """64-bit hashes of word n-grams WITHOUT materializing shingle
-    strings: hash each token once, then fold adjacent token hashes
-    (xxhash64 of the hash pair). String concat per shingle was the
-    minhash hot spot — longs through zip_with are ~an order of
-    magnitude cheaper and hash-equivalent for signature purposes.
-
-    zip_with pads the shorter side with NULLs (and xxhash64 silently
-    skips NULL args), which would fabricate n-1 spurious suffix
-    shingles — e.g. 'foo bar' and 'zzz bar' sharing a padded 'bar'
-    shingle — so the fold is sliced back to the true shingle count
-    (size - n + 1; empty when fewer than n tokens)."""
-    return hash_shingles_from_token_hashes(
-        F.transform(tokens(text_col), lambda t: F.xxhash64(t)), n
-    )
-
-
-def hash_shingles_from_token_hashes(h: F.Column, n: int = 3) -> F.Column:
-    """`shingle_hashes`' fold over an already-computed per-token hash
-    array. Pass a BOUND ATTRIBUTE on hot paths: the fold references
-    the hash array ~4 times (seed row + shifted slices + length), and
-    an inline transform(tokens(...), xxhash64) expression re-runs the
-    tokenize + per-token hashing per reference — neither Generate
-    evaluation nor codegen CSE collapses it (same pathology as
-    `shingles_from_tokens`, measured 2.2× on a corpus gram scan).
-    size(h) == size(tokens) (transform preserves length), so the
-    slice-back count is unchanged."""
-    out = h
-    cur = h
-    for _ in range(n - 1):
-        nxt = F.slice(cur, 2, F.greatest(F.size(cur) - 1, F.lit(0)))
-        out = F.zip_with(out, nxt, lambda a, b: F.xxhash64(a, b))
-        cur = nxt
-    count = F.size(h) - (n - 1)
-    return F.array_distinct(
-        F.when(count <= 0, F.array().cast("array<bigint>")).otherwise(F.slice(out, 1, count))
-    )
-
-
 def minhash_signatures(
     df: DataFrame,
     text_col: str = "text",
@@ -114,6 +74,12 @@ def minhash_signatures(
     """(id, signature ARRAY<BIGINT>[num_hashes]) via min over shingle
     hashes; hash_i(s) = xxhash64(i, shingle_hash) (fixed seeds →
     deterministic). Documents with no shingles are dropped.
+
+    A shingle's hash is the xxhash64 chain over its tokens' hashes,
+    xxhash64(xxhash64(h1, h2), h3) for n = 3: `ngrams` over the
+    per-token hash array with `F.xxhash64` as the join. Longs through
+    zip_with are ~an order of magnitude cheaper than building shingle
+    strings, and hash-equivalent for signature purposes.
 
     Physical shape: hash-chain shingles (no per-shingle string
     allocation) → explode longs → num_hashes flat xxhash64 columns →
@@ -128,7 +94,7 @@ def minhash_signatures(
         .select(
             F.col(id_col),
             F.explode(
-                hash_shingles_from_token_hashes(F.col("_th"), shingle_n)
+                F.array_distinct(ngrams(F.col("_th"), shingle_n, F.xxhash64))
             ).alias("_sh"),
         )
     )
@@ -140,38 +106,22 @@ def minhash_signatures(
     )
 
 
-def minhash_signature_expr(
-    text_col: str, num_hashes: int = 16, shingle_n: int = 3
-) -> F.Column:
-    """ROW-LOCAL MinHash signature: array_min over per-seed transforms
-    of the shingle-hash array — the identical values
-    `minhash_signatures` computes (min over the same multiset with the
-    same xxhash64(seed, shingle_hash) functions), as ONE expression
-    with no explode, no aggregation, no shuffle. That property is what
-    makes it usable on a STREAMING DataFrame (stateless append), and
-    ONLY there: measured at ×100, this form is 6.7× SLOWER in batch
-    (127 s vs 19 s) because each of the num_hashes transforms
-    re-evaluates the shingle hash-chain fold — codegen does not CSE
-    across lambda bodies — while the explode form computes shingles
-    once and streams longs through a map-side-combined agg. The batch
-    operator keeps its explode shape; equality of the two is
-    property-tested. A doc with fewer than `shingle_n` tokens has no
-    shingles → every component is NULL; filter on
-    `size(shingle_hashes(...)) > 0` first, mirroring the batch
-    operator's drop-empty semantics."""
-    return minhash_signature_from_hashes(
-        shingle_hashes(text_col, shingle_n), num_hashes
-    )
-
-
 def minhash_signature_from_hashes(sh: F.Column, num_hashes: int = 16) -> F.Column:
-    """`minhash_signature_expr` over an already-computed shingle-hash
-    array Column. Pass a BOUND ATTRIBUTE (e.g. via
-    `functions/barrier.py::bind_once`) on hot paths: each of the
-    `num_hashes` transforms references the array once, so an inline
-    expression argument re-runs the whole tokenize+hash-chain fold
-    per seed — codegen does not CSE across lambda bodies (measured on
-    the streaming store check: 13.0 s → 1.7 s for 5k docs once the
+    """ROW-LOCAL MinHash signature of one shingle-hash array: array_min
+    over per-seed transforms — the identical values `minhash_signatures`
+    computes (min over the same multiset with the same
+    xxhash64(seed, shingle_hash) functions), as ONE expression with no
+    explode, no aggregation, no shuffle. That is what makes it usable
+    on a STREAMING DataFrame (stateless append), and only there: in
+    batch it measured 6.7× slower at ×100 (127 s vs 19 s) than the
+    explode form. A doc with no shingles gets all-NULL components;
+    filter on `size(sh) > 0` first, as the batch operator drops it.
+
+    Pass a BOUND ATTRIBUTE (e.g. via `functions/barrier.py::bind_once`):
+    each of the `num_hashes` transforms references the array once, so
+    an inline expression argument re-runs the whole tokenize+hash-chain
+    fold per seed — codegen does not CSE across lambda bodies (measured
+    on the streaming store check: 13.0 s → 1.7 s for 5k docs once the
     array is bound)."""
 
     # factory, NOT a default-arg lambda: `lambda s, i=i: ...` has TWO
@@ -212,7 +162,7 @@ def minhash_signatures_replayable(
         F.col(id_col), tokens(text_col).alias("_toks")
     ).select(
         F.col(id_col),
-        F.explode(shingles_from_tokens(F.col("_toks"), shingle_n)).alias("_s"),
+        F.explode(ngrams(F.col("_toks"), shingle_n)).alias("_s"),
     )
     h60 = lambda i: md5_prefix60(F.concat_ws("|", F.lit(str(i)), F.col("_s")))
     mins = exploded.groupBy(id_col).agg(
@@ -449,7 +399,7 @@ def ngram_jaccard_pairs(
         F.col(id_col), tokens(text_col).alias("_toks")
     ).select(
         F.col(id_col),
-        F.array_distinct(shingles_from_tokens(F.col("_toks"), shingle_n)).alias("_arr"),
+        F.array_distinct(ngrams(F.col("_toks"), shingle_n)).alias("_arr"),
     ).select(
         F.col(id_col),
         F.size("_arr").alias("set_size"),
@@ -524,7 +474,7 @@ def ngram_jaccard_pairs_delta(
         F.col(id_col), tokens(text_col).alias("_toks")
     ).select(
         F.col(id_col),
-        F.array_distinct(shingles_from_tokens(F.col("_toks"), shingle_n)).alias("_arr"),
+        F.array_distinct(ngrams(F.col("_toks"), shingle_n)).alias("_arr"),
     ).select(
         F.col(id_col),
         F.size("_arr").alias("set_size"),
@@ -910,7 +860,7 @@ def prefix_filter_jaccard_pairs(
     ).select(
         "id",
         F.explode(
-            F.array_distinct(shingles_from_tokens(F.col("_toks"), shingle_n))
+            F.array_distinct(ngrams(F.col("_toks"), shingle_n))
         ).alias("shingle"),
     ).filter(F.col("shingle") != "").localCheckpoint(eager=False)
     dfreq = sh.groupBy("shingle").agg(F.count(F.lit(1)).alias("_df"))

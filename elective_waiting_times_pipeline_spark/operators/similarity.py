@@ -507,7 +507,7 @@ def quantize_int8(vec: Column) -> tuple[Column, Column]:
     # q = zeros with scale 0 (their dot with anything is a clean 0.0).
     # `s` must NOT be referenced inside the per-element lambda: an
     # outer expression captured by a higher-order-function lambda is
-    # re-evaluated PER ELEMENT (the documented bigram_pairs pathology),
+    # re-evaluated PER ELEMENT (the documented `ngrams` pathology),
     # so the previous form re-ran the max-abs fold ~2·dim times per
     # row — O(dim²) per vector. Hoisting the zero test out of the
     # lambda and feeding the scale through array_repeat evaluates the

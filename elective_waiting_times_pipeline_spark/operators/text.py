@@ -6,6 +6,10 @@ expressions (JVM-side, whole-stage codegen) — no Python UDFs.
 These extend the reference's string surface (SURVEY.md §2.9 F1) to the
 document-corpus domain; designed so one scan of a 100 TB `documents`
 table computes every feature (no per-feature rescans).
+
+`ngrams(arr, n, join)` is the one builder of n-adjacent-element
+windows: word n-grams, bigram pairs, and (over per-token hashes) the
+MinHash shingle-hash chain all come from it.
 """
 
 from __future__ import annotations
@@ -104,61 +108,41 @@ def token_count(col: Column | str) -> Column:
     return F.size(tokens(col)).cast("int")
 
 
-def bigram_pairs(toks: Column) -> Column:
-    """Adjacent token pairs as struct(x, y) — the one audited home of
-    the O(L) shifted-slice construction: zip_with over two shifted
-    slices. The tempting transform(slice, (t, i) ->
-    element_at(toks, i+2)) form is O(L²): element_at walks the array
-    per call, and a 10k-token document pays 10⁸ steps (measured 13 s
-    vs sub-second for one corpus pass at sf0.1). The slice length is
-    clamped at 0 so empty/one-token arrays yield [] instead of
-    aborting the job (Spark rejects a negative slice length at
-    runtime). Consumers needing "a b" strings wrap with `bigrams`;
-    consumers needing the tokens themselves (collocation PMI's
-    per-token count joins) take the struct directly."""
-    m = F.greatest(F.size(toks) - 1, F.lit(0))
-    return F.zip_with(
-        F.slice(toks, 1, m),
-        F.slice(toks, 2, m),
-        lambda a, b: F.struct(a.alias("x"), b.alias("y")),
-    )
+def ngrams(arr: Column, n: int, join=None) -> Column:
+    """The one window builder: element i of the result combines the n
+    adjacent elements arr[i..i+n-1] with `join` folded left, so
+    ngrams(["a", "b", "c"], 2) is ["a b", "b c"]. The default `join`
+    is the NULL-propagating `a || ' ' || b` (a NULL token yields a
+    NULL gram, the semantics of the SQL oracles' `||` chains);
+    `F.xxhash64` gives the MinHash hash chain, a struct gives pairs.
 
-
-def bigrams(toks: Column) -> Column:
-    """Adjacent token pairs as "a b" strings (see `bigram_pairs` for
-    the construction and its clamp/complexity notes)."""
-    return F.transform(bigram_pairs(toks), lambda p: F.concat_ws(" ", p["x"], p["y"]))
-
-
-def trigrams(toks: Column) -> Column:
-    """Adjacent token triples as "a b c" strings — same O(L) shifted-
-    slice construction (and 0-clamped slice length) as `bigrams`."""
-    m = F.greatest(F.size(toks) - 2, F.lit(0))
-    return F.zip_with(
-        F.zip_with(
-            F.slice(toks, 1, m), F.slice(toks, 2, m), lambda a, b: F.concat_ws(" ", a, b)
-        ),
-        F.slice(toks, 3, m),
-        lambda ab, c: F.concat_ws(" ", ab, c),
-    )
-
-
-def wordgrams(toks: Column, n: int) -> Column:
-    """Adjacent n-token windows as space-joined strings — the general
-    form of `bigrams`/`trigrams`, built by folding the same O(L)
-    shifted-slice zip (never per-element element_at, which is O(L²));
-    slice length clamps at 0 so short arrays yield []. Joined with
-    NULL-propagating concat (a NULL token yields a NULL gram), the
-    same semantics as the SQL oracles' `||` chains — concat_ws would
-    silently SKIP a NULL element and diverge from any oracle the
-    moment a token array carries one."""
-    if n < 2:
-        raise ValueError("wordgrams needs n >= 2")
-    m = F.greatest(F.size(toks) - (n - 1), F.lit(0))
-    acc = F.slice(toks, 1, m)
+    Built from n slices of length greatest(size - n + 1, 0) combined
+    by zip_with: O(L) per row. The tempting transform(slice,
+    (t, i) -> element_at(arr, i + k)) form is O(L²) on an inline
+    array (measured 13 s vs sub-second for one corpus pass at sf0.1).
+    The clamp makes a short array yield [] instead of aborting the job
+    on a negative slice length; a NULL array yields NULL. `arr` is
+    referenced 2n times (a size and a slice per position), so pass a
+    BOUND attribute (a prior `.select(tokens(...).alias("_toks"))`),
+    never an inline tokenize: neither Generate evaluation nor codegen
+    CSE collapses the repeats (measured 2.2× on a corpus gram scan);
+    SPARK-36718 keeps such a multiply-referenced alias uncollapsed."""
+    if n < 1:
+        raise ValueError(f"ngrams needs n >= 1 (got {n})")
+    if join is None:
+        join = lambda a, b: F.concat(a, F.lit(" "), b)  # noqa: E731
+    m = F.greatest(F.size(arr) - (n - 1), F.lit(0))
+    acc = F.slice(arr, 1, m)
     for i in range(2, n + 1):
-        acc = F.zip_with(acc, F.slice(toks, i, m), lambda a, b: F.concat(a, F.lit(" "), b))
+        acc = F.zip_with(acc, F.slice(arr, i, m), lambda a, b: join(a, b))
     return acc
+
+
+def bigram_pairs(toks: Column) -> Column:
+    """Adjacent token pairs as struct(x, y), for consumers that need the
+    tokens themselves (BPE pair counts, collocation PMI's per-token
+    count joins)."""
+    return ngrams(toks, 2, lambda a, b: F.struct(a.alias("x"), b.alias("y")))
 
 
 # GPT-2-style pre-tokenizer pattern (contractions | space?-letter-run |
@@ -383,37 +367,6 @@ def fingerprint_rolling(col: Column | str, prime: int = 1_000_000_007, base: int
     )
 
 
-def word_shingles(col: Column | str, n: int = 3) -> Column:
-    """Sliding word n-grams as strings; fewer than n tokens → [].
-
-    Built by zipping n shifted slices of the token array rather than a
-    transform-over-indices lambda: an outer expression referenced from
-    inside a higher-order-function lambda is re-evaluated per element
-    (the tokenize regex would run ~|tokens| times per row).
-
-    PERF NOTE: this inline form embeds the tokenize chain once per
-    slice (~n+2 references) and neither Generate evaluation nor
-    codegen CSE collapses them (measured 2.2× on a corpus gram scan).
-    Callers on a hot path should bind the token array to an attribute
-    in a prior select and use `shingles_from_tokens` — SPARK-36718
-    keeps that projection uncollapsed because the alias is multiply
-    referenced and expensive."""
-    return shingles_from_tokens(tokens(col), n)
-
-
-def shingles_from_tokens(toks: Column, n: int = 3) -> Column:
-    """`word_shingles` over an already-computed token-array Column —
-    pass a BOUND ATTRIBUTE (e.g. `F.col("_toks")` from a prior
-    `.select(tokens(...).alias("_toks"))`) so the n+2 references below
-    are cheap attribute reads instead of n+2 tokenize evaluations."""
-    count = F.size(toks) - (n - 1)
-    parts = [F.slice(toks, i + 1, count) for i in range(n)]
-    zipped = F.arrays_zip(*parts)
-    return F.when(count <= 0, F.array().cast("array<string>")).otherwise(
-        F.transform(zipped, lambda s: F.concat_ws(" ", *[s[str(i)] for i in range(n)]))
-    )
-
-
 def tfidf_top_terms(
     df: DataFrame,
     text_col: str = "text",
@@ -555,12 +508,12 @@ def repetition_features(
     ).select(
         F.col(id_col),
         F.col("_toks"),
-        F.sort_array(shingles_from_tokens(F.col("_toks"), n=2)).alias("_bgs"),
+        F.sort_array(ngrams(F.col("_toks"), 2)).alias("_bgs"),
     )
     # longest run of equal adjacent elements in the sorted array ==
     # max per-bigram count. prev starts NULL; bigram strings are never
-    # NULL (concat_ws), so eqNullSafe is false on the first element
-    # and the run counter starts at 1.
+    # NULL (split yields no NULL token), so eqNullSafe is false on the
+    # first element and the run counter starts at 1.
     run_t = "struct<prev:string,run:int,best:int>"
     top = F.aggregate(
         F.col("_bgs"),

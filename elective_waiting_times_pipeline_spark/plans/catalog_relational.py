@@ -726,7 +726,7 @@ from elective_waiting_times_pipeline_spark.functions.zorder import (
     """,
 )
 def zorder_locality(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from elective_waiting_times_pipeline_spark.functions.zorder import zorder_key
+    from elective_waiting_times_pipeline_spark.functions.zorder import zorder_key_n
 
     li = load_table(spark, sf_dir, "lineitem")
     return (
@@ -737,8 +737,8 @@ def zorder_locality(spark: SparkSession, sf_dir: str) -> DataFrame:
             "l_suppkey",
             # 25 bits/dim: covers part/supp keys to 33M without the
             # 16-bit default's aliasing (wider domains must widen bits
-            # or pre-bucket — zorder_key masks silently)
-            zorder_key("l_partkey", "l_suppkey", bits=25).alias("zkey"),
+            # or pre-bucket — zorder_key_n masks silently)
+            zorder_key_n(["l_partkey", "l_suppkey"], bits=25).alias("zkey"),
         )
         .orderBy("zkey", "l_orderkey", "l_linenumber")
         .limit(100)

@@ -682,7 +682,7 @@ def simhash_near_dup_pairs_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ---------------------------------------------------------------------------
 # Corpus n-gram statistics: top-20 bigrams by frequency. Spark side
-# builds bigrams with a single-level array transform (no shuffle until
+# builds bigrams with `ngrams` on the bound token array (no shuffle until
 # the count); ties broken lexicographically for determinism.
 # ---------------------------------------------------------------------------
 @query(
@@ -701,12 +701,10 @@ def simhash_near_dup_pairs_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def ngram_top_bigrams(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
-    # tokens bound to an attribute: `bigrams` references the token
-    # array 3× (size + 2 slices); inline tokens() would re-run the
-    # tokenize chain per reference (see shingles_from_tokens)
+    # tokens bound to an attribute (see `ngrams`)
     return (
         docs.select(X.tokens("text").alias("_toks"))
-        .select(F.explode(X.bigrams(F.col("_toks"))).alias("bigram"))
+        .select(F.explode(X.ngrams(F.col("_toks"), 2)).alias("bigram"))
         .groupBy("bigram")
         .agg(F.count(F.lit(1)).alias("n"))
         .orderBy(F.col("n").desc(), F.col("bigram"))
@@ -1128,9 +1126,8 @@ _SH3 = "unnest([w[i] || ' ' || w[i+1] || ' ' || w[i+2] for i in range(1, len(w) 
 )
 def contamination_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
-    # tokens bound per branch before the 5-reference shingle build
-    # (see shingles_from_tokens)
-    sh = X.shingles_from_tokens(F.col("_toks"), n=3)
+    # tokens bound per branch before the shingle build (see `ngrams`)
+    sh = X.ngrams(F.col("_toks"), 3)
     bench_sh = (
         docs.filter(F.col("source") == "src0")
         .select(X.tokens("text").alias("_toks"))
@@ -1400,12 +1397,10 @@ def bigram_backoff_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
     toks = docs.select("doc_id", X.tokens("text").alias("w")).filter(F.size("w") >= 1)
 
     def pairs(df: DataFrame) -> DataFrame:
-        n = F.size("w") - 1
-        z = F.arrays_zip(F.slice(F.col("w"), 1, n), F.slice(F.col("w"), 2, n))
         return (
             df.filter(F.size("w") >= 2)
-            .select("doc_id", F.explode(z).alias("z"))
-            .select("doc_id", F.col("z")["0"].alias("w1"), F.col("z")["1"].alias("w2"))
+            .select("doc_id", F.explode(X.bigram_pairs(F.col("w"))).alias("p"))
+            .select("doc_id", F.col("p.x").alias("w1"), F.col("p.y").alias("w2"))
         )
 
     train = toks.filter(F.col("doc_id") % 2 == 0)
@@ -2567,7 +2562,7 @@ def split_leakage_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 def boilerplate_gram_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     grams = docs.select("doc_id", X.tokens("text").alias("_toks")).select(
-        "doc_id", F.explode(X.trigrams(F.col("_toks"))).alias("gram")
+        "doc_id", F.explode(X.ngrams(F.col("_toks"), 3)).alias("gram")
     )
     dfreq = grams.groupBy("gram").agg(F.countDistinct("doc_id").alias("dfc"))
     boiler = F.when(F.col("dfc") >= 3, F.lit(1)).otherwise(F.lit(0))
@@ -2870,11 +2865,9 @@ def heavy_hitters_cms(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     docs = load_table(spark, sf_dir, "documents")
-    # Tokens bound to an attribute: `bigrams` references the token
-    # array 3× and an inline tokens() re-runs the tokenize chain per
-    # reference (see shingles_from_tokens).
+    # Tokens bound to an attribute (see `ngrams`).
     bg = docs.select(X.tokens("text").alias("_toks")).select(
-        F.explode(X.bigrams(F.col("_toks"))).alias("bigram")
+        F.explode(X.ngrams(F.col("_toks"), 2)).alias("bigram")
     )
     # ONE corpus pass. Every occurrence of a bigram shares its
     # cms_est and the corpus total, so the whole query — sketch
@@ -3356,8 +3349,8 @@ def duplicate_ngram_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
     # agg and the per-doc join) re-derive them from the scan — two
     # corpus scans beat materializing a >1×-corpus-sized gram relation
     # to local disk (SCALE.md carries the ×100 measurement).
-    # Tokens are BOUND to an attribute first: `wordgrams` references
-    # its token array ~7 times (size + n shifted slices), and an
+    # Tokens are BOUND to an attribute first: `ngrams` references
+    # its token array 10 times (a size and a slice per position), and an
     # inline tokens() expression is re-evaluated per reference —
     # neither Generate eval nor codegen CSE collapses it (measured
     # 1.35 s → 0.61 s for this scan at sf0.1). SPARK-36718 keeps the
@@ -3372,7 +3365,7 @@ def duplicate_ngram_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
     # per-doc aggregate is a hash agg over matching occurrences
     # instead of a corpus-wide SortAggregate forced by min(source).
     g = docs.select("doc_id", X.tokens("text").alias("_toks")).select(
-        "doc_id", F.explode(X.wordgrams(F.col("_toks"), 5)).alias("gram")
+        "doc_id", F.explode(X.ngrams(F.col("_toks"), 5)).alias("gram")
     )
     dup_grams = (
         g.groupBy("gram").agg(F.count(F.lit(1)).alias("n")).filter(F.col("n") >= 2)

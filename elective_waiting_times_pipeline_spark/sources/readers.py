@@ -230,18 +230,3 @@ def compact_partitions(
         .coalesce(target_files)
     )
     overwrite_partitions(df, path, (partition_col,))
-
-
-def read_orc(spark: SparkSession, path: str, schema: str | None = None) -> DataFrame:
-    """ORC scan (columnar sibling of the parquet path — same pushdown
-    and pruning semantics through the native reader). Explicit schema
-    recommended at scale for the same reasons as read_jsonl."""
-    reader = spark.read
-    if schema is not None:
-        reader = reader.schema(schema)
-    return reader.orc(path)
-
-
-def write_orc(df: DataFrame, path: str, mode: str = "overwrite") -> None:
-    """ORC sink, symmetric with the parquet writers."""
-    df.write.mode(mode).orc(path)

@@ -29,6 +29,19 @@ from pyspark.sql.streaming import StreamingQuery
 from elective_waiting_times_pipeline_spark.sources.readers import overwrite_partitions
 
 
+def _start(source: DataFrame, fn, checkpoint_path: str, query_name: str) -> StreamingQuery:
+    """Start `source` as an availableNow query that hands each
+    micro-batch to `fn(batch, batch_id)`, checkpointed at
+    `checkpoint_path`."""
+    return (
+        source.writeStream.foreachBatch(fn)
+        .option("checkpointLocation", checkpoint_path)
+        .queryName(query_name)
+        .trigger(availableNow=True)
+        .start()
+    )
+
+
 def stream_to_partitioned_lake(
     source: DataFrame,
     lake_path: str,
@@ -46,13 +59,7 @@ def stream_to_partitioned_lake(
             return
         overwrite_partitions(batch, lake_path, partition_cols)
 
-    return (
-        source.writeStream.foreachBatch(land)
-        .option("checkpointLocation", checkpoint_path)
-        .queryName(query_name)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _start(source, land, checkpoint_path, query_name)
 
 
 def stream_refresh_hourly_rollup(
@@ -92,13 +99,7 @@ def stream_refresh_hourly_rollup(
         days = touched_days(batch, ts_col)
         refresh_hourly_rollup(lake_provider(), rollup_path, days)
 
-    return (
-        source.writeStream.foreachBatch(refresh)
-        .option("checkpointLocation", checkpoint_path)
-        .queryName(query_name)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _start(source, refresh, checkpoint_path, query_name)
 
 
 def stream_append_quantized_store(
@@ -140,13 +141,7 @@ def stream_append_quantized_store(
         )
         overwrite_partitions(out, store_path, partition_cols=("cell", "batch"))
 
-    return (
-        source.writeStream.foreachBatch(land)
-        .option("checkpointLocation", checkpoint_path)
-        .queryName(query_name)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _start(source, land, checkpoint_path, query_name)
 
 
 def stream_to_lake_with_dq(
@@ -190,13 +185,7 @@ def stream_to_lake_with_dq(
         finally:
             batch.unpersist()
 
-    return (
-        source.writeStream.foreachBatch(land)
-        .option("checkpointLocation", checkpoint_path)
-        .queryName(query_name)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _start(source, land, checkpoint_path, query_name)
 
 
 def stream_maintain_count_min(
@@ -228,13 +217,7 @@ def stream_maintain_count_min(
         )
         overwrite_partitions(cells, store_path, partition_cols=("batch",))
 
-    return (
-        source.writeStream.foreachBatch(land)
-        .option("checkpointLocation", checkpoint_path)
-        .queryName(query_name)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _start(source, land, checkpoint_path, query_name)
 
 
 def read_count_min(spark: SparkSession, store_path: str) -> DataFrame:
@@ -320,10 +303,4 @@ def stream_refresh_scd2(
             bucket_col=bucket_col,
         )
 
-    return (
-        source.writeStream.foreachBatch(refresh)
-        .option("checkpointLocation", checkpoint_path)
-        .queryName(query_name)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _start(source, refresh, checkpoint_path, query_name)

@@ -12,7 +12,7 @@ Stream-static joins are stateless in Structured Streaming (the static
 side is re-scannable, no state store), so these pipelines run in
 append mode with zero streaming state; everything computed on the
 stream side is a pure expression (`fingerprint_md5`,
-`minhash_signature_expr`, the shared `_banded` explode) — no
+`minhash_signature_from_hashes`, the shared `_banded` explode) — no
 aggregation before the join.
 
 Decision split, mirroring the batch pipeline:
@@ -34,9 +34,12 @@ from pyspark.sql import functions as F
 from elective_waiting_times_pipeline_spark.operators.dedup import (
     _banded,
     minhash_signature_from_hashes,
-    shingle_hashes,
 )
-from elective_waiting_times_pipeline_spark.operators.text import fingerprint_md5
+from elective_waiting_times_pipeline_spark.operators.text import (
+    fingerprint_md5,
+    ngrams,
+    tokens,
+)
 
 
 def flag_known_exact(
@@ -91,11 +94,15 @@ def near_dup_candidates_vs_store(
     # then read a materialized attribute instead of each re-running
     # the tokenize + hash-chain fold (the row-local signature's
     # documented cost; measured 13.0 s → 1.7 s over the 5k-doc sf0.1
-    # stream, identical output)
+    # stream, identical output). The token hashes are bound first, by
+    # projection, because the chain references them 2n times.
     from elective_waiting_times_pipeline_spark.functions.barrier import bind_once
 
+    hashed = stream_docs.select(
+        F.col(id_col), F.transform(tokens(text_col), lambda t: F.xxhash64(t)).alias("_th")
+    )
     bound = bind_once(
-        stream_docs, [id_col], _sh=shingle_hashes(text_col, shingle_n)
+        hashed, [id_col], _sh=F.array_distinct(ngrams(F.col("_th"), shingle_n, F.xxhash64))
     )
     new_sigs = bound.filter(F.size("_sh") > 0).select(
         F.col(id_col),

@@ -25,7 +25,7 @@ from pyspark.sql import functions as F
 
 from elective_waiting_times_pipeline_spark import get_spark, harness
 from elective_waiting_times_pipeline_spark.operators.dedup import ngram_jaccard_pairs
-from elective_waiting_times_pipeline_spark.operators.text import tokens
+from elective_waiting_times_pipeline_spark.operators.text import ngrams, tokens
 
 THRESHOLD = 0.1  # dedup_clusters' min_jaccard
 SHINGLE_N = 3
@@ -72,17 +72,11 @@ def main() -> None:
             reps, shingle_n=SHINGLE_N, min_jaccard=THRESHOLD, max_doc_freq=cap
         )
         # fan-out profile: Σ df² over the operator's OWN shingle
-        # definition (shingles_from_tokens), so the numbers describe
-        # exactly the joined stream
-        from elective_waiting_times_pipeline_spark.operators.text import (
-            shingles_from_tokens,
-        )
-
+        # definition (`ngrams`), so the numbers describe exactly the
+        # joined stream
         shingled = reps.select("doc_id", tokens("text").alias("_t")).select(
             "doc_id",
-            F.explode(
-                F.array_distinct(shingles_from_tokens(F.col("_t"), SHINGLE_N))
-            ).alias("shingle"),
+            F.explode(F.array_distinct(ngrams(F.col("_t"), SHINGLE_N))).alias("shingle"),
         )
         dfreq = shingled.groupBy("shingle").agg(F.count(F.lit(1)).alias("df"))
         if cap is not None:

@@ -76,8 +76,9 @@ def audit(sf: str, names: list[str]) -> None:
     print()
     print(f"Regenerate: `python scripts/query_probe.py audit {sf} > PLANS.md`.")
     print("Plans are the EXECUTED (AQE-final) plans through the noop sink.")
-    print("Shuffle = hash/range/single-partition Exchange; checkpointed")
-    print("subtrees appear as RDD scans (their upstream cost runs once).")
+    print("Shuffle = hash/range/single-partition Exchange node (a reuse is")
+    print("counted under reused exch only); checkpointed subtrees appear as")
+    print("RDD scans (their upstream cost runs once).")
     print("Headline queries (bench.py's set) are listed first, then every")
     print("other registered catalog query alphabetically.")
     print()

@@ -215,48 +215,47 @@ def test_repetition_features_edges(spark):
 
 
 def test_ngram_builders_clamp_short_arrays(spark):
-    """bigrams/trigrams must yield [] (not a runtime abort from a
-    negative slice length) on empty and sub-n token arrays — these are
-    public operators and not every caller pre-filters on token_count."""
-    from elective_waiting_times_pipeline_spark.operators.text import bigrams, trigrams
+    """n-grams must yield [] (not a runtime abort from a negative
+    slice length) on empty and sub-n token arrays — these are public
+    operators and not every caller pre-filters on token_count."""
+    from elective_waiting_times_pipeline_spark.operators.text import ngrams
 
     df = spark.createDataFrame(
         [([],), (["a"],), (["a", "b"],), (["a", "b", "c"],)], "toks: array<string>"
     )
     got = df.select(
-        bigrams(F.col("toks")).alias("bi"), trigrams(F.col("toks")).alias("tri")
+        ngrams(F.col("toks"), 2).alias("bi"), ngrams(F.col("toks"), 3).alias("tri")
     ).collect()
     assert [r.bi for r in got] == [[], [], ["a b"], ["a b", "b c"]]
     assert [r.tri for r in got] == [[], [], [], ["a b c"]]
 
 
-def test_wordgrams_general_n_matches_fixed_builders(spark):
-    """wordgrams(n) must agree with the fixed-n builders, clamp short
-    arrays to [], and produce len-(n-1) windows for longer arrays."""
+def test_ngrams_general_n_matches_fixed_n(spark):
+    """ngrams(n) must agree with the fixed-n windows, clamp short
+    arrays to [], and produce len-(n-1) windows for longer arrays;
+    n = 1 returns the tokens and n = 0 raises."""
     import pytest
 
-    from elective_waiting_times_pipeline_spark.operators.text import (
-        bigrams,
-        trigrams,
-        wordgrams,
-    )
+    from elective_waiting_times_pipeline_spark.operators.text import bigram_pairs, ngrams
 
     df = spark.createDataFrame(
         [([],), (["a"],), (["a", "b", "c", "d"],), (["a", "b", "c", "d", "e", "f"],)],
         "toks: array<string>",
     )
     got = df.select(
-        bigrams(F.col("toks")).alias("bi"),
-        wordgrams(F.col("toks"), 2).alias("g2"),
-        trigrams(F.col("toks")).alias("tri"),
-        wordgrams(F.col("toks"), 3).alias("g3"),
-        wordgrams(F.col("toks"), 5).alias("g5"),
+        F.col("toks"),
+        F.transform(bigram_pairs(F.col("toks")), lambda p: F.concat_ws(" ", p.x, p.y)).alias("bi"),
+        ngrams(F.col("toks"), 1).alias("g1"),
+        ngrams(F.col("toks"), 2).alias("g2"),
+        ngrams(F.col("toks"), 3).alias("g3"),
+        ngrams(F.col("toks"), 5).alias("g5"),
     ).collect()
     for r in got:
-        assert r.g2 == r.bi and r.g3 == r.tri
+        assert r.g1 == r.toks and r.g2 == r.bi
+        assert r.g3 == [" ".join(r.toks[i : i + 3]) for i in range(len(r.toks) - 2)]
     assert [r.g5 for r in got] == [[], [], [], ["a b c d e", "b c d e f"]]
     with pytest.raises(ValueError):
-        wordgrams(F.col("toks"), 1)
+        ngrams(F.col("toks"), 0)
 
 
 def test_minhash_estimate_jaccard_tracks_exact(spark):

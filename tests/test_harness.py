@@ -53,6 +53,42 @@ AdaptiveSparkPlan isFinalPlan=true
 """
 
 
+# pack_chunks' final plan at sf0.001, captured the same way: two
+# shuffles, and a third stage that reuses the first one. Spark prints
+# the reuse as `ReusedExchange [...], Exchange hashpartitioning(...)`.
+PACK_CHUNKS_PLAN = r"""AdaptiveSparkPlan isFinalPlan=true
++- == Final Plan ==
+   ResultQueryStage 5
+   +- *(8) Project [doc_id#0L, shard#7, (cum_tok#39L - n_tokens#5L) AS start_offset#40L, FLOOR((cast((cum_tok#39L - n_tokens#5L) as double) / 512.0)) AS chunk_id#41L]
+      +- *(8) Project [doc_id#0L, n_tokens#5L, shard#7, (_woff#23L + _cw#11L) AS cum_tok#39L]
+         +- *(8) BroadcastHashJoin [_bk#8L, coalesce(shard#7, 0), isnull(shard#7)], [_obk#27L, coalesce(_g0#26, 0), isnull(_g0#26)], Inner, BuildRight, false
+            :- Window [sum(n_tokens#5L) windowspecdefinition(shard#7, _bk#8L, doc_id#0L ASC NULLS FIRST, specifiedwindowframe(RowFrame, unboundedpreceding$(), currentrow$())) AS _cw#11L], [shard#7, _bk#8L], [doc_id#0L ASC NULLS FIRST]
+            :  +- *(7) Sort [shard#7 ASC NULLS FIRST, _bk#8L ASC NULLS FIRST, doc_id#0L ASC NULLS FIRST], false, 0
+            :     +- AQEShuffleRead coalesced
+            :        +- ShuffleQueryStage 0
+            :           +- Exchange hashpartitioning(shard#7, _bk#8L, 8), ENSURE_REQUIREMENTS, [plan_id=82]
+            :              +- *(1) Project [doc_id#0L, cast(size(CASE WHEN (length(trim(lower(text#1), None)) = 0) THEN [] ELSE split(trim(lower(text#1), None), \s+, -1) END, false) as bigint) AS n_tokens#5L, cast(pmod(doc_id#0L, 8) as int) AS shard#7, CASE WHEN isnan(cast(doc_id#0L as double)) THEN 63 ELSE least(63, greatest(0, CEIL(CASE WHEN isnull(((cast(doc_id#0L as double) - 7.796875) / 7.796875)) THEN ((cast(doc_id#0L as double) - 7.796875) / 7.796875) ELSE least(64.0, greatest(-1.0, ((cast(doc_id#0L as double) - 7.796875) / 7.796875))) END))) END AS _bk#8L]
+            :                 +- *(1) ColumnarToRow
+            :                    +- FileScan parquet [doc_id#0L,text#1] Batched: true, DataFilters: [], Format: Parquet, Location: InMemoryFileIndex(1 paths)[file:<sf>/documents.parquet], PartitionFilters: [], PushedFilters: [], ReadSchema: struct<doc_id:bigint,text:string>
+            +- BroadcastQueryStage 4
+               +- BroadcastExchange HashedRelationBroadcastMode(List(input[1, bigint, false], coalesce(input[0, int, true], 0), isnull(input[0, int, true])),false), [plan_id=308]
+                  +- *(6) Project [shard#34 AS _g0#26, _bk#35L AS _obk#27L, coalesce(_we0#25L, 0) AS _woff#23L]
+                     +- Window [sum(_ws#14L) windowspecdefinition(shard#34, _bk#35L ASC NULLS FIRST, specifiedwindowframe(RowFrame, unboundedpreceding$(), -1)) AS _we0#25L], [shard#34], [_bk#35L ASC NULLS FIRST]
+                        +- *(5) Sort [shard#34 ASC NULLS FIRST, _bk#35L ASC NULLS FIRST], false, 0
+                           +- AQEShuffleRead coalesced
+                              +- ShuffleQueryStage 3
+                                 +- Exchange hashpartitioning(shard#34, 8), ENSURE_REQUIREMENTS, [plan_id=232]
+                                    +- *(4) HashAggregate(keys=[shard#34, _bk#35L], functions=[max_by(_cw#37L, _rn#36)], output=[shard#34, _bk#35L, _ws#14L])
+                                       +- *(4) HashAggregate(keys=[shard#34, _bk#35L], functions=[partial_max_by(_cw#37L, _rn#36)], output=[shard#34, _bk#35L, valueWithExtremumOrdering#44L, extremumOrdering#45])
+                                          +- *(4) Project [shard#34, _bk#35L, _rn#36, _cw#37L]
+                                             +- Window [row_number() windowspecdefinition(shard#34, _bk#35L, doc_id#28L ASC NULLS FIRST, specifiedwindowframe(RowFrame, unboundedpreceding$(), currentrow$())) AS _rn#36, sum(n_tokens#33L) windowspecdefinition(shard#34, _bk#35L, doc_id#28L ASC NULLS FIRST, specifiedwindowframe(RowFrame, unboundedpreceding$(), currentrow$())) AS _cw#37L], [shard#34, _bk#35L], [doc_id#28L ASC NULLS FIRST]
+                                                +- *(3) Sort [shard#34 ASC NULLS FIRST, _bk#35L ASC NULLS FIRST, doc_id#28L ASC NULLS FIRST], false, 0
+                                                   +- AQEShuffleRead coalesced
+                                                      +- ShuffleQueryStage 2
+                                                         +- ReusedExchange [doc_id#28L, n_tokens#33L, shard#34, _bk#35L], Exchange hashpartitioning(shard#7, _bk#8L, 8), ENSURE_REQUIREMENTS, [plan_id=82]
+"""
+
+
 def test_query_names_default_is_headline(monkeypatch):
     monkeypatch.delenv("SPARK_GRAFT_QUERIES", raising=False)
     assert harness.query_names() == list(catalog.HEADLINE)
@@ -96,6 +132,13 @@ def test_plan_counts_final_section_only():
         "python": 0,
         "joins": ["BroadcastHashJoin"],
     }
+
+
+def test_plan_counts_reused_exchange_is_not_a_shuffle():
+    """A reuse line names the Exchange it reuses; only Exchange nodes
+    count as shuffles."""
+    c = harness.plan_counts(PACK_CHUNKS_PLAN)
+    assert (c["shuffles"], c["reused"], c["broadcasts"]) == (2, 1, 1)
 
 
 def test_built_once_reuses_and_rebuilds_on_source_change(tmp_path, monkeypatch):

@@ -198,10 +198,10 @@ def test_rebucket_routes_unknown_long_wait_buckets_to_over(spark):
 def test_zorder_key_rejects_sign_bit_widths(spark):
     import pytest as _pytest
 
-    from elective_waiting_times_pipeline_spark.functions.zorder import zorder_key
+    from elective_waiting_times_pipeline_spark.functions.zorder import zorder_key_n
 
     with _pytest.raises(ValueError):
-        zorder_key("a", "b", bits=32)
+        zorder_key_n(["a", "b"], bits=32)
 
 
 def test_read_csv_tolerant_accepts_caller_header_option(spark, tmp_path):

@@ -124,8 +124,8 @@ def test_repetition_features_row_local_parity_and_shape(spark):
     import random
 
     from elective_waiting_times_pipeline_spark.operators.text import (
+        ngrams,
         repetition_features,
-        shingles_from_tokens,
         tokens,
     )
 
@@ -152,7 +152,7 @@ def test_repetition_features_row_local_parity_and_shape(spark):
         df.select(F.col("doc_id"), tokens("text").alias("_toks"))
         .select(
             F.col("doc_id"),
-            F.explode(shingles_from_tokens(F.col("_toks"), n=2)).alias("_bg"),
+            F.explode(ngrams(F.col("_toks"), 2)).alias("_bg"),
         )
         .groupBy("doc_id", "_bg")
         .agg(F.count(F.lit(1)).alias("_c"))

@@ -148,21 +148,21 @@ def test_pareto_front_matches_python_reference(spark, tmp_path_factory, points):
     assert keep == _py_pareto(points)
 
 
-def _py_wordgrams(toks, n):
+def _py_ngrams(toks, n):
     return [" ".join(toks[i : i + n]) for i in range(len(toks) - n + 1)]
 
 
 @given(
     st.lists(st.sampled_from(["a", "b", "cd", "efg"]), max_size=12),
-    st.integers(min_value=2, max_value=6),
+    st.integers(min_value=1, max_value=6),
 )
 @settings(**_SETTINGS)
-def test_wordgrams_matches_python_reference(spark, toks, n):
-    from elective_waiting_times_pipeline_spark.operators.text import wordgrams
+def test_ngrams_matches_python_reference(spark, toks, n):
+    from elective_waiting_times_pipeline_spark.operators.text import ngrams
 
     df = spark.createDataFrame([(toks,)], "toks: array<string>")
-    got = df.select(wordgrams(F.col("toks"), n).alias("g")).collect()[0].g
-    assert got == _py_wordgrams(toks, n)
+    got = df.select(ngrams(F.col("toks"), n).alias("g")).collect()[0].g
+    assert got == _py_ngrams(toks, n)
 
 
 def _py_sessions(events, gap_s=1800):

@@ -221,11 +221,8 @@ def test_write_training_shards_contiguous_runs(spark, tmp_path):
 
 
 def test_orc_roundtrip_with_pushdown(spark, tmp_path):
-    from elective_waiting_times_pipeline_spark.sources.readers import (
-        load_table,
-        read_orc,
-        write_orc,
-    )
+    from elective_waiting_times_pipeline_spark.sources.edges import read_orc, write_orc
+    from elective_waiting_times_pipeline_spark.sources.readers import load_table
 
     nation = load_table(spark, "/root/testdata/sf0.001", "nation")
     path = str(tmp_path / "nation_orc")

@@ -11,6 +11,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from elective_waiting_times_pipeline_spark.operators import dedup as D
+from elective_waiting_times_pipeline_spark.operators.text import ngrams, tokens
 from elective_waiting_times_pipeline_spark.sources.readers import load_table
 from elective_waiting_times_pipeline_spark.streaming.store_dedup import (
     run_store_dedup_available_now,
@@ -22,10 +23,12 @@ def test_rowwise_signature_equals_batch_operator(spark, sf_dir):
         r.doc_id: tuple(r.signature)
         for r in D.minhash_signatures(docs, num_hashes=16, shingle_n=3).collect()
     }
+    th = F.transform(tokens("text"), lambda t: F.xxhash64(t))
+    sh = F.array_distinct(ngrams(th, 3, F.xxhash64))
     rowwise = {
         r.doc_id: tuple(r.signature)
-        for r in docs.filter(F.size(D.shingle_hashes("text", 3)) > 0)
-        .select("doc_id", D.minhash_signature_expr("text", 16, 3).alias("signature"))
+        for r in docs.filter(F.size(sh) > 0)
+        .select("doc_id", D.minhash_signature_from_hashes(sh, 16).alias("signature"))
         .collect()
     }
     assert rowwise == batch

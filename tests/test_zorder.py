@@ -10,7 +10,7 @@ from pyspark.sql import functions as F
 
 from elective_waiting_times_pipeline_spark.functions.zorder import (
     write_zordered,
-    zorder_key,
+    zorder_key_n,
 )
 
 
@@ -25,7 +25,7 @@ def _morton(x: int, y: int, bits: int = 16) -> int:
 def test_zorder_key_matches_reference_interleave(spark):
     pts = [(x, y) for x in (0, 1, 2, 3, 5, 255, 65535) for y in (0, 1, 3, 7, 1024, 65535)]
     df = spark.createDataFrame(pts, "x long, y long")
-    rows = df.select("x", "y", zorder_key("x", "y").alias("z")).collect()
+    rows = df.select("x", "y", zorder_key_n(["x", "y"]).alias("z")).collect()
     for r in rows:
         assert r.z == _morton(r.x, r.y), (r.x, r.y)
 
@@ -53,8 +53,6 @@ def test_zorder_write_layout_is_rectangular(spark, tmp_path):
 
 def test_zorder_n_matches_reference_and_validates(spark):
     import pytest
-
-    from elective_waiting_times_pipeline_spark.functions.zorder import zorder_key_n
 
     def morton3(x, y, z, bits):
         out = 0
