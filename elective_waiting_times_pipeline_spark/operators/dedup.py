@@ -11,6 +11,13 @@ Scale design:
     also an equi-join, usable standalone for small candidate sets.
 All deterministic: hashes are xxhash64/crc32 with fixed seeds; "keep"
 row is min(id), never first-encountered (SURVEY §7.5 caveat).
+
+Each near-dup stage has one private implementation: `_min_signature`
+(num_hashes MINs per doc → array) for both MinHash signature builders;
+`_pair_expansion` (in-bucket C(n,2) pairs) for MinHash buckets and
+SimHash records; `_postings` (id, set_size, shingle) and `_jaccard`
+(intersection counts → 6-dp Jaccard) for `ngram_jaccard_pairs`, its
+delta and `prefix_filter_jaccard_pairs`.
 """
 
 from __future__ import annotations
@@ -82,9 +89,7 @@ def minhash_signatures(
     strings, and hash-equivalent for signature purposes.
 
     Physical shape: hash-chain shingles (no per-shingle string
-    allocation) → explode longs → num_hashes flat xxhash64 columns →
-    one hash-agg of mins per doc (map-side partial combine → the
-    shuffle carries num_hashes longs per doc, not the shingles)."""
+    allocation) → explode longs → `_min_signature`."""
     exploded = (
         df.select(F.col(id_col), tokens(text_col).alias("_toks"))
         .select(
@@ -98,8 +103,18 @@ def minhash_signatures(
             ).alias("_sh"),
         )
     )
+    return _min_signature(
+        exploded, id_col, num_hashes, lambda i: F.xxhash64(F.lit(i), F.col("_sh"))
+    )
+
+
+def _min_signature(exploded: DataFrame, id_col: str, num_hashes: int, seed_hash) -> DataFrame:
+    """(id, signature) from one row per (doc, shingle): component i is
+    MIN(seed_hash(i)) per doc — num_hashes flat columns in one
+    map-side-combinable hash-agg, so the shuffle carries num_hashes
+    longs per doc, then one array."""
     mins = exploded.groupBy(id_col).agg(
-        *[F.min(F.xxhash64(F.lit(i), F.col("_sh"))).alias(f"_h{i}") for i in range(num_hashes)]
+        *[F.min(seed_hash(i)).alias(f"_h{i}") for i in range(num_hashes)]
     )
     return mins.select(
         F.col(id_col), F.array(*[f"_h{i}" for i in range(num_hashes)]).alias("signature")
@@ -152,12 +167,10 @@ def minhash_signatures_replayable(
     ~an order of magnitude more per call, which a correctness surface
     absorbs and a 100 TB pass should not).
 
-    Same physical shape: shingle explode → num_hashes flat hash
-    columns → one map-side-combinable min-agg per doc; the shuffle
-    carries num_hashes longs per doc. Documents with no shingles
-    (fewer than shingle_n tokens) are dropped, as in the xxhash64
-    form. Duplicate shingles need no dedup — MIN over a multiset
-    equals MIN over its set."""
+    Same physical shape: shingle explode → `_min_signature`.
+    Documents with no shingles (fewer than shingle_n tokens) are
+    dropped, as in the xxhash64 form. Duplicate shingles need no dedup
+    — MIN over a multiset equals MIN over its set."""
     exploded = df.select(
         F.col(id_col), tokens(text_col).alias("_toks")
     ).select(
@@ -165,12 +178,7 @@ def minhash_signatures_replayable(
         F.explode(ngrams(F.col("_toks"), shingle_n)).alias("_s"),
     )
     h60 = lambda i: md5_prefix60(F.concat_ws("|", F.lit(str(i)), F.col("_s")))
-    mins = exploded.groupBy(id_col).agg(
-        *[F.min(h60(i)).alias(f"_h{i}") for i in range(num_hashes)]
-    )
-    return mins.select(
-        F.col(id_col), F.array(*[f"_h{i}" for i in range(num_hashes)]).alias("signature")
-    )
+    return _min_signature(exploded, id_col, num_hashes, h60)
 
 
 def _banded(
@@ -314,13 +322,21 @@ def minhash_lsh_candidates(
         buckets = buckets.filter(F.size("_ids") <= max_bucket_size)
     pairs = buckets.select(
         F.explode(
-            F.expr(
-                "flatten(transform(sequence(1, size(_ids) - 1), i -> "
-                "transform(sequence(0, i - 1), j -> struct(_ids[j] AS id_a, _ids[i] AS id_b))))"
-            )
+            F.expr(_pair_expansion("_ids", lambda lo, hi: f"{lo} AS id_a, {hi} AS id_b"))
         ).alias("p")
     )
     return pairs.select("p.id_a", "p.id_b").distinct()
+
+
+def _pair_expansion(arr: str, fields) -> str:
+    """SQL for the in-bucket C(n,2) pair expansion of the sorted array
+    column `arr`: one struct per j < i, built by `fields(lo, hi)` from
+    the SQL of the lower element arr[j] and the higher element arr[i].
+    An in-array fold in ONE row, so a bucket never self-joins."""
+    return (
+        f"flatten(transform(sequence(1, size({arr}) - 1), i -> "
+        f"transform(sequence(0, i - 1), j -> struct({fields(f'{arr}[j]', f'{arr}[i]')}))))"
+    )
 
 
 def minhash_estimate_jaccard(
@@ -359,6 +375,51 @@ def minhash_estimate_jaccard(
     )
 
 
+def _postings(df: DataFrame, text_col: str, id_col: str, shingle_n: int) -> DataFrame:
+    """(id, set_size, shingle): one posting row per distinct word
+    shingle of each doc — the inverted index every exact-Jaccard
+    generator joins. Docs with no shingle (NULL, empty or shorter than
+    shingle_n tokens) emit no rows."""
+    # set_size is a ROW-LOCAL property (count of the doc's distinct
+    # shingles = size of the deduped array), so it rides along on the
+    # posting rows for free: no size aggregation, no postings-sized
+    # co-partition join to attach it back. The array expression is
+    # evaluated ONCE in the projection below Generate (explode reads
+    # the bound `_arr` attribute, not the expression).
+    # explode_OUTER + an isnotnull filter on the OUTPUT attribute: a
+    # plain explode makes InferFiltersFromGenerate add a
+    # `size(e) > 0 AND isnotnull(e)` filter below the Generate, and
+    # predicate pushdown inlines `_arr`'s defining expression into it —
+    # the whole tokenize+shingle pipeline would run TWICE per row
+    # (verified in the optimized plan). With outer=true no filter is
+    # inferred; empty-array docs emit one NULL shingle row that the
+    # attribute-level filter drops for the same final rows.
+    return df.select(
+        F.col(id_col), tokens(text_col).alias("_toks")
+    ).select(
+        F.col(id_col),
+        F.array_distinct(ngrams(F.col("_toks"), shingle_n)).alias("_arr"),
+    ).select(
+        F.col(id_col),
+        F.size("_arr").alias("set_size"),
+        F.explode_outer("_arr").alias("shingle"),
+    ).filter(F.col("shingle").isNotNull())
+
+
+def _jaccard(inter: DataFrame, min_jaccard: float) -> DataFrame:
+    """(id_a, id_b, size_a, size_b, inter) → (id_a, id_b, jaccard):
+    inter / (size_a + size_b − inter) rounded to 6 dp, kept when
+    >= min_jaccard (no filter when min_jaccard <= 0)."""
+    out = inter.select(
+        "id_a",
+        "id_b",
+        F.round(
+            F.col("inter") / (F.col("size_a") + F.col("size_b") - F.col("inter")), 6
+        ).alias("jaccard"),
+    )
+    return out.filter(F.col("jaccard") >= min_jaccard) if min_jaccard > 0 else out
+
+
 def ngram_jaccard_pairs(
     df: DataFrame,
     text_col: str = "text",
@@ -379,32 +440,7 @@ def ngram_jaccard_pairs(
     pairs — the standard hot-token guard); at corpus scale, also feed
     this only LSH candidates. Default None = exact, oracle-checkable.
     """
-    # set_size is a ROW-LOCAL property (count of the doc's distinct
-    # shingles = size of the deduped array), so it rides along on the
-    # posting rows for free: no size aggregation, no postings-sized
-    # co-partition join to attach it back. The array expression is
-    # evaluated ONCE in the projection below Generate (explode reads
-    # the bound `_arr` attribute, not the expression). Sizes always
-    # come from the UNCAPPED shingle set so `max_doc_freq` keeps
-    # jaccard a lower bound.
-    # explode_OUTER + an isnotnull filter on the OUTPUT attribute: a
-    # plain explode makes InferFiltersFromGenerate add a
-    # `size(e) > 0 AND isnotnull(e)` filter below the Generate, and
-    # predicate pushdown inlines `_arr`'s defining expression into it —
-    # the whole tokenize+shingle pipeline would run TWICE per row
-    # (verified in the optimized plan). With outer=true no filter is
-    # inferred; empty-array docs emit one NULL shingle row that the
-    # attribute-level filter drops for the same final rows.
-    shingled = df.select(
-        F.col(id_col), tokens(text_col).alias("_toks")
-    ).select(
-        F.col(id_col),
-        F.array_distinct(ngrams(F.col("_toks"), shingle_n)).alias("_arr"),
-    ).select(
-        F.col(id_col),
-        F.size("_arr").alias("set_size"),
-        F.explode_outer("_arr").alias("shingle"),
-    ).filter(F.col("shingle").isNotNull())
+    shingled = _postings(df, text_col, id_col, shingle_n)
     if max_doc_freq is not None:
         # window-free df cap: aggregate doc-frequency, semi-join back
         rare = (
@@ -413,13 +449,11 @@ def ngram_jaccard_pairs(
             .filter(F.col("_df") <= max_doc_freq)
             .select("shingle")
         )
-        sized = shingled.join(rare, "shingle")
-    else:
-        sized = shingled
-    a = sized.select(
+        shingled = shingled.join(rare, "shingle")
+    a = shingled.select(
         F.col(id_col).alias("id_a"), F.col("set_size").alias("size_a"), "shingle"
     )
-    b = sized.select(
+    b = shingled.select(
         F.col(id_col).alias("id_b"), F.col("set_size").alias("size_b"), "shingle"
     )
     # shuffle_hash: both sides are the postings table — sorting them
@@ -436,14 +470,7 @@ def ngram_jaccard_pairs(
         .groupBy("id_a", "id_b", "size_a", "size_b")
         .agg(F.count(F.lit(1)).alias("inter"))
     )
-    out = inter.select(
-        "id_a",
-        "id_b",
-        F.round(
-            F.col("inter") / (F.col("size_a") + F.col("size_b") - F.col("inter")), 6
-        ).alias("jaccard"),
-    )
-    return out.filter(F.col("jaccard") >= min_jaccard) if min_jaccard > 0 else out
+    return _jaccard(inter, min_jaccard)
 
 
 def ngram_jaccard_pairs_delta(
@@ -453,7 +480,6 @@ def ngram_jaccard_pairs_delta(
     id_col: str = "doc_id",
     shingle_n: int = 3,
     min_jaccard: float = 0.0,
-    max_doc_freq: int | None = None,
 ) -> DataFrame:
     """Exactly the subset of `ngram_jaccard_pairs(df)` whose pairs
     touch at least one id in `new_ids` — the pair feed for
@@ -465,35 +491,14 @@ def ngram_jaccard_pairs_delta(
     the delta fraction, which is the whole point at 100 TB.
 
     Output and rounding are bit-identical to the full generator
-    (same 6-dp round, same id_a < id_b orientation); equivalence to
+    (same postings, same `_jaccard` scoring, same id_a < id_b
+    orientation); equivalence to
     `ngram_jaccard_pairs(df).filter(touching new)` is property-tested
-    in tests/test_round9_invariants.py."""
-    # row-local set_size + outer-explode single-eval (see
-    # ngram_jaccard_pairs for both rationales)
-    shingled = df.select(
-        F.col(id_col), tokens(text_col).alias("_toks")
-    ).select(
-        F.col(id_col),
-        F.array_distinct(ngrams(F.col("_toks"), shingle_n)).alias("_arr"),
-    ).select(
-        F.col(id_col),
-        F.size("_arr").alias("set_size"),
-        F.explode_outer("_arr").alias("shingle"),
-    ).filter(F.col("shingle").isNotNull())
-    if max_doc_freq is not None:
-        rare = (
-            shingled.groupBy("shingle")
-            .agg(F.count(F.lit(1)).alias("_df"))
-            .filter(F.col("_df") <= max_doc_freq)
-            .select("shingle")
-        )
-        pair_side = shingled.join(rare, "shingle")
-    else:
-        pair_side = shingled
+    in tests/test_dedup_similarity.py."""
     # carry an is-new flag through the postings (broadcast semi-shape:
     # new_ids is the small delta), then split ONCE — the old side never
     # self-joins, which is where the full generator's cost lives
-    flagged = pair_side.join(
+    flagged = _postings(df, text_col, id_col, shingle_n).join(
         F.broadcast(new_ids.select(F.col(id_col)).distinct().withColumn("_new", F.lit(True))),
         id_col,
         "left",
@@ -526,14 +531,7 @@ def ngram_jaccard_pairs_delta(
     inter = both.groupBy("id_a", "id_b", "size_a", "size_b").agg(
         F.count(F.lit(1)).alias("inter")
     )
-    out = inter.select(
-        "id_a",
-        "id_b",
-        F.round(
-            F.col("inter") / (F.col("size_a") + F.col("size_b") - F.col("inter")), 6
-        ).alias("jaccard"),
-    )
-    return out.filter(F.col("jaccard") >= min_jaccard) if min_jaccard > 0 else out
+    return _jaccard(inter, min_jaccard)
 
 
 def verify_candidate_pairs(
@@ -556,8 +554,8 @@ def verify_candidate_pairs(
 
     Returns (id_a, id_b, jaccard) for the candidate pairs whose exact
     Jaccard ≥ min_jaccard. Candidates that share no shingle (possible
-    under banding false-positives) score 0 and are dropped whenever
-    min_jaccard > 0. Implemented as the standard inverted-index join
+    under banding false-positives) are never emitted, whatever
+    min_jaccard is. Implemented as the standard inverted-index join
     over the touched-document subset, then an equi-join back onto the
     candidate list — co-shingled NON-candidate pairs among the touched
     docs are computed and discarded; bounding that waste is the
@@ -595,8 +593,6 @@ def simhash(
     configuration an SQL oracle can recompute. The per-bit vote is
     one aggregate over the exploded token column — a single shuffle.
     """
-    from elective_waiting_times_pipeline_spark.operators.text import tokens
-
     toked = df.select(F.col(id_col), F.explode(tokens(text_col)).alias("tok"))
     h = token_hash(F.col("tok")) if token_hash is not None else F.xxhash64("tok")
     # per-instance ±1 when-votes, NOT a (doc, tok, tf) pre-aggregate:
@@ -741,23 +737,14 @@ def simhash_near_dup_pairs(
     # banding pass was considered and rejected: any chunk-agreement
     # prefilter is the SAME xor/popcount work the verify already does,
     # just on a subset of the bits).
+    recs = _pair_expansion(
+        "_recs",
+        lambda lo, hi: f"{lo}.id AS id_a, {hi}.id AS id_b, bit_count({lo}.sh ^ {hi}.sh) AS hamming",
+    )
     pairs = buckets.select(
-        F.explode(
-            F.expr(
-                "filter(flatten(transform(sequence(1, size(_recs) - 1), i -> "
-                "transform(sequence(0, i - 1), j -> struct(_recs[j].id AS id_a, _recs[i].id AS id_b, "
-                "bit_count(_recs[j].sh ^ _recs[i].sh) AS hamming)))), "
-                f"p -> p.hamming <= {int(max_hamming)})"
-            )
-        ).alias("p")
+        F.explode(F.expr(f"filter({recs}, p -> p.hamming <= {int(max_hamming)})")).alias("p")
     ).select("p.id_a", "p.id_b", "p.hamming")
     return pairs.distinct()
-
-
-def hamming_distance(a, b) -> F.Column:
-    """Popcount of XOR — for SimHash near-dup thresholds."""
-    x = (F.col(a) if isinstance(a, str) else a).bitwiseXOR(F.col(b) if isinstance(b, str) else b)
-    return F.bit_count(x)
 
 
 def chunk_dedup_stats(
@@ -850,27 +837,18 @@ def prefix_filter_jaccard_pairs(
     partition on the doc id (bounded by document length); the verify
     join expands |candidates| x set size, already threshold-bounded.
     """
-    # FIVE consumers read the postings relation (dfreq, sizes, the
-    # ranked prefix join, and both verify legs) — un-pinned, each one
-    # re-runs the corpus tokenize+shingle+explode (audited: 5 parquet
-    # scans of the corpus in the final plan). Same class-C recipe as
-    # bm25/tfidf: materialize the narrow (id, shingle) relation once.
-    sh = df.select(
-        F.col(id_col).alias("id"), tokens(text_col).alias("_toks")
-    ).select(
-        "id",
-        F.explode(
-            F.array_distinct(ngrams(F.col("_toks"), shingle_n))
-        ).alias("shingle"),
-    ).filter(F.col("shingle") != "").localCheckpoint(eager=False)
+    # FOUR consumers read the postings relation (dfreq, the ranked
+    # prefix join, and both verify legs) — un-pinned, each one re-runs
+    # the corpus tokenize+shingle+explode (one parquet scan of the
+    # corpus each). Same class-C recipe as bm25/tfidf: materialize the
+    # narrow (id, n, shingle) relation once. n is the postings'
+    # row-local set size, so no size aggregate or join is needed.
+    sh = _postings(df, text_col, id_col, shingle_n).select(
+        F.col(id_col).alias("id"), F.col("set_size").alias("n"), "shingle"
+    ).localCheckpoint(eager=False)
     dfreq = sh.groupBy("shingle").agg(F.count(F.lit(1)).alias("_df"))
-    sizes = sh.groupBy("id").agg(F.count(F.lit(1)).alias("n"))
     w = Window.partitionBy("id").orderBy("_df", "shingle")
-    ranked = (
-        sh.join(dfreq, "shingle")
-        .withColumn("_p", F.row_number().over(w))
-        .join(sizes, "id")
-    )
+    ranked = sh.join(dfreq, "shingle").withColumn("_p", F.row_number().over(w))
     prefix = ranked.filter(
         F.col("_p") <= F.col("n") - F.ceil(F.lit(threshold) * F.col("n")) + 1
     ).select("id", "shingle", "n")
@@ -891,10 +869,4 @@ def prefix_filter_jaccard_pairs(
         .groupBy("id_a", "id_b", "size_a", "size_b")
         .agg(F.count(F.lit(1)).alias("inter"))
     )
-    return inter.select(
-        "id_a",
-        "id_b",
-        F.round(
-            F.col("inter") / (F.col("size_a") + F.col("size_b") - F.col("inter")), 6
-        ).alias("jaccard"),
-    ).filter(F.col("jaccard") >= threshold)
+    return _jaccard(inter, threshold)

@@ -24,8 +24,8 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from pyspark.sql import functions as F
 
 from elective_waiting_times_pipeline_spark import get_spark, harness
-from elective_waiting_times_pipeline_spark.operators.dedup import ngram_jaccard_pairs
-from elective_waiting_times_pipeline_spark.operators.text import ngrams, tokens
+from elective_waiting_times_pipeline_spark.operators.dedup import _postings, ngram_jaccard_pairs
+from elective_waiting_times_pipeline_spark.operators.text import tokens
 
 THRESHOLD = 0.1  # dedup_clusters' min_jaccard
 SHINGLE_N = 3
@@ -71,13 +71,9 @@ def main() -> None:
         pg = ngram_jaccard_pairs(
             reps, shingle_n=SHINGLE_N, min_jaccard=THRESHOLD, max_doc_freq=cap
         )
-        # fan-out profile: Σ df² over the operator's OWN shingle
-        # definition (`ngrams`), so the numbers describe exactly the
-        # joined stream
-        shingled = reps.select("doc_id", tokens("text").alias("_t")).select(
-            "doc_id",
-            F.explode(F.array_distinct(ngrams(F.col("_t"), SHINGLE_N))).alias("shingle"),
-        )
+        # fan-out profile: Σ df² over the operator's OWN postings
+        # (`_postings`), so the numbers describe exactly the joined stream
+        shingled = _postings(reps, "text", "doc_id", SHINGLE_N)
         dfreq = shingled.groupBy("shingle").agg(F.count(F.lit(1)).alias("df"))
         if cap is not None:
             dfreq = dfreq.filter(F.col("df") <= cap)

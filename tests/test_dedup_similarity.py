@@ -1,9 +1,15 @@
 """Validation for the non-SQL-expressible operators (rows-only in the
 driver's check): MinHash-LSH candidate recall vs exact Jaccard, SimHash
-properties, hyperplane-LSH recall vs brute-force cosine."""
+properties, hyperplane-LSH recall vs brute-force cosine, and every
+exact-Jaccard generator against one pure-Python reference."""
 
 from __future__ import annotations
 
+import itertools
+import re
+
+from hypothesis import HealthCheck, given, settings
+from hypothesis import strategies as st
 from pyspark.sql import Row
 from pyspark.sql import functions as F
 
@@ -74,7 +80,7 @@ def test_simhash_near_texts_have_small_hamming(spark):
     sims = {r.doc_id: r.simhash for r in D.simhash(df).collect()}
     joined = spark.createDataFrame(
         [Row(a=sims[0], b=sims[1]), Row(a=sims[0], b=sims[2])]
-    ).select(D.hamming_distance("a", "b").alias("d")).collect()
+    ).select(F.bit_count(F.col("a").bitwiseXOR(F.col("b"))).alias("d")).collect()
     d_near, d_far = joined[0].d, joined[1].d
     assert d_near < d_far
     assert d_near <= 16
@@ -619,3 +625,108 @@ def test_incremental_cap_counts_distinct_ids(spark):
     )
     got = {(r.id_a, r.id_b) for r in out.collect()}
     assert (1, 3) in got and (2, 3) in got and (1, 2) in got
+
+
+# ---------------------------------------------------------------------------
+# Exact Jaccard: every generator against one pure-Python reference.
+# ---------------------------------------------------------------------------
+_WORDS = [f"w{i}" for i in range(14)]  # tiny vocabulary → real overlap
+
+# NULL, "", space-only, tab/newline-only (Spark's trim strips spaces
+# only, so these split into empty tokens), shorter-than-n and word texts
+_TEXTS = st.one_of(
+    st.just(None),
+    st.sampled_from(["", "  ", "\t", " \n ", "\tw1 w2", "w3\n"]),
+    st.lists(st.sampled_from(_WORDS), min_size=0, max_size=10).map(" ".join),
+)
+
+
+def _py_shingle_sets(texts: dict[int, str | None], n: int) -> dict[int, set[str]]:
+    """`text.tokens` (lower, trim spaces, split on whitespace runs) and
+    distinct word n-grams, in Python."""
+    sets = {}
+    for i, txt in texts.items():
+        t = (txt or "").lower().strip(" ")
+        toks = re.split(r"\s+", t) if t else []
+        sets[i] = {" ".join(toks[j : j + n]) for j in range(len(toks) - n + 1)}
+    return sets
+
+
+def _py_jaccard_pairs(texts: dict[int, str | None], n: int, t: float):
+    """Reference: exact word-n-gram Jaccard over all co-shingled pairs."""
+    sets = _py_shingle_sets(texts, n)
+    out = set()
+    for a, b in itertools.combinations(sorted(sets), 2):
+        inter = len(sets[a] & sets[b])
+        if inter and (jac := round(inter / len(sets[a] | sets[b]), 6)) >= t:
+            out.add((a, b, jac))
+    return out
+
+
+def _triples(df) -> set[tuple]:
+    return {(r.id_a, r.id_b, r.jaccard) for r in df.collect()}
+
+
+@given(
+    st.lists(_TEXTS, min_size=2, max_size=12),
+    st.sampled_from([1, 2, 3]),
+    st.sampled_from([0.1, 0.3, 0.4, 0.5, 0.7, 0.9]),
+    st.lists(st.booleans(), min_size=12, max_size=12),
+)
+@settings(
+    max_examples=10,
+    deadline=None,
+    suppress_health_check=[HealthCheck.function_scoped_fixture],
+)
+def test_jaccard_generators_match_python_reference(spark, docs, n, t, is_new):
+    """On random small-vocabulary corpora, each exact-Jaccard generator
+    equals a brute-force Python Jaccard: the full generator; its delta
+    (the reference restricted to pairs touching the drawn new ids);
+    verification of the reference pairs plus a zero-overlap pair; the
+    prefix filter (complete on arbitrary tie/df structure)."""
+    texts = dict(enumerate(docs))
+    df = spark.createDataFrame(list(texts.items()), "doc_id long, text string")
+    want = _py_jaccard_pairs(texts, n, t)
+
+    assert _triples(D.ngram_jaccard_pairs(df, shingle_n=n, min_jaccard=t)) == want
+
+    new = {i for i in texts if is_new[i]}
+    new_ids = spark.createDataFrame([(i,) for i in sorted(new)], "doc_id long")
+    delta = D.ngram_jaccard_pairs_delta(df, new_ids, shingle_n=n, min_jaccard=t)
+    assert _triples(delta) == {p for p in want if p[0] in new or p[1] in new}
+
+    sets = _py_shingle_sets(texts, n)
+    disjoint = [(a, b) for a, b in itertools.combinations(texts, 2) if not sets[a] & sets[b]]
+    cands = spark.createDataFrame(
+        sorted({(a, b) for a, b, _ in want} | set(disjoint[:1])), "id_a long, id_b long"
+    )
+    verified = D.verify_candidate_pairs(cands, df, shingle_n=n, min_jaccard=t)
+    assert _triples(verified) == want
+
+    assert _triples(D.prefix_filter_jaccard_pairs(df, threshold=t, shingle_n=n)) == want
+
+
+def test_prefix_jaccard_tie_at_threshold_included(spark):
+    """A pair whose exact Jaccard EQUALS the threshold must be emitted:
+    the prefix length n − ceil(t·n) + 1 and the final >= filter both
+    sit on closed boundaries. Doc 0 has bigrams {a b, b c, c d, d e}
+    (4), doc 1 {a b, b c, c q} (3): J = 2/(4+3−2) = 0.4 exactly. Doc 2
+    shares only its two leading bigrams with doc 0 at J = 1/3 < 0.4
+    and must be excluded vs doc 0 — but ties doc 1 at J = 0.4 via
+    {a b, b c} of its own 4 shingles... checked against the brute
+    reference rather than hand enumeration."""
+    texts = {
+        0: "a b c d e",
+        1: "a b c q",
+        2: "a b c x y",
+        3: "p q r s",
+    }
+    df = spark.createDataFrame(list(texts.items()), "doc_id long, text string")
+    for t in (0.4, 0.4000001):
+        got = _triples(D.prefix_filter_jaccard_pairs(df, threshold=t, shingle_n=2))
+        want = _py_jaccard_pairs(texts, 2, t)
+        assert got == want, f"t={t}"
+        if t == 0.4:
+            assert (0, 1, 0.4) in got  # the exact-threshold tie is kept
+        else:
+            assert (0, 1, 0.4) not in got  # and excluded just above it

@@ -14,92 +14,6 @@ _SETTINGS = dict(
     suppress_health_check=[HealthCheck.function_scoped_fixture],
 )
 
-_WORDS = [f"w{i}" for i in range(14)]  # tiny vocabulary → real overlap
-
-
-def _py_jaccard_pairs(texts: dict[int, str], n: int, t: float):
-    """Reference: exact word-n-gram Jaccard over all pairs."""
-    sets = {}
-    for i, txt in texts.items():
-        toks = txt.lower().split()
-        sets[i] = {" ".join(toks[j : j + n]) for j in range(len(toks) - n + 1)}
-    out = set()
-    ids = sorted(sets)
-    for ai in range(len(ids)):
-        for bi in range(ai + 1, len(ids)):
-            a, b = ids[ai], ids[bi]
-            if not sets[a] or not sets[b]:
-                continue
-            inter = len(sets[a] & sets[b])
-            if inter == 0:
-                continue
-            jac = inter / (len(sets[a]) + len(sets[b]) - inter)
-            if round(jac, 6) >= t:
-                out.add((a, b, round(jac, 6)))
-    return out
-
-
-@given(
-    st.lists(
-        st.lists(st.sampled_from(_WORDS), min_size=2, max_size=10),
-        min_size=2,
-        max_size=14,
-    ),
-    st.sampled_from([0.1, 0.3, 0.4, 0.5, 0.7, 0.9]),
-)
-@settings(**_SETTINGS)
-def test_prefix_jaccard_matches_python_reference(spark, docs, t):
-    """prefix_filter_jaccard_pairs == an independent brute-force Python
-    Jaccard on random small-vocabulary corpora, at several thresholds —
-    the completeness theorem holds on arbitrary tie/df structure, not
-    just the handcrafted fixture."""
-    from elective_waiting_times_pipeline_spark.operators.dedup import (
-        prefix_filter_jaccard_pairs,
-    )
-
-    texts = {i: " ".join(ws) for i, ws in enumerate(docs)}
-    df = spark.createDataFrame(
-        [(i, s) for i, s in texts.items()], "doc_id long, text string"
-    )
-    got = {
-        (r.id_a, r.id_b, r.jaccard)
-        for r in prefix_filter_jaccard_pairs(df, threshold=t, shingle_n=2).collect()
-    }
-    assert got == _py_jaccard_pairs(texts, 2, t)
-
-
-def test_prefix_jaccard_tie_at_threshold_included(spark):
-    """A pair whose exact Jaccard EQUALS the threshold must be emitted:
-    the prefix length n − ceil(t·n) + 1 and the final >= filter both
-    sit on closed boundaries. Doc 0 has bigrams {a b, b c, c d, d e}
-    (4), doc 1 {a b, b c, c q} (3): J = 2/(4+3−2) = 0.4 exactly. Doc 2
-    shares only its two leading bigrams with doc 0 at J = 1/3 < 0.4
-    and must be excluded vs doc 0 — but ties doc 1 at J = 0.4 via
-    {a b, b c} of its own 4 shingles... checked against the brute
-    reference rather than hand enumeration."""
-    from elective_waiting_times_pipeline_spark.operators.dedup import (
-        prefix_filter_jaccard_pairs,
-    )
-
-    texts = {
-        0: "a b c d e",
-        1: "a b c q",
-        2: "a b c x y",
-        3: "p q r s",
-    }
-    df = spark.createDataFrame(list(texts.items()), "doc_id long, text string")
-    for t in (0.4, 0.4000001):
-        got = {
-            (r.id_a, r.id_b, r.jaccard)
-            for r in prefix_filter_jaccard_pairs(df, threshold=t, shingle_n=2).collect()
-        }
-        want = _py_jaccard_pairs(texts, 2, t)
-        assert got == want, f"t={t}"
-        if t == 0.4:
-            assert (0, 1, 0.4) in got  # the exact-threshold tie is kept
-        else:
-            assert (0, 1, 0.4) not in got  # and excluded just above it
-
 
 @given(
     st.lists(
