@@ -7,7 +7,8 @@ lazy DataFrame / Spark SQL logical plans so Catalyst + Tungsten choose
 the physical strategy; Python UDFs are avoided in hot paths.
 
 Layout:
-    session     — tuned SparkSession builder
+    session     — tuned SparkSession builder; class_archive, the
+                  per-host JVM class archive it starts from
     sources     — readers, schema utilities, union-by-name, sinks
     functions   — scalar column helpers (names, dates, labels)
     operators   — reusable relational operators (histogram quantile,

@@ -4,13 +4,42 @@ Local test/bench runs use ``local[N]``; the same configuration set is
 what we would ship to a 1000-executor cluster (AQE on, skew-join on,
 sane shuffle partitioning, Arrow for the few Pandas-UDF paths, UTC
 session timezone so results are oracle-comparable).
+
+A fresh driver JVM starts from the host's class-data-sharing archive
+(`class_archive`; built once per host by the first session). Confs
+whose value is a list (`LIST_CONFS`) merge with the caller's value
+instead of being replaced by it.
 """
 
 from __future__ import annotations
 
+import contextlib
 import os
 
 from pyspark.sql import SparkSession
+
+from elective_waiting_times_pipeline_spark import class_archive
+
+_JAVA_OPTS = "spark.driver.extraJavaOptions"
+_INFER_FILTERS_FROM_GENERATE = "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate"
+# Confs whose value is a list (by separator). A caller's value and ours
+# MERGE: the caller's items come first, ours are appended when missing.
+# bind_once's single-evaluation contract (functions/barrier.py) depends
+# on InferFiltersFromGenerate staying excluded, so a caller excluding an
+# unrelated rule must not re-enable it; a caller's java options (say
+# perfbench's -Djava.io.tmpdir) must survive the class-archive flag.
+LIST_CONFS = {"spark.sql.optimizer.excludedRules": ",", _JAVA_OPTS: " "}
+
+
+def merge_conf(key: str, value: str, ours: str | None) -> str:
+    """`value` for `key`, merged with `ours` when `key` is a list conf."""
+    sep = LIST_CONFS.get(key)
+    if sep is None or not ours:
+        return value
+    have = {item.strip() for item in value.split(sep)}
+    missing = [item for item in ours.split(sep) if item.strip() and item.strip() not in have]
+    kept = [value.strip()] if value.strip() else []
+    return sep.join(kept + missing)
 
 
 def default_driver_memory(phys_bytes: int | None = None, jvms: int = 1) -> str:
@@ -42,33 +71,31 @@ def get_spark(
     if shuffle_partitions is None:
         shuffle_partitions = cpus
 
-    builder = (
-        SparkSession.builder.appName(app_name)
-        .master(master)
+    conf = {
         # local mode = driver-only JVM; the default 1g heap OOMs on
         # wide plans and big shuffles long before the box is near full,
         # and a heap above physical RAM gets the process OOM-killed.
         # Effective only at JVM launch.
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM") or default_driver_memory())
+        "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM") or default_driver_memory(),
         # Shuffle sizing: ~cores locally; AQE coalesces at runtime so a
         # too-high static number is cheap, a too-low one is not.
-        .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
+        "spark.sql.shuffle.partitions": str(shuffle_partitions),
         # Adaptive execution: runtime partition coalescing, skew-join
         # splitting, and dynamic join-strategy switching. These are the
         # knobs that make the same plan survive a 100x scale-up.
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
+        "spark.sql.adaptive.enabled": "true",
+        "spark.sql.adaptive.coalescePartitions.enabled": "true",
+        "spark.sql.adaptive.skewJoin.enabled": "true",
         # Arrow for the pandas_udf / createDataFrame(pandas) edges.
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
+        "spark.sql.execution.arrow.pyspark.enabled": "true",
         # Oracle comparability: DuckDB timestamps are UTC-naive.
-        .config("spark.sql.session.timeZone", "UTC")
+        "spark.sql.session.timeZone": "UTC",
         # Parquet TIMESTAMP(NANOS) (events table) has no Spark type:
         # read as long; sources.readers converts to TimestampType at
         # the scan edge (truncating ns → µs).
-        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+        "spark.sql.legacy.parquet.nanosAsLong": "true",
         # Quiet the UI for headless runs.
-        .config("spark.ui.enabled", "false")
+        "spark.ui.enabled": "false",
         # InferFiltersFromGenerate adds `size(e) > 0 AND isnotnull(e)`
         # below every explode/Generate, and predicate pushdown inlines
         # the generator's DEFINING EXPRESSION into that filter. Every
@@ -83,10 +110,7 @@ def get_spark(
         # subset 15.2 s → 14.0 s at sf0.1; at scale the win is a full
         # tokenize pass per explode consumer. Scale-independent plan
         # hygiene, not a local[32] tune.
-        .config(
-            "spark.sql.optimizer.excludedRules",
-            "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate",
-        )
+        "spark.sql.optimizer.excludedRules": _INFER_FILTERS_FROM_GENERATE,
         # Whole-stage-codegen class cache. The default 100 entries
         # thrash in a session that runs the whole catalog: the
         # range_bucket 63-term CASE-WHEN (the distributed-rank
@@ -95,24 +119,15 @@ def get_spark(
         # (measured: weighted_median_value 2.2 s warm vs 5.9 s when 4
         # other lineitem queries run in between; 2.6 s with this cache
         # raised). Static JVM-wide cache, read once at first use.
-        .config("spark.sql.codegen.cache.maxEntries", "2000")
-    )
-    if extra_conf:
-        for k, v in extra_conf.items():
-            # excludedRules MERGES with the built-in exclusion instead
-            # of replacing it: bind_once's single-evaluation contract
-            # (functions/barrier.py) depends on InferFiltersFromGenerate
-            # staying excluded, and a caller overriding the conf for an
-            # unrelated rule would silently re-enable it.
-            if k == "spark.sql.optimizer.excludedRules":
-                builtin = (
-                    "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate"
-                )
-                rules = [r.strip() for r in v.split(",") if r.strip()]
-                if builtin not in rules:
-                    rules.append(builtin)
-                v = ",".join(rules)
-            builder = builder.config(k, v)
-    spark = builder.getOrCreate()
+        "spark.sql.codegen.cache.maxEntries": "2000",
+    }
+    for k, v in (extra_conf or {}).items():
+        conf[k] = merge_conf(k, v, conf.get(k))
+    archive = class_archive.launch(conf)
+    if archive is not None:
+        conf[_JAVA_OPTS] = merge_conf(_JAVA_OPTS, conf.get(_JAVA_OPTS, ""), archive.java_option)
+    builder = SparkSession.builder.appName(app_name).master(master).config(map=conf)
+    with archive.environment() if archive else contextlib.nullcontext():
+        spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark

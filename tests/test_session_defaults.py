@@ -30,3 +30,18 @@ def test_default_reads_this_machine_and_fits_in_it():
     heap = default_driver_memory()
     assert heap == default_driver_memory(phys)
     assert int(heap[:-1]) * GIB <= max(phys, GIB)
+
+
+def test_heaps_without_compressed_oops_skip_the_class_archive(monkeypatch):
+    """From 32 GiB the JVM turns compressed oops off and would refuse the
+    archive (dumped with them on) on every start, so no archive is used."""
+    from elective_waiting_times_pipeline_spark import class_archive
+
+    for var in (*class_archive._OPTION_ENV, *class_archive._CLASSPATH_ENV, "PYSPARK_SUBMIT_ARGS"):
+        monkeypatch.delenv(var, raising=False)
+    assert class_archive.heap_bytes("31g") == 31 * GIB
+    assert class_archive.heap_bytes("2048") == class_archive.heap_bytes("2g") == 2 * GIB
+    big = default_driver_memory(128 * GIB)
+    assert class_archive.plain_reason({"spark.driver.memory": big}) == "heap without compressed oops"
+    assert class_archive.plain_reason({"spark.driver.memory": "32g"}) == "heap without compressed oops"
+    assert class_archive.plain_reason({"spark.driver.memory": "31g"}) != "heap without compressed oops"
