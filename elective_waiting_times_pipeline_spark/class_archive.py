@@ -146,9 +146,16 @@ def archive_key(jdk: str, jars: str) -> str | None:
     return h.hexdigest()[:20]
 
 
+def java_options(conf: dict[str, str]) -> str:
+    """Every JVM option the caller chose for the driver: the launch conf's
+    `spark.driver.extraJavaOptions` plus the environment variables the
+    driver JVM also reads."""
+    return " ".join([conf.get(_JAVA_OPTS, "")] + [os.environ.get(v, "") for v in _OPTION_ENV])
+
+
 def plain_reason(conf: dict[str, str]) -> str | None:
     """Why this launch must stay without the archive, or None."""
-    opts = " ".join([conf.get(_JAVA_OPTS, "")] + [os.environ.get(v, "") for v in _OPTION_ENV])
+    opts = java_options(conf)
     if any(flag in opts for flag in _OWN_SHARING):
         return "java options choose sharing or pointer flags"
     if any(conf.get(k) for k in _CLASSPATH_CONFS):

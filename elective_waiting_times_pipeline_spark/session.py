@@ -6,15 +6,24 @@ sane shuffle partitioning, Arrow for the few Pandas-UDF paths, UTC
 session timezone so results are oracle-comparable).
 
 A fresh driver JVM starts from the host's class-data-sharing archive
-(`class_archive`; built once per host by the first session). Confs
+(`class_archive`; built once per host by the first session). A
+``local[...]`` driver JVM, which also runs every task, gets a JIT
+compiler pool of two threads (one C1, one C2) unless the caller's java
+options (conf, ``JAVA_TOOL_OPTIONS``, ``_JAVA_OPTIONS`` or
+``SPARK_SUBMIT_OPTS``) set ``-XX:CICompilerCount`` themselves. Confs
 whose value is a list (`LIST_CONFS`) merge with the caller's value
-instead of being replaced by it.
+instead of being replaced by it; in java options a caller's
+``-XX:`` flag replaces ours of the same name.
+
+`spark_conf` builds the launch conf without starting anything;
+`get_spark` adds the class archive and starts (or reuses) the session.
 """
 
 from __future__ import annotations
 
 import contextlib
 import os
+import re
 
 from pyspark.sql import SparkSession
 
@@ -29,6 +38,18 @@ _INFER_FILTERS_FROM_GENERATE = "org.apache.spark.sql.catalyst.optimizer.InferFil
 # unrelated rule must not re-enable it; a caller's java options (say
 # perfbench's -Djava.io.tmpdir) must survive the class-archive flag.
 LIST_CONFS = {"spark.sql.optimizer.excludedRules": ",", _JAVA_OPTS: " "}
+_XX_FLAG = re.compile(r"-XX:[+-]?([^=]+)(=.*)?")
+_COMPILER_POOL = "-XX:CICompilerCount=2"
+_LOCAL_MASTER = re.compile(r"local(\[.*\])?")
+
+
+def _flag_name(item: str) -> str:
+    """The identity of one list item: `-XX:Name` for `-XX:Name=value`,
+    `-XX:+Name` and `-XX:-Name` (HotSpot obeys only the last of several,
+    so a merge keeps the caller's and drops ours), the stripped item
+    otherwise."""
+    m = _XX_FLAG.fullmatch(item.strip())
+    return f"-XX:{m.group(1)}" if m else item.strip()
 
 
 def merge_conf(key: str, value: str, ours: str | None) -> str:
@@ -36,8 +57,8 @@ def merge_conf(key: str, value: str, ours: str | None) -> str:
     sep = LIST_CONFS.get(key)
     if sep is None or not ours:
         return value
-    have = {item.strip() for item in value.split(sep)}
-    missing = [item for item in ours.split(sep) if item.strip() and item.strip() not in have]
+    have = {_flag_name(item) for item in value.split(sep)}
+    missing = [item for item in ours.split(sep) if item.strip() and _flag_name(item) not in have]
     kept = [value.strip()] if value.strip() else []
     return sep.join(kept + missing)
 
@@ -52,25 +73,11 @@ def default_driver_memory(phys_bytes: int | None = None, jvms: int = 1) -> str:
     return f"{min(48, max(1, phys_bytes // (2 * jvms * 2**30)))}g"
 
 
-def get_spark(
-    app_name: str = "elective_waiting_times_pipeline_spark",
-    master: str | None = None,
-    shuffle_partitions: int | None = None,
-    extra_conf: dict[str, str] | None = None,
-) -> SparkSession:
-    """Build (or fetch) a SparkSession tuned for this engine.
-
-    Defaults are driven by env vars so the driver/bench harness can
-    steer them: ``SPARK_GRAFT_CPUS`` sets local parallelism and
-    ``SPARK_GRAFT_DRIVER_MEM`` the driver heap (default:
-    `default_driver_memory()`).
-    """
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 4))
-    if master is None:
-        master = f"local[{cpus}]"
-    if shuffle_partitions is None:
-        shuffle_partitions = cpus
-
+def spark_conf(master: str, shuffle_partitions: int,
+               extra_conf: dict[str, str] | None = None) -> dict[str, str]:
+    """The launch conf `get_spark` uses for `master`, before the class
+    archive: our defaults, the caller's `extra_conf` merged over them,
+    and the local driver's compiler pool."""
     conf = {
         # local mode = driver-only JVM; the default 1g heap OOMs on
         # wide plans and big shuffles long before the box is near full,
@@ -123,6 +130,41 @@ def get_spark(
     }
     for k, v in (extra_conf or {}).items():
         conf[k] = merge_conf(k, v, conf.get(k))
+    # JIT compiler pool: HotSpot sizes it from the core count (3 threads
+    # on 4 cores: 1 C1 + 2 C2) as if the cores were idle, but a local
+    # driver JVM also runs every task. Two threads, the tiered minimum
+    # (1 C1 + 1 C2), cut a fresh perfbench run's compile time
+    # (-XX:+CITime, local[4]) from 35-43 to 24-26 s: C2 time 29-36 ->
+    # 17-19 s and ~3,200 -> ~2,150 C2 methods, because compile tasks that
+    # go stale in the one C2 queue are dropped before they run; C1 time
+    # stays ~7 s. Median run_cpu_s: catalog_build_heavy 47.8 -> 36.9 s,
+    # rtt_dashboard 33.1 -> 26.6 s; rtt_dashboard's pass wall time
+    # 10.1 -> 10.4 s. A caller's own -XX:CICompilerCount wins.
+    callers = {_flag_name(item) for item in class_archive.java_options(conf).split()}
+    if _LOCAL_MASTER.fullmatch(master) and _flag_name(_COMPILER_POOL) not in callers:
+        conf[_JAVA_OPTS] = merge_conf(_JAVA_OPTS, conf.get(_JAVA_OPTS, ""), _COMPILER_POOL)
+    return conf
+
+
+def get_spark(
+    app_name: str = "elective_waiting_times_pipeline_spark",
+    master: str | None = None,
+    shuffle_partitions: int | None = None,
+    extra_conf: dict[str, str] | None = None,
+) -> SparkSession:
+    """Build (or fetch) a SparkSession tuned for this engine.
+
+    Defaults are driven by env vars so the driver/bench harness can
+    steer them: ``SPARK_GRAFT_CPUS`` sets local parallelism and
+    ``SPARK_GRAFT_DRIVER_MEM`` the driver heap (default:
+    `default_driver_memory()`).
+    """
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 4))
+    if master is None:
+        master = f"local[{cpus}]"
+    if shuffle_partitions is None:
+        shuffle_partitions = cpus
+    conf = spark_conf(master, shuffle_partitions, extra_conf)
     archive = class_archive.launch(conf)
     if archive is not None:
         conf[_JAVA_OPTS] = merge_conf(_JAVA_OPTS, conf.get(_JAVA_OPTS, ""), archive.java_option)

@@ -163,6 +163,12 @@ def test_merge_keeps_the_callers_list_items_first():
     assert merge_conf(JAVA_OPTS, tmp, flag) == f"{tmp} {flag}"
     assert merge_conf(JAVA_OPTS, "", flag) == flag
     assert merge_conf(JAVA_OPTS, f"{tmp} {flag}", flag) == f"{tmp} {flag}"
+    # -XX: flags match by name, whatever their value or sign: the caller's stays
+    assert (merge_conf(JAVA_OPTS, f"{tmp} -XX:CICompilerCount=3", "-XX:CICompilerCount=2")
+            == f"{tmp} -XX:CICompilerCount=3")
+    assert (merge_conf(JAVA_OPTS, f"{tmp} -XX:-UseFoo", f"-XX:+UseFoo {flag}")
+            == f"{tmp} -XX:-UseFoo {flag}")
+    assert merge_conf(JAVA_OPTS, "-XX:+UseFoo", "-XX:UseFoo=1") == "-XX:+UseFoo"
     rules = "spark.sql.optimizer.excludedRules"
     builtin = "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate"
     assert merge_conf(rules, "a.B", builtin) == f"a.B,{builtin}"
@@ -182,9 +188,16 @@ def test_killed_build_leaves_no_process_and_no_archive(plain_env):
     assert cache.tmp not in ps
 
 
+# The caller's own compiler count rides along: it must reach the JVM
+# instead of get_spark's local default, and not disturb the archive.
 _SESSION = """
 from elective_waiting_times_pipeline_spark import get_spark
-spark = get_spark(app_name="archive-test", extra_conf={"%s": "-Xlog:cds"})
+spark = get_spark(app_name="archive-test",
+                  extra_conf={"%s": "-Xlog:cds -XX:CICompilerCount=3"})
+jvm = spark._jvm
+bean = jvm.java.lang.management.ManagementFactory.getPlatformMXBean(
+    jvm.java.lang.Class.forName("com.sun.management.HotSpotDiagnosticMXBean"))
+print("CICompilerCount", bean.getVMOption("CICompilerCount").getValue(), flush=True)
 print("COUNT", spark.range(10).count(), flush=True)
 """ % JAVA_OPTS
 
@@ -207,6 +220,7 @@ def test_built_archive_is_mapped_and_a_stale_one_still_starts(tmp_path):
     out = _session(tmp_path)  # first session on the "host": builds, then uses
     (archive,) = glob.glob(str(tmp_path / "cache" / "*" / "cds" / "*.jsa"))
     assert f"Opened archive {archive}." in out
+    assert "CICompilerCount 3" in out
     # the dump's warnings went to the build log, not to this session
     assert "Signed JAR" in open(archive[: -len(".jsa")] + ".log").read()
     assert "Signed JAR" not in out
